@@ -175,8 +175,7 @@ object Bench {
           import org.apache.spark.sql.functions.col
           val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(64).cache()
           val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64).cache()
-          graft.ops.Dedup.minhashPairs(docs, "text", "doc_id",
-            persistIntermediate = false).count()
+          graft.ops.Dedup.minhashPairs(docs, "text", "doc_id").count()
           graft.ops.Dedup.simhashPairs(docs, "text", "doc_id").count()
           graft.ops.Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source")).count()
           graft.ops.Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id", "label", 0.3).count()
@@ -187,6 +186,7 @@ object Bench {
             System.err.println(s"[bench] warmup failed (timings may include " +
               s"one-time costs): ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
+        sweep()
     }
     // ---- Timed runs: min-of-2, adaptive third ----------------------
     // min over repeats = steady-state latency, robust to one-off

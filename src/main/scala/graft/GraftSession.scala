@@ -27,7 +27,7 @@ import org.apache.spark.sql.SparkSession
   *    parquet ROW GROUP, so a single-row-group file still scans as
   *    one task regardless; the probes×corpus scoring operators
   *    (s1/s2/s3/s7) additionally floor their corpus parallelism with
-  *    a conditional repartition (see `Similarity.widen`), which is
+  *    a conditional repartition (see `Par.widen`), which is
   *    where the single-task artifact actually bit (s7's sf1 scoring:
   *    47 s on one core of 32).
   */
@@ -56,18 +56,18 @@ object GraftSession {
     */
   val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
-  /** Session-level storage sweep for library callers. Operators that
-    * take `persistIntermediate = true` (tokenBudgetSelect, dsirWeights,
-    * decontaminateByEmbedding, sourceOverlap, distributionDrift,
-    * lmScoreBigram, the BPE word table, …) persist a SLIM intermediate
-    * so its consumers within the returned plan share one computation;
-    * the blocks stay referenced by the returned DataFrame's lineage, so
-    * the OP cannot safely unpersist them — a long-lived session calling
-    * these repeatedly should sweep between logical jobs once results
-    * are materialized. `clearCache()` alone is NOT enough: it releases
-    * cached Datasets but not `localCheckpoint()` RDD blocks (the g4 /
-    * s12 lineage checkpoints), which otherwise pin storage memory until
-    * GC finalizes them — the measured r06 bench bleed.
+  /** Session-level storage sweep for library callers — the ONE release
+    * point for operator intermediates. An operator whose intermediate
+    * feeds more than one consumer inside its returned plan always
+    * persists it (MEMORY_AND_DISK), so those consumers share one
+    * computation. The blocks stay referenced by the returned
+    * DataFrame's lineage, so the OP cannot safely unpersist them — a
+    * long-lived session calling these repeatedly should sweep between
+    * logical jobs once results are materialized. `clearCache()` alone
+    * is NOT enough: it releases cached Datasets but not
+    * `localCheckpoint()` RDD blocks (the g4 / s12 lineage checkpoints),
+    * which otherwise pin storage memory until GC finalizes them — the
+    * measured r06 bench bleed.
     */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

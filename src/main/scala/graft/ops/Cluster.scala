@@ -201,10 +201,7 @@ object Cluster {
                           n: Int): Column = {
     val routed =
       if (centroids.size >= RouteMinK &&
-          Native.enabled(df, "graft_cos_topc_routed") &&
-          // A/B + escape hatch (results identical either way): flat
-          // native scan despite k >= RouteMinK
-          !df.sparkSession.conf.get("graft.routed.disabled", "false").toBoolean) {
+          Native.enabled(df, "graft_cos_topc_routed")) {
         val (metaI, metaD) = routePlan(centroids)
         val g = metaI(0)
         val dim = centroids.head._2.length
@@ -354,8 +351,7 @@ object Cluster {
     */
   def semDedupPairs(embs: DataFrame, vecCol: String, idCol: String,
                     k: Int, threshold: Double, iters: Int = 1,
-                    blockProbes: Int = 2,
-                    persistIntermediate: Boolean = true): DataFrame = {
+                    blockProbes: Int = 2): DataFrame = {
     require(blockProbes >= 1 && blockProbes <= k,
       s"blockProbes must be in [1, k], got $blockProbes (k = $k)")
     val points = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
@@ -367,10 +363,7 @@ object Cluster {
     // scale ratio. Session-lifetime pin, the ngramJaccardPairs
     // contract: Verify/Bench sweep caches per query.
     val blockedPlan = probeBlocks(points, centroids, blockProbes)
-    val blocked =
-      if (persistIntermediate)
-        blockedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else blockedPlan
+    val blocked = blockedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.embeddingNearDupPairs(blocked, "v", "id", "cluster_id", threshold)
       .dropDuplicates("id1", "id2")
   }
@@ -509,15 +502,14 @@ object Cluster {
   def semDedupPairsAuto(embs: DataFrame, vecCol: String, idCol: String,
                         threshold: Double, targetBlock: Int = 512,
                         iters: Int = 1, blockProbes: Int = 2,
-                        kCap: Int = 4096,
-                        persistIntermediate: Boolean = true): DataFrame = {
+                        kCap: Int = 4096): DataFrame = {
     require(targetBlock >= 1, s"targetBlock must be >= 1, got $targetBlock")
     require(kCap >= 1, s"kCap must be >= 1, got $kCap")
     val n = embs.count()
     require(n > 0, "semDedupPairsAuto: corpus is empty")
     val k = math.min(math.ceil(n.toDouble / targetBlock), kCap.toDouble).toInt
     semDedupPairs(embs, vecCol, idCol, k, threshold, iters,
-      math.min(blockProbes, k), persistIntermediate)
+      math.min(blockProbes, k))
   }
 
   /** Per-cluster summary: size and 4dp mean cosine-to-centroid

@@ -311,8 +311,7 @@ object Curation {
     */
   def tokenBudgetSelect(df: DataFrame, idCol: String, scoreCol: String,
                         tokensCol: String, budgetTokens: Long,
-                        bucketWidth: Long = 4096L,
-                        persistIntermediate: Boolean = true): DataFrame = {
+                        bucketWidth: Long = 4096L): DataFrame = {
     require(budgetTokens > 0, s"budgetTokens must be positive, got $budgetTokens")
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
     // the slim (id, score, tokens) projection feeds THREE consumers
@@ -321,10 +320,7 @@ object Curation {
     // the text — re-executes per consumer
     val rowsPlan = df.select(col(idCol).as("id"), col(scoreCol).as("q"),
       col(tokensCol).cast("long").as("tok"))
-    val rows =
-      if (persistIntermediate)
-        rowsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rowsPlan
+    val rows = rowsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // level 1: distinct-score grid, cumulative tokens in rank order
     val grid = rows.groupBy("q").agg(sum("tok").as("vtok"))
       .withColumn("vrun", sum("vtok").over(Window.orderBy(col("q").desc)))
@@ -376,10 +372,8 @@ object Curation {
     */
   def contaminationPairs(docs: DataFrame, textCol: String, idCol: String,
                          splitCol: String, evalLabel: String, n: Int = 3,
-                         dfCap: Long = 10, minShared: Long = 2,
-                         persistIntermediate: Boolean = true): DataFrame = {
-    val exploded = explodedGramStream(docs, textCol, idCol, splitCol, n,
-      persistIntermediate)
+                         dfCap: Long = 10, minShared: Long = 2): DataFrame = {
+    val exploded = explodedGramStream(docs, textCol, idCol, splitCol, n)
     // grams are distinct within a doc, so count(*) = document frequency
     val rareGrams = exploded.groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
@@ -391,12 +385,11 @@ object Curation {
   /** The (id, split, gram-hash) stream shared by the decontamination
     * forms; persisted because it feeds several consumers (without the
     * persist the tokenize + gram-hash pass runs once per consumer —
-    * measured 2.9s -> 1s at sf0.1; same contract as d2/d4's
-    * persistIntermediate).
+    * measured 2.9s -> 1s at sf0.1; the session-lifetime pin every
+    * shared intermediate gets, released by [[graft.GraftSession.sweep]]).
     */
   private def explodedGramStream(docs: DataFrame, textCol: String,
-                                 idCol: String, splitCol: String, n: Int,
-                                 persistIntermediate: Boolean): DataFrame = {
+                                 idCol: String, splitCol: String, n: Int): DataFrame = {
     val toksed = docs.select(col(idCol).as("id"), col(splitCol).as("split"),
       text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
     val grams =
@@ -409,9 +402,7 @@ object Curation {
           .select(col("id"), col("split"), hashing.elementHashes(col("g")).as("grams"))
     val explodedPlan = grams.select(col("id"), col("split"),
       explode(col("grams")).as("gram"))
-    if (persistIntermediate)
-      explodedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else explodedPlan
+    explodedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   private def pairsFromRare(rare: DataFrame, evalLabel: String,
@@ -448,13 +439,11 @@ object Curation {
   def contaminationPairsBloom(docs: DataFrame, textCol: String, idCol: String,
                               splitCol: String, evalLabel: String, n: Int = 3,
                               dfCap: Long = 10, minShared: Long = 2,
-                              numBits: Int = 1 << 20, numHashes: Int = 5,
-                              persistIntermediate: Boolean = true): DataFrame = {
+                              numBits: Int = 1 << 20, numHashes: Int = 5): DataFrame = {
     if (!Native.enabled(docs, "graft_bloom_agg"))
       return contaminationPairs(docs, textCol, idCol, splitCol, evalLabel,
-        n, dfCap, minShared, persistIntermediate)
-    val exploded = explodedGramStream(docs, textCol, idCol, splitCol, n,
-      persistIntermediate)
+        n, dfCap, minShared)
+    val exploded = explodedGramStream(docs, textCol, idCol, splitCol, n)
     val evalGrams = exploded.filter(col("split") === evalLabel)
     val bloom = evalGrams.agg(call_function("graft_bloom_agg",
       col("gram"), lit(numBits), lit(numHashes)).as("graft_bloom"))
@@ -856,8 +845,7 @@ object Curation {
     */
   def dsirWeights(docs: DataFrame, textCol: String, idCol: String,
                   targetFilter: Column, buckets: Int = 8192,
-                  alpha: Double = 0.5,
-                  persistIntermediate: Boolean = true): DataFrame = {
+                  alpha: Double = 0.5): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val norm = Native.normOf(docs)
     val fold = Native.md5FoldOf(docs)
@@ -887,10 +875,7 @@ object Curation {
         pmod(fold(col("f")), lit(buckets.toLong)).as("b"))
       .groupBy("doc_id", "is_target", "b")
       .agg(count(lit(1)).cast("double").as("tf"))
-    val posts =
-      if (persistIntermediate)
-        postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else postsPlan
+    val posts = postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tgt = posts.filter(col("is_target")).groupBy("b").agg(sum("tf").as("tcnt"))
     val raw = posts.groupBy("b").agg(sum("tf").as("rcnt"))
     val stats = tgt.agg(sum("tcnt").as("t_total"))
@@ -978,8 +963,7 @@ object Curation {
   def nbQualityScore(docs: DataFrame, textCol: String, idCol: String,
                      targetFilter: Column, trainFilter: Column,
                      buckets: Int = 8192, alpha: Double = 0.5,
-                     threshold: Double = 0.0,
-                     persistIntermediate: Boolean = true): DataFrame = {
+                     threshold: Double = 0.0): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     require(alpha > 0.0, s"alpha must be positive, got $alpha")
     // posts feeds FOUR consumers (two class models, the prior counts,
@@ -988,10 +972,7 @@ object Curation {
     // treatment of the same shape)
     val postsPlan = nbPosts(docs, textCol, idCol, buckets,
       Seq("is_target" -> targetFilter, "is_train" -> trainFilter))
-    val posts =
-      if (persistIntermediate)
-        postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else postsPlan
+    val posts = postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tgt = posts.filter(col("is_train") && col("is_target"))
       .groupBy("b").agg(sum("tf").as("tcnt"))
     val rst = posts.filter(col("is_train") && !col("is_target"))
@@ -1048,10 +1029,9 @@ object Curation {
   def nbClassifierEval(docs: DataFrame, textCol: String, idCol: String,
                        targetFilter: Column, trainFilter: Column,
                        buckets: Int = 8192, alpha: Double = 0.5,
-                       threshold: Double = 0.0,
-                       persistIntermediate: Boolean = true): DataFrame = {
+                       threshold: Double = 0.0): DataFrame = {
     val scored = nbQualityScore(docs, textCol, idCol, targetFilter,
-      trainFilter, buckets, alpha, threshold, persistIntermediate)
+      trainFilter, buckets, alpha, threshold)
     val flags = docs.select(col(idCol).as("doc_id"),
       targetFilter.as("is_target"), trainFilter.as("is_train"))
     val fr4 = (c: Column) => graft.functions.num.fround(c, 4)
@@ -1102,11 +1082,10 @@ object Curation {
                 targetFilter: Column, trainFilter: Column,
                 thresholds: Seq[Double] =
                   Seq(-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 2.0),
-                buckets: Int = 8192, alpha: Double = 0.5,
-                persistIntermediate: Boolean = true): DataFrame = {
+                buckets: Int = 8192, alpha: Double = 0.5): DataFrame = {
     require(thresholds.nonEmpty, "nbPrCurve: thresholds must be non-empty")
     val scored = nbQualityScore(docs, textCol, idCol, targetFilter,
-      trainFilter, buckets, alpha, 0.0, persistIntermediate)
+      trainFilter, buckets, alpha, 0.0)
     val flags = docs.select(col(idCol).as("doc_id"),
       targetFilter.as("is_target"), trainFilter.as("is_train"))
     val fr4 = (c: Column) => graft.functions.num.fround(c, 4)
@@ -1170,11 +1149,10 @@ object Curation {
     */
   def nbRocAuc(docs: DataFrame, textCol: String, idCol: String,
                targetFilter: Column, trainFilter: Column,
-               buckets: Int = 8192, alpha: Double = 0.5,
-               persistIntermediate: Boolean = true): DataFrame = {
+               buckets: Int = 8192, alpha: Double = 0.5): DataFrame = {
     import graft.functions.num.fround
     val scored = nbQualityScore(docs, textCol, idCol, targetFilter,
-      trainFilter, buckets, alpha, 0.0, persistIntermediate)
+      trainFilter, buckets, alpha, 0.0)
     val flags = docs.select(col(idCol).as("doc_id"),
       targetFilter.as("is_target"), trainFilter.as("is_train"))
     val grp = scored.join(flags, Seq("doc_id"))
@@ -1379,8 +1357,8 @@ object Curation {
     * executor cache sized to the corpus, downstream stages scan a
     * pruned columnar file, the cleaned corpus survives the session
     * for reuse/restart). Default None keeps the single-session
-    * executor-cache persist (`persistIntermediate`) — right at test
-    * scale and for one-shot interactive runs. Row-parity of the two
+    * executor-cache persist — right at test scale and for one-shot
+    * interactive runs. Row-parity of the two
     * legs and the path-scan of the reread plan are CurationSpec-
     * asserted.
     */
@@ -1389,7 +1367,6 @@ object Curation {
                            quotaN: Int = 10, splitSalt: String = "graft",
                            fractions: Seq[(String, Double)] =
                              Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)),
-                           persistIntermediate: Boolean = true,
                            checkpointPath: Option[String] = None)
       : DataFrame = {
     val cleanedPlan = paragraphDedup(docs, textCol, idCol,
@@ -1404,9 +1381,7 @@ object Curation {
         cleanedPlan.write.mode("overwrite").parquet(path)
         docs.sparkSession.read.parquet(path)
       case None =>
-        if (persistIntermediate)
-          cleanedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else cleanedPlan
+        cleanedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     // exact dedup keyed on the CLEANED text's normalized fingerprint —
     // c3's canonical-min-id form (two slim corpus scans, one semi-join)
@@ -1457,15 +1432,11 @@ object Curation {
     * the same counts.)
     */
   def nbFitModel(train: DataFrame, textCol: String, idCol: String,
-                 targetFilter: Column, buckets: Int = 8192,
-                 persistIntermediate: Boolean = true): DataFrame = {
+                 targetFilter: Column, buckets: Int = 8192): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val postsPlan = nbPosts(train, textCol, idCol, buckets,
       Seq("is_target" -> targetFilter))
-    val posts =
-      if (persistIntermediate)
-        postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else postsPlan
+    val posts = postsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tgt = posts.filter(col("is_target")).groupBy("b").agg(sum("tf").as("tcnt"))
     val rst = posts.filter(!col("is_target")).groupBy("b").agg(sum("tf").as("rcnt"))
     val merged = tgt.join(rst, Seq("b"), "full")
@@ -1572,7 +1543,6 @@ object Curation {
                                evalFilter: Column, threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
                                seed: Long = 42L,
-                               persistIntermediate: Boolean = true,
                                verifyBroadcast: Option[Boolean] = None): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(threshold > 0.0 && threshold <= 1.0,
@@ -1594,10 +1564,7 @@ object Curation {
         col(vecCol).as("v"))
       .withColumn("nrm", sqrt(dotOf(col("v"), col("v"))))
       .withColumn("sig", sigOf(col("v")))
-    val prepared =
-      if (persistIntermediate)
-        preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else preparedPlan
+    val prepared = preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until bands).map { bn =>
       struct(lit(bn).as("b"),
         shiftrightunsigned(col("sig"), bn * bitsPerBand)

@@ -162,20 +162,17 @@ object Dedup {
     * threshold this is the long-standing 32; higher thresholds get
     * fewer bands and so avoid paying t=0.5-sized candidate volume.
     *
-    * `persistIntermediate` pins the doc→hashes and band tables
-    * (MEMORY_AND_DISK) for the SESSION lifetime — the result is lazy,
-    * so the op cannot know when its consumer is done with them.
-    * Callers running many ops in one long-lived session should
-    * `spark.catalog.clearCache()` between pipelines (as Verify/Bench
-    * do) or pass persistIntermediate = false.
+    * The doc→hashes and band tables are pinned (MEMORY_AND_DISK) for
+    * the session lifetime — the result is lazy, so the op cannot know
+    * when its consumer is done with them; [[graft.GraftSession.sweep]]
+    * releases them.
     */
   def minhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
                    jaccardThreshold: Double = 0.5,
-                   persistIntermediate: Boolean = true,
                    verifyBroadcast: Option[Boolean] = None): DataFrame = {
     val (hashed, candidates) = minhashStaged(docs, textCol, idCol, numPerm,
-      bands, shingleK, jaccardThreshold, persistIntermediate)
+      bands, shingleK, jaccardThreshold)
     // The verify joins bring the doc→hashes table to the candidate
     // pairs; strategy is size-gated via verifyHinted (AQE runtime
     // stats by default — broadcast only when it actually fits).
@@ -206,28 +203,26 @@ object Dedup {
     */
   def minhashCandidates(docs: DataFrame, textCol: String, idCol: String,
                         numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
-                        jaccardThreshold: Double = 0.5,
-                        persistIntermediate: Boolean = true): DataFrame =
+                        jaccardThreshold: Double = 0.5): DataFrame =
     minhashStaged(docs, textCol, idCol, numPerm, bands, shingleK,
-      jaccardThreshold, persistIntermediate)._2
+      jaccardThreshold)._2
 
   /** Shared staging for [[minhashPairs]]/[[minhashCandidates]]:
     * returns (doc→sorted-shingle-hashes, deduped candidate pairs).
     */
   private def minhashStaged(docs: DataFrame, textCol: String, idCol: String,
                             numPerm: Int, bands: Int, shingleK: Int,
-                            jaccardThreshold: Double,
-                            persistIntermediate: Boolean): (DataFrame, DataFrame) = {
+                            jaccardThreshold: Double): (DataFrame, DataFrame) = {
     val nBands = if (bands > 0) bands else defaultBands(numPerm, jaccardThreshold)
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
     val rowsPerBand = numPerm / nBands
-    val (hashed, bandedCached) = hashedBanded(docs, textCol, idCol, numPerm,
-      nBands, rowsPerBand, shingleK, persistIntermediate)
+    val (hashed, banded) = persisted(hashedBanded(docs, textCol, idCol,
+      numPerm, nBands, rowsPerBand, shingleK))
     // Lossless prefilter: J >= t requires min(|A|,|B|) >= t*max(|A|,|B|)
     // — prunes most low-similarity band collisions before the
     // dedup shuffle and the exact verify.
-    val candidates = bandedCached.as("a").join(bandedCached.as("b"),
+    val candidates = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.id") < col("b.id") &&
           least(col("a.n"), col("b.n")).cast("double") >=
           greatest(col("a.n"), col("b.n")).cast("double") * jaccardThreshold)
@@ -255,11 +250,15 @@ object Dedup {
     * seeds/layout — a cross-side pair then collides on band keys with
     * exactly the within-corpus probability, carrying the banding
     * recall guarantee across the index/delta boundary.
+    *
+    * Both plans come back UNPERSISTED: the hash table feeds banding and
+    * both verify sides, and both sides of the band self-join read the
+    * band table, so multi-consumer callers pin them with [[persisted]];
+    * [[minhashPrepare]] hands them to a caller that owns their storage.
     */
   private def hashedBanded(docs: DataFrame, textCol: String, idCol: String,
                            numPerm: Int, nBands: Int, rowsPerBand: Int,
-                           shingleK: Int,
-                           persistIntermediate: Boolean): (DataFrame, DataFrame) = {
+                           shingleK: Int): (DataFrame, DataFrame) = {
     // Staged: normalize → shingle → hash, each as its own column, so
     // the per-element lambdas see attributes (see wordNgramsOfTokens
     // scaladoc). One string-hash pass per shingle; signatures and the
@@ -273,18 +272,9 @@ object Dedup {
     // use the allocation-free two-pointer intersect kernel.
     // Par.widen: shingling + 128 minhashes per doc is the map-heavy
     // stage — a single-row-group input must not run it on one core.
-    val hashedPlan = Par.widen(docs)
+    val hashed = Par.widen(docs)
       .select(col(idCol).as("id"), Native.normOf(docs)(col(textCol)).as("norm"))
       .select(col("id"), array_sort(shingles).as("hs"))
-    // The doc→hashes table feeds three subplans (banding + both verify
-    // sides); persisting it trades executor memory/disk for running
-    // the normalize+shingle pass once — the standard call for a
-    // multi-use intermediate on a cluster. Callers that must not pin
-    // storage pass persistIntermediate = false.
-    val hashed =
-      if (persistIntermediate)
-        hashedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else hashedPlan
     // Signature per doc. Native path: one compiled O(shingles·perms)
     // pass, pure map stage, no shuffle. Fallback: explode +
     // hash-aggregate with numPerm codegen'd min(xxhash64(seed, h))
@@ -314,17 +304,20 @@ object Dedup {
         sigs.select(col("id"), col("n"),
           explode(array(bandKeyCols: _*)).as("band"))
       }
-    // Both sides of the band self-join reference `banded`; without a
-    // persist the signature computation runs once PER SIDE (the plan
-    // shows no ReusedExchange across the self-join inputs). The slim
-    // (id, n, band) table is bands rows per doc — tiny relative to the
-    // hash arrays.
-    val bandedCached =
-      if (persistIntermediate)
-        banded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else banded
-    (hashed, bandedCached)
+    (hashed, banded)
   }
+
+  /** Pins a [[hashedBanded]] pair, hash table first so the band table's
+    * cached plan reads the cached hashes. Persisting the doc→hashes
+    * table runs the normalize+shingle pass once for its three
+    * consumers; without the band-table persist the signature
+    * computation runs once PER self-join side (the plan shows no
+    * ReusedExchange across the inputs). The slim (id, n, band) table
+    * is bands rows per doc — tiny relative to the hash arrays.
+    */
+  private def persisted(hb: (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    (hb._1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      hb._2.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Incremental (delta-vs-index) NEAR-duplicate dedup — the
     * [[incrementalDedup]] shape for near-dups: today's crawl is
@@ -357,16 +350,15 @@ object Dedup {
                          textCol: String, idCol: String,
                          numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
                          jaccardThreshold: Double = 0.5,
-                         persistIntermediate: Boolean = true,
                          verifyBroadcast: Option[Boolean] = None): DataFrame = {
     val nBands = if (bands > 0) bands else defaultBands(numPerm, jaccardThreshold)
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
     val rowsPerBand = numPerm / nBands
-    val (hIdx, bIdx) = hashedBanded(index, textCol, idCol, numPerm, nBands,
-      rowsPerBand, shingleK, persistIntermediate)
+    val (hIdx, bIdx) = persisted(hashedBanded(index, textCol, idCol, numPerm,
+      nBands, rowsPerBand, shingleK))
     minhashIncrementalPrepared(hIdx, bIdx, delta, textCol, idCol, numPerm,
-      nBands, shingleK, jaccardThreshold, persistIntermediate, verifyBroadcast)
+      nBands, shingleK, jaccardThreshold, verifyBroadcast)
   }
 
   /** The (id, hs) hash table + (id, n, band) band table for
@@ -375,7 +367,8 @@ object Dedup {
     * (the streaming sink's accumulation contract,
     * [[graft.streaming.EventStream.neardupIncrementalSink]]). All
     * batches of one index MUST share (numPerm, bands, shingleK): band
-    * keys only collide within one banding layout.
+    * keys only collide within one banding layout. Nothing is persisted:
+    * the caller owns both tables' storage.
     */
   def minhashPrepare(docs: DataFrame, textCol: String, idCol: String,
                      numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
@@ -384,7 +377,7 @@ object Dedup {
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
     hashedBanded(docs, textCol, idCol, numPerm, nBands, numPerm / nBands,
-      shingleK, persistIntermediate = false)
+      shingleK)
   }
 
   /** [[minhashIncremental]] with the index side given as PREPARED
@@ -401,14 +394,13 @@ object Dedup {
                                  numPerm: Int = 128, bands: Int = 0,
                                  shingleK: Int = 5,
                                  jaccardThreshold: Double = 0.5,
-                                 persistIntermediate: Boolean = true,
                                  verifyBroadcast: Option[Boolean] = None): DataFrame = {
     val nBands = if (bands > 0) bands else defaultBands(numPerm, jaccardThreshold)
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
     val rowsPerBand = numPerm / nBands
-    val (hDel, bDel) = hashedBanded(delta, textCol, idCol, numPerm, nBands,
-      rowsPerBand, shingleK, persistIntermediate)
+    val (hDel, bDel) = persisted(hashedBanded(delta, textCol, idCol, numPerm,
+      nBands, rowsPerBand, shingleK))
     val sizeOk = least(col("a.n"), col("b.n")).cast("double") >=
       greatest(col("a.n"), col("b.n")).cast("double") * jaccardThreshold
     // p_idx rides the candidate so one verify pass serves both legs;
@@ -505,18 +497,14 @@ object Dedup {
   }
 
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
-                   maxHamming: Int = 3,
-                   persistIntermediate: Boolean = true): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 1 && maxHamming <= 4,
       s"maxHamming must be in [1,4] for the 6-block banding scheme, got $maxHamming")
     // both self-join sides reference sigs: persist the (id, simhash)
     // table (16 bytes/doc) or the normalize+tokenize+hash pipeline
     // runs once per side
     val sigsPlan = simhashSigs(docs, textCol, idCol)
-    val sigs =
-      if (persistIntermediate)
-        sigsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sigsPlan
+    val sigs = sigsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val blockSizes = Seq(11, 11, 11, 11, 10, 10)
     val blockOffsets = blockSizes.scanLeft(0)(_ + _).init
     def blockOf(i: Int): Column =
@@ -571,7 +559,6 @@ object Dedup {
   def ngramJaccardPairs(docs0: DataFrame, textCol: String, idCol: String,
                         blockCol: Column, n: Int = 3,
                         threshold: Double = 0.4,
-                        persistIntermediate: Boolean = true,
                         verifyBroadcast: Option[Boolean] = None,
                         prefixFilter: Boolean = true): DataFrame = {
     val docs = Par.widen(docs0)
@@ -595,11 +582,8 @@ object Dedup {
         .select(col("id"), col("block"), text.wordNgramsOfTokens(col("toks"), n).as("g"))
         .select(col("id"), col("block"), array_sort(hashing.elementHashes(col("g"))).as("grams"))
     // prepared feeds three subplans (candidate join sides + the verify
-    // broadcast) — persist unless the caller must not pin storage.
-    val grams =
-      if (persistIntermediate)
-        prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else prepared
+    // broadcast) — persist it.
+    val grams = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Candidates carry the lossless size prefilter in the join
     // condition — J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs whose
     // gram counts differ by more than 1/threshold can never pass. The
@@ -628,10 +612,7 @@ object Dedup {
           .select(col("id"), col("block"), col("n"), col("g"))
         // both self-join sides read the ranked prefix — persist it
         // (session-lifetime pin, same contract as `grams` above)
-        val prefix =
-          if (persistIntermediate)
-            prefixPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else prefixPlan
+        val prefix = prefixPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         prefix.as("a").join(prefix.as("b"),
             col("a.block") === col("b.block") && col("a.g") === col("b.g") &&
               col("a.id") < col("b.id") && sizeOk)
@@ -706,7 +687,6 @@ object Dedup {
   def containmentPairs(docs0: DataFrame, textCol: String, idCol: String,
                        blockCol: Column, n: Int = 3,
                        threshold: Double = 0.8,
-                       persistIntermediate: Boolean = true,
                        verifyBroadcast: Option[Boolean] = None,
                        prefixFilter: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -723,10 +703,7 @@ object Dedup {
           text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
         .select(col("id"), col("block"), text.wordNgramsOfTokens(col("toks"), n).as("g"))
         .select(col("id"), col("block"), array_sort(hashing.elementHashes(col("g"))).as("grams"))
-    val grams =
-      if (persistIntermediate)
-        prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else prepared
+    val grams = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // gram-less docs (shorter than n tokens) have no containment
     // evidence either way — candidates need both sides non-empty
     val candidates =
@@ -839,17 +816,14 @@ object Dedup {
     * [[embeddingNearDupPairsLshAuto]] names the default path
     * explicitly.
     *
-    * `persistIntermediate` pins the prepared (id, v, nrm, sig) table
-    * for the SESSION lifetime (the lazy result can't know when its
-    * consumer is done) — long-lived sessions should
-    * `spark.catalog.clearCache()` between pipelines or pass false,
+    * The prepared (id, v, nrm, sig) table is pinned for the SESSION
+    * lifetime (the lazy result can't know when its consumer is done),
     * same contract as [[minhashPairs]].
     */
   def embeddingNearDupPairsLsh(embs0: DataFrame, vecCol: String, idCol: String,
                                threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
                                seed: Long = 42L,
-                               persistIntermediate: Boolean = true,
                                verifyBroadcast: Option[Boolean] = None): DataFrame = {
     val embs = Par.widen(embs0)
     // bands is validated FIRST: the modulo below would otherwise throw
@@ -873,10 +847,7 @@ object Dedup {
         sqrt(dotOf(col(vecCol), col(vecCol))).as("nrm"))
       .withColumn("sig", sigOf(col("v")))
     // feeds both band-join sides and the two verify sides
-    val prepared =
-      if (persistIntermediate)
-        preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else preparedPlan
+    val prepared = preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until bands).map { bn =>
       struct(lit(bn).as("b"),
         shiftrightunsigned(col("sig"), bn * bitsPerBand)
@@ -907,11 +878,10 @@ object Dedup {
   def embeddingNearDupPairsLshAuto(embs: DataFrame, vecCol: String, idCol: String,
                                    threshold: Double, dim: Int,
                                    bands: Int = 6, seed: Long = 42L,
-                                   persistIntermediate: Boolean = true,
                                    verifyBroadcast: Option[Boolean] = None): DataFrame =
     embeddingNearDupPairsLsh(embs, vecCol, idCol, threshold, dim,
       numPlanes = 0, bands = bands, seed = seed,
-      persistIntermediate = persistIntermediate, verifyBroadcast = verifyBroadcast)
+      verifyBroadcast = verifyBroadcast)
 
   /** SAMPLED BANDING-RECALL gate for EMBEDDING LSH (d23) —
     * [[bandingRecall]]'s role for the d8/d9 hyperplane family:
@@ -960,8 +930,7 @@ object Dedup {
                              threshold: Double, dim: Int,
                              numPlanes: Int = 24, bands: Int = 6,
                              seed: Long = 42L, salt: String = "graft",
-                             sampleHex: String = "2000",
-                             persistIntermediate: Boolean = true): DataFrame = {
+                             sampleHex: String = "2000"): DataFrame = {
     require(sampleHex.matches("(?:[0-9a-f]{4}|g[0-9a-f]{3})"),
       s"sampleHex must be 4 lowercase hex chars (or gNNN for keep-all), got '$sampleHex'")
     require(bands >= 1, s"bands must be >= 1, got $bands")
@@ -983,10 +952,7 @@ object Dedup {
       .select(col(idCol).as("id"), col(vecCol).as("v"))
       .select(col("id"), col("v"),
         sqrt(dotOf(col("v"), col("v"))).as("nrm"), sigOf(col("v")).as("sig"))
-    val sampled =
-      if (persistIntermediate)
-        sampledPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sampledPlan
+    val sampled = sampledPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until bands).map { bn =>
       struct(lit(bn).as("b"),
         shiftrightunsigned(col("sig"), bn * bitsPerBand)
@@ -996,9 +962,7 @@ object Dedup {
     // shape); pairs persist because the count and the recall
     // semi-join both consume them (the d22 lesson)
     def persistPairs(df: DataFrame): DataFrame =
-      if (persistIntermediate)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = sampled.select(col("id"), explode(array(bandCols: _*)).as("band"))
     val candidates = persistPairs(banded.as("a").join(banded.as("c"),
         col("a.band") === col("c.band") && col("a.id") < col("c.id"))
@@ -1132,10 +1096,9 @@ object Dedup {
     * per-doc aggregate reuses that exchange. Nothing all-pairs.
     */
   def substringDedupStats(docs: DataFrame, textCol: String, idCol: String,
-                          k: Int = 8, w: Int = 4, gapChars: Int = -1,
-                          persistIntermediate: Boolean = true): DataFrame = {
+                          k: Int = 8, w: Int = 4, gapChars: Int = -1): DataFrame = {
     val (flagged, spans) =
-      dupAnchorTables(docs, textCol, idCol, k, w, gapChars, persistIntermediate)
+      dupAnchorTables(docs, textCol, idCol, k, w, gapChars)
     val spanAgg = spans
       .groupBy("doc_id")
       .agg(sum(col("na")).as("n_dup_anchors"),
@@ -1156,8 +1119,7 @@ object Dedup {
     * method and scale shape).
     */
   private def dupAnchorTables(docs: DataFrame, textCol: String, idCol: String,
-                              k: Int, w: Int, gapChars: Int,
-                              persistIntermediate: Boolean)
+                              k: Int, w: Int, gapChars: Int)
       : (DataFrame, DataFrame) = {
     require(k >= 1 && w >= 1, s"k and w must be >= 1, got k=$k w=$w")
     val gap = if (gapChars > 0) gapChars else w + k - 1
@@ -1196,10 +1158,7 @@ object Dedup {
       .select(col("doc_id"), col("pos"),
         (col("first.doc_id") =!= col("doc_id") ||
           col("first.pos") =!= col("pos")).as("dup"))
-    val flagged =
-      if (persistIntermediate)
-        flagged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else flagged0
+    val flagged = flagged0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     val islands = flagged.where(col("dup"))
@@ -1232,10 +1191,9 @@ object Dedup {
     * machinery is shared with d19 via the span tables.
     */
   def substringStrip(docs: DataFrame, textCol: String, idCol: String,
-                     k: Int = 8, w: Int = 4, gapChars: Int = -1,
-                     persistIntermediate: Boolean = true): DataFrame = {
+                     k: Int = 8, w: Int = 4, gapChars: Int = -1): DataFrame = {
     val (_, spans) =
-      dupAnchorTables(docs, textCol, idCol, k, w, gapChars, persistIntermediate)
+      dupAnchorTables(docs, textCol, idCol, k, w, gapChars)
     val spanList = spans.groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("s"), col("e")))).as("sp"),
         sum(col("e") - col("s") + lit(1)).as("removed"))
@@ -1332,8 +1290,7 @@ object Dedup {
   def bandingRecall(docs: DataFrame, textCol: String, idCol: String,
                     numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
                     jaccardThreshold: Double = 0.5,
-                    salt: String = "graft", sampleHex: String = "4000",
-                    persistIntermediate: Boolean = true): DataFrame = {
+                    salt: String = "graft", sampleHex: String = "4000"): DataFrame = {
     require(sampleHex.matches("(?:[0-9a-f]{4}|g[0-9a-f]{3})"),
       s"sampleHex must be 4 lowercase hex chars (or gNNN for keep-all), got '$sampleHex'")
     // range check FIRST: numPerm = 0 would reach defaultBands and die
@@ -1370,10 +1327,7 @@ object Dedup {
       // an n_candidates the production bander would never produce.
       // Recall is unaffected: an empty set can only pair at jaccard 0
       .where(size(col("h")) > 0)
-    val sampled =
-      if (persistIntermediate)
-        sampledPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sampledPlan
+    val sampled = sampledPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // portable minhash signature (see scaladoc); P sentinel for empty
     val slots = (0 until numPerm).map { i =>
       when(size(col("h")) === 0, lit(BrP)).otherwise(
@@ -1396,19 +1350,14 @@ object Dedup {
     val bandedPlan = sig.select(col("id"), col("n"),
       explode(array(bandCols: _*)).as("band"))
       .select(col("id"), col("n"), col("band.b").as("b"), col("band.v").as("bk"))
-    val banded =
-      if (persistIntermediate)
-        bandedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else bandedPlan
+    val banded = bandedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // candidates and truth are both consumed TWICE (their own count +
     // the recall semi-join) — persist the slim id-pair tables so the
     // band self-join and the brute-force verify each run ONCE, not
     // once per consumer (measured 2× the whole query at the sf1
     // sample size)
     def persistPairs(df: DataFrame): DataFrame =
-      if (persistIntermediate)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candidates = persistPairs(banded.as("a").join(banded.as("c"),
         col("a.b") === col("c.b") && col("a.bk") === col("c.bk") &&
           col("a.id") < col("c.id") &&

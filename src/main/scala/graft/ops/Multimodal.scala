@@ -302,18 +302,14 @@ object Multimodal {
     */
   def payloadNearDupPairs(df: DataFrame, payloadCol: String, idCol: String,
                           threshold: Double = 0.5, window: Int = 8,
-                          divisor: Int = 16, maxDf: Int = 20,
-                          persistIntermediate: Boolean = true): DataFrame = {
+                          divisor: Int = 16, maxDf: Int = 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val chunks0 = cdcChunks(Par.widen(df), payloadCol, idCol, window, divisor)
     // the chunk table feeds four subplans (sets, the index, both join
     // legs) — without the persist the byte-level chunking re-runs per
     // consumer (sweep via GraftSession.sweep in long-lived sessions)
-    val chunks =
-      if (persistIntermediate)
-        chunks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else chunks0
+    val chunks = chunks0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sets = chunks.groupBy("doc_id")
       .agg(sort_array(collect_list(col("h"))).as("hs"),
         count(lit(1)).as("n"))

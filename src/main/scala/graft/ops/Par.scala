@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Parallelism floor for map-heavy pipeline inputs. */
@@ -60,8 +60,14 @@ object Par {
     // widen. Pushing below a Project/Filter/Generate is value-safe
     // (same multiset in, row-wise ops out); Deduplicate / limits /
     // unions keep the repartition ABOVE them (a subset-picking or
-    // row-limiting operator must not see a reshuffled input).
+    // row-limiting operator must not see a reshuffled input). So does
+    // any node holding a nondeterministic expression (rand,
+    // monotonically_increasing_id, a nondeterministic generator): those
+    // read the partition index, so below a reshuffle they would produce
+    // different values than the caller's plan does.
     def insert(p: LogicalPlan): LogicalPlan = p match {
+      case _ if p.expressions.exists(!_.deterministic) =>
+        Repartition(want, shuffle = true, p)
       case pj: Project => pj.copy(child = insert(pj.child))
       case f: Filter => f.copy(child = insert(f.child))
       case s: SubqueryAlias => s.copy(child = insert(s.child))
@@ -70,8 +76,7 @@ object Par {
     }
     if (!narrowChain(df.queryExecution.analyzed)) df
     else if (df.queryExecution.toRdd.getNumPartitions < want)
-      org.apache.spark.sql.graftbridge.PlanBridge.ofRows(
-        df.sparkSession, insert(df.queryExecution.analyzed))
+      GraftSqlBridge.ofRows(df.sparkSession, insert(df.queryExecution.analyzed))
     else df
   }
 }

@@ -15,13 +15,6 @@ import graft.functions.vectors
   */
 object Similarity {
 
-  private def dotOf(df: DataFrame) = Native.dotOf(df)
-
-  /** See [[Par.widen]] — the probes×corpus scoring loops are the
-    * operators where the single-split artifact bit hardest.
-    */
-  private def widen(df: DataFrame): DataFrame = Par.widen(df)
-
   /** Top-k rows per query from a scored candidate set, ranked by
     * (cosine desc, neighbor_id asc).
     *
@@ -56,8 +49,8 @@ object Similarity {
     */
   def bruteForceTopK(corpus0: DataFrame, probes: DataFrame,
                      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val corpus = widen(corpus0)
-    val dot = dotOf(corpus)
+    val corpus = Par.widen(corpus0)
+    val dot = Native.dotOf(corpus)
     // Norms computed once per probe / corpus row, not once per pair.
     val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       sqrt(dot(col(vecCol), col(vecCol))).as("qn"))
@@ -83,8 +76,8 @@ object Similarity {
     */
   def rangeSearch(corpus0: DataFrame, probes: DataFrame, vecCol: String,
                   idCol: String, minCosine: Double): DataFrame = {
-    val corpus = widen(corpus0)
-    val dot = dotOf(corpus)
+    val corpus = Par.widen(corpus0)
+    val dot = Native.dotOf(corpus)
     val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       sqrt(dot(col(vecCol), col(vecCol))).as("qn"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -122,8 +115,8 @@ object Similarity {
   def ivfTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
               idCol: String, k: Int, numCentroids: Int = 16,
               nProbe: Int = 4, kmeansIters: Int = 0): DataFrame = {
-    val corpus = widen(corpus0)
-    val dot = dotOf(corpus)
+    val corpus = Par.widen(corpus0)
+    val dot = Native.dotOf(corpus)
     // tiny deterministic centroid table → driver (numCentroids rows)
     var cents: Array[Array[Float]] = corpus
       .orderBy(sampleOrder(col(idCol)), col(idCol)).limit(numCentroids)
@@ -240,7 +233,7 @@ object Similarity {
               numPlanes: Int = 0, bands: Int = 4,
               probeRadius: Int = 1): DataFrame = {
     require(probeRadius >= 0 && probeRadius <= 1, "probeRadius must be 0 or 1")
-    val corpus = widen(corpus0)
+    val corpus = Par.widen(corpus0)
     val nPlanes =
       if (numPlanes > 0) numPlanes
       else bands * autoBandBits(corpus.count(), bands)
@@ -248,7 +241,7 @@ object Similarity {
       s"numPlanes ($nPlanes) must be a multiple of bands ($bands) and <= 63")
     val planes = hyperplanes(nPlanes, dim)
     val bitsPerBand = nPlanes / bands
-    val dot = dotOf(corpus)
+    val dot = Native.dotOf(corpus)
     val sigOf: Column => Column =
       if (Native.enabled(corpus, "graft_hyperplane_sig"))
         v => call_function("graft_hyperplane_sig",
@@ -310,11 +303,10 @@ object Similarity {
     */
   def knnGraph(corpus0: DataFrame, vecCol: String, idCol: String, k: Int,
                dim: Int, numPlanes: Int = 0, bands: Int = 6,
-               seed: Long = 42L,
-               persistIntermediate: Boolean = true): DataFrame = {
+               seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(bands >= 1, s"bands must be >= 1, got $bands")
-    val corpus = widen(corpus0)
+    val corpus = Par.widen(corpus0)
     val nPlanes =
       if (numPlanes > 0) numPlanes
       else bands * autoBandBits(corpus.count(), bands)
@@ -322,7 +314,7 @@ object Similarity {
       s"numPlanes ($nPlanes) must be a multiple of bands ($bands) and <= 63")
     val planes = hyperplanes(nPlanes, dim, seed)
     val bitsPerBand = nPlanes / bands
-    val dot = dotOf(corpus)
+    val dot = Native.dotOf(corpus)
     val sigOf: Column => Column =
       if (Native.enabled(corpus, "graft_hyperplane_sig"))
         v => call_function("graft_hyperplane_sig",
@@ -332,10 +324,7 @@ object Similarity {
         sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
       .withColumn("sig", sigOf(col("v")))
     // feeds the band join once and the verify join twice
-    val prepared =
-      if (persistIntermediate)
-        preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else preparedPlan
+    val prepared = preparedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until bands).map { bn =>
       struct(lit(bn).as("b"),
         shiftrightunsigned(col("sig"), bn * bitsPerBand)
@@ -532,8 +521,8 @@ object Similarity {
                           vecCol: String, idCol: String, k: Int,
                           candidates0: DataFrame): DataFrame = {
     val cand = candidates0.select(col("query_id"), col("neighbor_id"))
-    val corpus = widen(corpus0)
-    val dot = dotOf(corpus)
+    val corpus = Par.widen(corpus0)
+    val dot = Native.dotOf(corpus)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       sqrt(dot(col(vecCol), col(vecCol))).as("cn"))
     val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
@@ -549,7 +538,7 @@ object Similarity {
   def pqTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
              idCol: String, k: Int, subspaces: Int = 8,
              codebookSize: Int = 64, lloydIters: Int = 1): DataFrame = {
-    val parts = pqParts(widen(corpus0), probes, vecCol, idCol,
+    val parts = pqParts(Par.widen(corpus0), probes, vecCol, idCol,
       subspaces, codebookSize, lloydIters)
     val scored = parts.encoded.crossJoin(broadcast(parts.pt))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -810,8 +799,8 @@ object Similarity {
     require(numCentroids >= 1, s"numCentroids must be >= 1, got $numCentroids")
     require(nProbe >= 1 && nProbe <= numCentroids,
       s"nProbe must be in [1, numCentroids], got $nProbe (numCentroids = $numCentroids)")
-    val corpus = widen(corpus0)
-    val dot = dotOf(corpus)
+    val corpus = Par.widen(corpus0)
+    val dot = Native.dotOf(corpus)
     // coarse quantizer: the s3 deterministic hash-order sample —
     // tiny driver-side table (numCentroids rows), oracle-replicable
     val cents: Array[Array[Float]] = corpus
@@ -899,7 +888,7 @@ object Similarity {
                      numCentroids: Int, kmeansIters: Int = 1): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val points = widen(corpus).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val points = Par.widen(corpus).select(col(idCol).as("id"), col(vecCol).as("v"))
     val cents = Cluster.fit(points, numCentroids, kmeansIters)
     require(cents.nonEmpty, "ivfIndexTables: corpus is empty — nothing to fit")
     val assigned = Cluster.assign(points, "v", cents)
@@ -961,7 +950,7 @@ object Similarity {
         s"train_cos_q05 values (${q05s.sorted.take(4).mkString(", ")}…) — " +
         "index-level state must be uniform across centroid rows")
     val q05 = q05s.head
-    val points = widen(delta).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val points = Par.widen(delta).select(col(idCol).as("id"), col(vecCol).as("v"))
     Cluster.assign(points, "v", cents)
       .select(col("id"), col("cluster_id"), col("cos"),
         (graft.functions.num.fround(col("cos"), 4) < lit(q05)).as("stale"))

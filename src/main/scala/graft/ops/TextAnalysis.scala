@@ -192,8 +192,7 @@ object TextAnalysis {
     * (`cp·N·N / (M·ca·cb)`), then the t18 6dp-floor-rounded ln.
     */
   def pmiPairs(docs0: DataFrame, textCol: String, window: Int = 3,
-               minCount: Long = 5L, topN: Int = 50,
-               persistIntermediate: Boolean = true): DataFrame = {
+               minCount: Long = 5L, topN: Int = 50): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(topN >= 1, s"topN must be >= 1, got $topN")
     val docs = Par.widen(docs0)
@@ -202,10 +201,7 @@ object TextAnalysis {
     // consumer (the Curation.seqPack precedent)
     val toksPlan = docs.select(
       text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-    val toksDf =
-      if (persistIntermediate)
-        toksPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else toksPlan
+    val toksDf = toksPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nTok = size(col("toks"))
     val pairList = flatten(transform(
       sequence(lit(1), nTok - 1),
@@ -261,8 +257,7 @@ object TextAnalysis {
     * n_a = |G_A|, n_shared, containment 4dp) for every A ≠ B.
     */
   def sourceOverlap(docs0: DataFrame, textCol: String, groupCol: String,
-                    n: Int = 3,
-                    persistIntermediate: Boolean = true): DataFrame = {
+                    n: Int = 3): DataFrame = {
     val docs = Par.widen(docs0)
     val prepared =
       if (Native.enabled(docs, "graft_ngram_hashes"))
@@ -281,10 +276,7 @@ object TextAnalysis {
     // dedupe within group) — the d2-style staging persist
     val gsetPlan = prepared
       .select(col("grp"), explode(col("grams")).as("g")).distinct()
-    val gset =
-      if (persistIntermediate)
-        gsetPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else gsetPlan
+    val gset = gsetPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = gset.groupBy("grp").agg(count(lit(1)).as("n_a"))
     val shared = gset.as("a")
       .join(gset.as("b"), col("a.g") === col("b.g") && col("a.grp") =!= col("b.grp"))
@@ -326,8 +318,7 @@ object TextAnalysis {
     * and js_bits (4dp; JS ≤ ln 2 nats = 1 bit).
     */
   def distributionDrift(docs: DataFrame, textCol: String, sliceFilter: Column,
-                        buckets: Int = 4096, alpha: Double = 0.5,
-                        persistIntermediate: Boolean = true): DataFrame = {
+                        buckets: Int = 4096, alpha: Double = 0.5): DataFrame = {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val hb = docs
       .select(sliceFilter.as("is_a"),
@@ -340,10 +331,7 @@ object TextAnalysis {
     val countsPlan = hb.groupBy("b").agg(
       sum(when(col("is_a"), 1L).otherwise(0L)).as("a_cnt"),
       sum(when(col("is_a"), 0L).otherwise(1L)).as("r_cnt"))
-    val counts =
-      if (persistIntermediate)
-        countsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else countsPlan
+    val counts = countsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     jsDivergence(counts, docs.sparkSession, buckets, alpha,
       "slice_tokens", "rest_tokens")
   }
@@ -758,12 +746,9 @@ object TextAnalysis {
   def lmScoreBigram(train: DataFrame, docs: DataFrame, textCol: String,
                     idCol: String, alpha: Double = 0.5, lam: Double = 0.7,
                     oneMinusLam: Double = 0.3,
-                    broadcastModel: Boolean = true,
-                    persistIntermediate: Boolean = true): DataFrame = {
+                    broadcastModel: Boolean = true): DataFrame = {
     def staged(df: DataFrame): DataFrame =
-      if (persistIntermediate)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val norm = Native.normOf(docs)
     // Par.widen on each tokenize leg: the normalize + split + explode
     // pass is the operator's map-heavy stage, and a single-row-group
@@ -998,8 +983,7 @@ object TextAnalysis {
     * ROUNDED score with term-ASC tie-break — engine-portable.
     */
   def tfidfTopTerms(docs: DataFrame, textCol: String, idCol: String,
-                    k: Int = 3,
-                    persistIntermediate: Boolean = true): DataFrame = {
+                    k: Int = 3): DataFrame = {
     val norm = Native.normOf(docs)
     // postings feeds TWO consumers (the df rollup + the scoring join):
     // unpersisted, the tokenize + explode + per-doc agg pass — the
@@ -1007,16 +991,12 @@ object TextAnalysis {
     // at sf1: two ~2 s jobs for one logical pass). Par.widen keeps the
     // map-heavy stage off a single scan split (the s7 artifact). The
     // persisted table is the SLIM (doc, term, tf) postings — the
-    // d2-style staging persist; callers that must not pin storage pass
-    // persistIntermediate = false.
+    // d2-style staging persist.
     val postingsPlan = Par.widen(docs)
       .select(col(idCol).as("doc_id"),
         explode(text.tokens(norm(col(textCol)))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf"))
-    val postings =
-      if (persistIntermediate)
-        postingsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else postingsPlan
+    val postings = postingsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dfs = postings.groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
     val stats = docs.agg(count(lit(1)).cast("double").as("n_docs"))
@@ -1076,17 +1056,14 @@ object TextAnalysis {
     * corpus scan (token explode -> word-frequency shuffle), sequences
     * in the double-separator string form.
     */
-  private def bpeWordTable(docs: DataFrame, textCol: String,
-                           persistIntermediate: Boolean): DataFrame = {
+  private def bpeWordTable(docs: DataFrame, textCol: String): DataFrame = {
     val plan = Par.widen(docs)
       .select(explode(text.tokens(graft.ops.Native.normOf(docs)(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
         concat(lit(BpeSep2), array_join(split(col("w"), ""), BpeSep2),
           lit(BpeSep2)).as("seq"))
-    if (persistIntermediate)
-      plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else plan
+    plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** One learned merge (a,b) as the separator-string `replace` both
@@ -1158,13 +1135,12 @@ object TextAnalysis {
     * Output: (step 1.., left, right, pair_count) — the merge table,
     * possibly shorter than `merges` if the vocabulary runs dry.
     */
-  def bpeTrain(docs: DataFrame, textCol: String, merges: Int,
-               persistIntermediate: Boolean = true): DataFrame = {
+  def bpeTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
     require(merges >= 1 && merges <= 64,
       s"merges must be in [1, 64], got $merges")
     val spark = docs.sparkSession
     import spark.implicits._
-    bpeTrainOnWords(bpeWordTable(docs, textCol, persistIntermediate), merges)
+    bpeTrainOnWords(bpeWordTable(docs, textCol), merges)
       .toDF("step", "left", "right", "pair_count")
   }
 
@@ -1185,9 +1161,8 @@ object TextAnalysis {
     * is a partial agg on a bounded key space. The corpus is never
     * re-touched.
     */
-  def bpeSegment(docs: DataFrame, textCol: String, merges: Int,
-                 persistIntermediate: Boolean = true): DataFrame = {
-    val words = bpeWordTable(docs, textCol, persistIntermediate)
+  def bpeSegment(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
+    val words = bpeWordTable(docs, textCol)
     val table = bpeTrainOnWords(words, merges)
     val segmented = table.foldLeft(col("seq")) { case (s, (_, l, r, _)) =>
       bpeMergeOf(l, r)(s)
@@ -1219,8 +1194,7 @@ object TextAnalysis {
     * table is bounded (≤ `merges` + 1 ≤ 65 rows) — a broadcast-sized
     * artifact at any corpus scale.
     */
-  def bpeFitModel(train: DataFrame, textCol: String, merges: Int,
-                  persistIntermediate: Boolean = true): DataFrame = {
+  def bpeFitModel(train: DataFrame, textCol: String, merges: Int): DataFrame = {
     // the same bound bpeTrain enforces — without it merges > 64 breaks
     // the documented <= 65-row bounded-model contract and merges = 0
     // silently yields a no-op model the apply side accepts
@@ -1229,7 +1203,7 @@ object TextAnalysis {
     val spark = train.sparkSession
     import spark.implicits._
     val table =
-      bpeTrainOnWords(bpeWordTable(train, textCol, persistIntermediate), merges)
+      bpeTrainOnWords(bpeWordTable(train, textCol), merges)
     ((0, BpeCfgMarker, "", table.size.toLong) +: table)
       .toDF("step", "left", "right", "pair_count")
   }
@@ -1256,8 +1230,7 @@ object TextAnalysis {
     * DISTINCT-word table; the piece rollup is a partial agg on a
     * bounded key space (≤ alphabet + merges symbols).
     */
-  def bpeSegmentWithModel(docs: DataFrame, textCol: String, model: DataFrame,
-                          persistIntermediate: Boolean = true): DataFrame = {
+  def bpeSegmentWithModel(docs: DataFrame, textCol: String, model: DataFrame): DataFrame = {
     val rows = model
       .select(col("step").cast("int"), col("left"), col("right"),
         col("pair_count").cast("long"))
@@ -1283,7 +1256,7 @@ object TextAnalysis {
     val segmented = merges.foldLeft(col("seq")) { case (s, (_, l, r)) =>
       bpeMergeOf(l, r)(s)
     }
-    bpeWordTable(docs, textCol, persistIntermediate)
+    bpeWordTable(docs, textCol)
       .select(col("freq"), explode(filter(split(segmented, BpeSep2),
         s => length(s) > 0)).as("piece"))
       .groupBy("piece")
@@ -1408,7 +1381,6 @@ object TextAnalysis {
   def unigramLmTrain(docs: DataFrame, textCol: String,
                      seedSize: Int = 512, maxPieceLen: Int = 4,
                      maxWordLen: Int = 16, iters: Int = 2,
-                     persistIntermediate: Boolean = true,
                      broadcastModel: Boolean = true,
                      vocabSize: Int = 0,
                      shrinkFactor: Double = 0.75): DataFrame = {
@@ -1433,9 +1405,7 @@ object TextAnalysis {
     // has meaning on the APPLY side (segmentCostWithVocab)
     val _ = broadcastModel
     def persist(df: DataFrame): DataFrame =
-      if (persistIntermediate)
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the ONE corpus scan (Par.widen: its tokenize must not run on a
     // single scan split); dictionary-sized from here on
     val words = persist(Par.widen(docs)
@@ -1636,15 +1606,14 @@ object TextAnalysis {
                     trainFilter: Column, seedSize: Int = 512,
                     maxPieceLen: Int = 4, maxWordLen: Int = 16,
                     iters: Int = 2,
-                    persistIntermediate: Boolean = true,
                     broadcastModel: Boolean = true): DataFrame = {
     // the trained model — localCheckpointed by the trainer, so this
     // subtree is a bounded table, not a replay of the EM rounds
     val vocab = unigramLmTrain(docs.filter(trainFilter), textCol, seedSize,
-        maxPieceLen, maxWordLen, iters, persistIntermediate, broadcastModel)
+        maxPieceLen, maxWordLen, iters, broadcastModel)
       .select("piece", "logp")
     segmentCostWithVocab(docs, textCol, idCol, vocab, maxPieceLen,
-      maxWordLen, persistIntermediate, broadcastModel)
+      maxWordLen, broadcastModel)
   }
 
   /** The APPLY half [[tokenizerCost]] and [[unigramSegmentWithModel]]
@@ -1658,12 +1627,7 @@ object TextAnalysis {
   private def segmentCostWithVocab(docs: DataFrame, textCol: String,
                                    idCol: String, vocab: DataFrame,
                                    maxPieceLen: Int, maxWordLen: Int,
-                                   persistIntermediate: Boolean,
                                    broadcastModel: Boolean): DataFrame = {
-    // persistIntermediate kept for signature stability: since the r14
-    // left-join-miss rework every intermediate here has exactly one
-    // consumer, so there is nothing left to persist
-    val _ = persistIntermediate
     // deliberately NOT persisted: corpus-scale — see "Scale shape".
     // No widen either: A/B'd r15 — the raw-text exchange cost +0.4 s
     // per query at sf0.1 against ~0.1 s at sf1 (the two consumers'
@@ -1739,14 +1703,13 @@ object TextAnalysis {
   def unigramFitModel(train: DataFrame, textCol: String,
                       seedSize: Int = 512, maxPieceLen: Int = 4,
                       maxWordLen: Int = 16, iters: Int = 2,
-                      persistIntermediate: Boolean = true,
                       broadcastModel: Boolean = true,
                       vocabSize: Int = 0,
                       shrinkFactor: Double = 0.75): DataFrame = {
     val spark = train.sparkSession
     import spark.implicits._
     val v = unigramLmTrain(train, textCol, seedSize, maxPieceLen,
-      maxWordLen, iters, persistIntermediate, broadcastModel,
+      maxWordLen, iters, broadcastModel,
       vocabSize, shrinkFactor)
     val cfg = Seq(
       (UniCfgPrefix + "max_piece_len", maxPieceLen.toLong, 0.0),
@@ -1775,7 +1738,6 @@ object TextAnalysis {
   def unigramSegmentWithModel(docs: DataFrame, textCol: String, idCol: String,
                               model: DataFrame,
                               maxPieceLen: Int = 4, maxWordLen: Int = 16,
-                              persistIntermediate: Boolean = true,
                               broadcastModel: Boolean = true): DataFrame = {
     // fit-config guard: a model fit with different piece/word bounds
     // would segment SILENTLY differently — fail loud. The probe is
@@ -1802,6 +1764,6 @@ object TextAnalysis {
     val vocab = model.filter(!col("piece").startsWith(UniCfgPrefix))
       .select("piece", "logp")
     segmentCostWithVocab(docs, textCol, idCol, vocab, maxPieceLen,
-      maxWordLen, persistIntermediate, broadcastModel)
+      maxWordLen, broadcastModel)
   }
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one `private[sql]` bridge a library defining its own logical
   * plan nodes needs: turn a constructed `LogicalPlan` back into a
-  * `DataFrame`. This is the standard technique extension libraries
+  * `DataFrame` (the as-of join node; `Par.widen`'s repartition inserted
+  * below a narrow operator chain, which the public API can only stack
+  * on top). This is the standard technique extension libraries
   * use (a single object compiled into the `org.apache.spark.sql`
   * package scope); everything else in graft goes through fully
   * public APIs (`SparkSessionExtensions`, `Strategy`, `SparkPlan`).

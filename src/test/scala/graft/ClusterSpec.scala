@@ -119,8 +119,7 @@ class ClusterSpec extends AnyFunSuite {
       .orderBy("doc_id").collect()
     assert(d10.forall(_.getLong(2) == 0L),
       s"chunk dedup must be blind to the shifted copy: ${d10.toSeq}")
-    val d19 = Dedup.substringDedupStats(docs, "text", "doc_id",
-        persistIntermediate = false)
+    val d19 = Dedup.substringDedupStats(docs, "text", "doc_id")
       .orderBy("doc_id").collect()
     val doc2 = d19(1)
     assert(doc2.getLong(2) >= 5, s"doc 2 must carry dup anchors: ${d19.toSeq}")
@@ -140,8 +139,7 @@ class ClusterSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, s"$para $fillerA"),
       (2L, s"$fillerB $para")).toDF("doc_id", "text")
-    val got = Dedup.substringStrip(docs, "text", "doc_id",
-        persistIntermediate = false)
+    val got = Dedup.substringStrip(docs, "text", "doc_id")
       .orderBy("doc_id").collect()
     // doc 1 is first occurrence everywhere: passes through whole
     assert(got(0).getString(1) == s"$para $fillerA" && got(0).getLong(3) == 0L)
@@ -154,8 +152,7 @@ class ClusterSpec extends AnyFunSuite {
     assert(got(1).getLong(3) >= para.length / 2, got(1).toString)
     // the invariant on real data: kept + removed = normalized length
     val corpus = Tables(spark, "/root/testdata/sf0.01").documents.limit(150)
-    val inv = Dedup.substringStrip(corpus, "text", "doc_id",
-        persistIntermediate = false)
+    val inv = Dedup.substringStrip(corpus, "text", "doc_id")
       .join(corpus.select(col("doc_id"),
         length(graft.functions.text.normalize(col("text"))).cast("long").as("nl")),
         "doc_id")
@@ -166,17 +163,15 @@ class ClusterSpec extends AnyFunSuite {
 
   test("substringDedupStats native and fallback paths are row-identical") {
     val docs = Tables(spark, "/root/testdata/sf0.01").documents.limit(120)
-    val native = Dedup.substringDedupStats(docs, "text", "doc_id",
-      persistIntermediate = false).orderBy("doc_id").collect().toSeq
+    val native = Dedup.substringDedupStats(docs, "text", "doc_id")
+      .orderBy("doc_id").collect().toSeq
     val fallback = withNativeDisabled {
-      Dedup.substringDedupStats(docs, "text", "doc_id",
-        persistIntermediate = false).orderBy("doc_id").collect().toSeq
+      Dedup.substringDedupStats(docs, "text", "doc_id").orderBy("doc_id").collect().toSeq
     }
     assert(native == fallback)
     // empty and sub-k docs emit no anchor rows at all
     val edge = Seq((1L, ""), (2L, "ab"), (3L, "twelve chars!")).toDF("doc_id", "text")
-    val got = Dedup.substringDedupStats(edge, "text", "doc_id",
-      persistIntermediate = false).orderBy("doc_id").collect()
+    val got = Dedup.substringDedupStats(edge, "text", "doc_id").orderBy("doc_id").collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(3L), got.toSeq.toString)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Dedup
@@ -26,8 +27,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   ).toDF("doc_id", "text").withColumn("block", lit("b"))
 
   test("minhashPairs tolerates null/empty/short docs and finds the dup") {
-    val pairs = Dedup.minhashPairs(docs, "text", "doc_id",
-        numPerm = 64, bands = 16, persistIntermediate = false)
+    val pairs = Dedup.minhashPairs(docs, "text", "doc_id", numPerm = 64, bands = 16)
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(pairs.forall { case (a, b) => Set(1L, 2L)(a) && Set(1L, 2L)(b) })
@@ -41,8 +41,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("ngramJaccardPairs tolerates null/empty/short docs and finds the dup") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("block"),
-        persistIntermediate = false)
+    val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("block"))
       .select("id1", "id2").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(pairs.forall { case (a, b) => Set(1L, 2L)(a) && Set(1L, 2L)(b) })
@@ -100,8 +99,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       .orderBy("shard", "doc_id").collect()
     assert(packed.map(_.getLong(2)).toSeq == Seq(0L, 0L, 4L))  // (eval,2), (train,1), (train,3)
     // contamination: null/empty produce no grams and no pairs, no throw
-    val pairs = Curation.contaminationPairs(cds, "text", "doc_id", "split",
-      "eval", persistIntermediate = false)
+    val pairs = Curation.contaminationPairs(cds, "text", "doc_id", "split", "eval")
     assert(pairs.count() == 0)
   }
 
@@ -133,18 +131,42 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(g.count() == 6)
   }
 
+  test("Par.widen keeps nondeterministic expressions above its repartition") {
+    import graft.ops.Par
+    val want = spark.sparkContext.defaultParallelism
+    assume(want > 1, "widen is a no-op at defaultParallelism == 1")
+    val dir = java.nio.file.Files.createTempDirectory("widen-nd").toString
+    // one tiny file = one row group = one scan split
+    (1L to 64L).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
+    val small = spark.read.parquet(dir)
+    // rand and monotonically_increasing_id read the partition index, so
+    // evaluated below a reshuffle they would change value
+    val df = small.select(col("id"), rand(7).as("r"),
+      monotonically_increasing_id().as("mid"))
+    val w = Par.widen(df)
+    assert(w.rdd.getNumPartitions >= want, "precondition: the scan was widened")
+    def byId(d: DataFrame) =
+      d.collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
+    assert(byId(w) == byId(df), "widen changed nondeterministic values")
+    // same for a nondeterministic generator
+    val gen = small.select(col("id"), explode(array(rand(3), rand(4))).as("v"))
+    def valuesById(d: DataFrame) = d.collect().groupBy(_.getLong(0))
+      .map { case (k, rs) => k -> rs.map(_.getDouble(1)).sorted.toSeq }
+    val wg = Par.widen(gen)
+    assert(wg.rdd.getNumPartitions >= want, "precondition: the generator input was widened")
+    assert(valuesById(wg) == valuesById(gen),
+      "widen changed a nondeterministic generator's values")
+  }
+
   test("round-7 operators tolerate degenerate inputs") {
     import graft.ops.{Curation, TextAnalysis}
     // bpeTrain: all-1-char vocabulary has no pairs — empty table, no
     // crash; empty corpus likewise
     val singles = Seq((1L, "a b c"), (2L, "a")).toDF("doc_id", "text")
-    assert(TextAnalysis.bpeTrain(singles, "text", merges = 5,
-      persistIntermediate = false).count() == 0)
-    assert(TextAnalysis.bpeTrain(singles.limit(0), "text", merges = 5,
-      persistIntermediate = false).count() == 0)
+    assert(TextAnalysis.bpeTrain(singles, "text", merges = 5).count() == 0)
+    assert(TextAnalysis.bpeTrain(singles.limit(0), "text", merges = 5).count() == 0)
     // bpeSegment with a dry vocabulary: pieces = the raw characters
-    val seg = TextAnalysis.bpeSegment(singles, "text", merges = 5,
-        persistIntermediate = false)
+    val seg = TextAnalysis.bpeSegment(singles, "text", merges = 5)
       .orderBy("piece").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(seg == Seq(("a", 2L), ("b", 1L), ("c", 1L)), s"raw chars: $seg")
     // decontaminateByEmbedding: no eval rows → every train row clean;
@@ -152,13 +174,11 @@ class EdgeCaseSpec extends AnyFunSuite {
     def v(xs: Double*) = xs.map(_.toFloat).toArray
     val emb = Seq((1L, v(1, 0)), (2L, v(0, 1))).toDF("vec_id", "embedding")
     val noEval = Curation.decontaminateByEmbedding(emb, "embedding", "vec_id",
-        lit(false), threshold = 0.5, dim = 2, numPlanes = 6,
-        persistIntermediate = false)
+        lit(false), threshold = 0.5, dim = 2, numPlanes = 6)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(noEval == Set((1L, 0), (2L, 0)), s"all clean: $noEval")
     assert(Curation.decontaminateByEmbedding(emb, "embedding", "vec_id",
-      lit(true), threshold = 0.5, dim = 2, numPlanes = 6,
-      persistIntermediate = false).count() == 0)
+      lit(true), threshold = 0.5, dim = 2, numPlanes = 6).count() == 0)
   }
 
   test("round-8 operators tolerate degenerate inputs") {
@@ -227,8 +247,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   test("round-6 operators tolerate degenerate inputs") {
     import graft.ops.{Curation, Enrich, Graph, Multimodal, Similarity, TextAnalysis}
     // containment: null/empty/short docs form no pairs; real subset found
-    val cp = Dedup.containmentPairs(docs, "text", "doc_id", col("block"),
-        threshold = 0.9, persistIntermediate = false)
+    val cp = Dedup.containmentPairs(docs, "text", "doc_id", col("block"), threshold = 0.9)
       .select("id_sub", "id_sup").as[(Long, Long)].collect().toSet
     assert(cp.contains((1L, 2L)) && cp.forall(p => Set(1L, 2L)(p._1)))
     // LPA: self-loops only → every vertex is its own singleton? a
@@ -243,8 +262,7 @@ class EdgeCaseSpec extends AnyFunSuite {
       "embedding", "vec_id", -1.0).collect()
     assert(rs.length == 1 && rs.head.getDouble(2) == 0.0)
     // knnGraph: empty corpus (auto band bits) → empty result
-    assert(Similarity.knnGraph(zc.limit(0), "embedding", "vec_id", k = 3,
-      dim = 2, persistIntermediate = false).count() == 0)
+    assert(Similarity.knnGraph(zc.limit(0), "embedding", "vec_id", k = 3, dim = 2).count() == 0)
     // weightedSample: all weights non-positive → empty
     val ws = Seq((1L, "g", 0.0), (2L, "g", -3.0)).toDF("id", "grp", "w")
     assert(Curation.weightedSample(ws, "id", "grp", "w", "s", 5).count() == 0)

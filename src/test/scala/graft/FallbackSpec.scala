@@ -26,12 +26,11 @@ class FallbackSpec extends AnyFunSuite {
         .orderBy("fingerprint").collect().mkString("|"),
       graft.ops.TextAnalysis.fingerprints(docs, "text", "doc_id")
         .orderBy("doc_id").collect().mkString("|"),
-      Dedup.minhashPairs(docs, "text", "doc_id", persistIntermediate = false)
+      Dedup.minhashPairs(docs, "text", "doc_id")
         .orderBy("id1", "id2").collect().mkString("|"),
       Dedup.simhashPairs(docs, "text", "doc_id")
         .orderBy("id1", "id2").collect().mkString("|"),
-      Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source"),
-          persistIntermediate = false)
+      Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source"))
         .orderBy("id1", "id2").collect().mkString("|"),
       Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id", "label", 0.3)
         .orderBy("id1", "id2").collect().mkString("|"),
@@ -58,8 +57,7 @@ class FallbackSpec extends AnyFunSuite {
         .orderBy("doc_id", "pos").collect().mkString("|"),
       // md5-fold consumers: bucket hashes (t24/t28) + simhash token
       // hashes must be value-identical behind kernel vs string chain
-      graft.ops.Curation.dsirWeights(docs, "text", "doc_id",
-          col("source") === "src1", persistIntermediate = false)
+      graft.ops.Curation.dsirWeights(docs, "text", "doc_id", col("source") === "src1")
         .orderBy("doc_id").collect().mkString("|"),
       graft.ops.TextAnalysis.distributionDrift(docs, "text",
           col("source") === "src1")

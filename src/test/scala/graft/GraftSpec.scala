@@ -409,7 +409,7 @@ class OperatorSpec extends AnyFunSuite {
     // rounding margin are exercised, not a toy.
     val docs = Tables(spark, sfDir).documents
     val j = (pf: Boolean) => Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-        col("source"), prefixFilter = pf, persistIntermediate = false)
+        col("source"), prefixFilter = pf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val (jPref, jFull) = (j(true), j(false))
     assert(jPref == jFull,
@@ -417,8 +417,7 @@ class OperatorSpec extends AnyFunSuite {
         s"full-only ${(jFull -- jPref).take(3)}")
     assert(jPref.nonEmpty, "corpus must produce at least one d4 pair")
     val c = (pf: Boolean) => Dedup.containmentPairs(docs, "text", "doc_id",
-        col("source"), threshold = 0.5, prefixFilter = pf,
-        persistIntermediate = false)
+        col("source"), threshold = 0.5, prefixFilter = pf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val (cPref, cFull) = (c(true), c(false))
     assert(cPref == cFull,
@@ -534,7 +533,7 @@ class OperatorSpec extends AnyFunSuite {
     val nVariants = variants.count()
     assert(nVariants >= 5, s"corpus must provide planted variants, got $nVariants")
     val pairs = Multimodal.payloadNearDupPairs(payloads.unionAll(variants),
-      "payload", "doc_id", persistIntermediate = false)
+      "payload", "doc_id")
     val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = variants.select(col("doc_id") - lit(1000000000L)).collect()
       .map(_.getLong(0)).map(id => (id, id + 1000000000L)).toSet

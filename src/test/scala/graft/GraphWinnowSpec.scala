@@ -157,7 +157,7 @@ class GraphWinnowSpec extends AnyFunSuite {
       (2L, "the quick brown fox jumps over the lazy dog again and again"),
       (3L, "the quick brown fox jumps over the lazy dog again and again"),
       (9L, "completely unrelated content about spark physical plans")).toDF("doc_id", "text")
-    val pairs = ops.Dedup.minhashPairs(docs, "text", "doc_id", persistIntermediate = false)
+    val pairs = ops.Dedup.minhashPairs(docs, "text", "doc_id")
     val clusters = Graph.clusterDedup(pairs, "id1", "id2").orderBy("id").collect().toSeq
     assert(clusters.map(r => (r.getLong(0), r.getLong(1), r.getInt(3))) ==
       Seq((1L, 1L, 1), (2L, 1L, 0), (3L, 1L, 0)))

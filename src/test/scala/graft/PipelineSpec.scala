@@ -75,8 +75,7 @@ class PipelineSpec extends AnyFunSuite {
     val split = Curation.deterministicSplit(kept, "doc_id", "pipe",
       Seq(("train", 0.95), ("eval", 0.05)))
     // 4. decontaminate: drop train docs that collide with eval docs
-    val contaminated = Curation.contaminationPairs(split, "text", "doc_id",
-        "split", "eval", persistIntermediate = false)
+    val contaminated = Curation.contaminationPairs(split, "text", "doc_id", "split", "eval")
       .select(col("train_id").as("doc_id")).distinct()
     val clean = split.join(contaminated, Seq("doc_id"), "left_anti")
     // 5. pack the surviving train docs into 2048-token sequences
@@ -100,8 +99,7 @@ class PipelineSpec extends AnyFunSuite {
     // corpus out, all as one lazy plan until the final actions
     val docs = Tables(spark, "/root/testdata/sf0.01").documents
     val n0 = docs.count()
-    val pairs = Dedup.minhashPairs(docs, "text", "doc_id",
-      persistIntermediate = false)
+    val pairs = Dedup.minhashPairs(docs, "text", "doc_id")
     val clusters = Graph.clusterDedup(pairs, "id1", "id2")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val kept = Graph.dropNearDups(docs, "doc_id", pairs, "id1", "id2")
@@ -120,8 +118,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(clusters.filter(col("keep") === 0).join(keptIds, "id").count() == 0,
       "no dropped member survives")
     // idempotence: re-running the chain on the deduped corpus drops nothing
-    val pairs2 = Dedup.minhashPairs(kept, "text", "doc_id",
-      persistIntermediate = false)
+    val pairs2 = Dedup.minhashPairs(kept, "text", "doc_id")
     assert(Graph.clusterDedup(pairs2, "id1", "id2")
       .filter(col("keep") === 0).count() == 0,
       "dedup chain must be idempotent: second pass finds no drops")

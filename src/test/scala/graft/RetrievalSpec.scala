@@ -166,8 +166,7 @@ class RetrievalSpec extends AnyFunSuite {
     // aaa into [aa, a] (leftmost), NOT [a, aa]. Round 2: (a,b) = 2.
     // Round 3: (aa,a) = 1. Round 4+: vocabulary dry -> 3 rows only.
     val docs = Seq("aa ab", "ab", "aaa").toDF("text")
-    val got = TextAnalysis.bpeTrain(docs, "text", merges = 10,
-        persistIntermediate = false)
+    val got = TextAnalysis.bpeTrain(docs, "text", merges = 10)
       .orderBy("step")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
@@ -175,8 +174,7 @@ class RetrievalSpec extends AnyFunSuite {
       s"trajectory mismatch: $got")
     // lexicographic tie-break: (a,b) and (b,a) both count 1 -> (a,b) first
     val tie = Seq("ab", "ba").toDF("text")
-    val t1 = TextAnalysis.bpeTrain(tie, "text", merges = 1,
-        persistIntermediate = false).collect()(0)
+    val t1 = TextAnalysis.bpeTrain(tie, "text", merges = 1).collect()(0)
     assert((t1.getString(1), t1.getString(2)) == (("a", "b")), s"tie-break: $t1")
   }
 
@@ -186,13 +184,11 @@ class RetrievalSpec extends AnyFunSuite {
     val docs = Seq("aa ab", "ab", "aaa").toDF("text")
     // merges=2 learns (a,a) then (a,b): aa->[aa], ab->[ab] x2,
     // aaa->[aa,a] -> pieces a:1, aa:2, ab:2
-    val got2 = TextAnalysis.bpeSegment(docs, "text", merges = 2,
-        persistIntermediate = false)
+    val got2 = TextAnalysis.bpeSegment(docs, "text", merges = 2)
       .orderBy("piece").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got2 == Seq(("a", 1L), ("aa", 2L), ("ab", 2L)), s"merges=2: $got2")
     // merges=3 additionally learns (aa,a): aaa collapses to one piece
-    val got3 = TextAnalysis.bpeSegment(docs, "text", merges = 3,
-        persistIntermediate = false)
+    val got3 = TextAnalysis.bpeSegment(docs, "text", merges = 3)
       .orderBy("piece").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got3 == Seq(("aa", 1L), ("aaa", 1L), ("ab", 2L)), s"merges=3: $got3")
   }
@@ -208,8 +204,7 @@ class RetrievalSpec extends AnyFunSuite {
     // Smoothed total = 3 + 1 + 3*0.5 = 5.5; round 2 re-segments the
     // same way, so the trajectory is a fixed point from round 1.
     val docs = Seq("ab ab ab abc").toDF("text")
-    val got = TextAnalysis.unigramLmTrain(docs, "text",
-        persistIntermediate = false)
+    val got = TextAnalysis.unigramLmTrain(docs, "text")
       .orderBy("piece").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     val charLp = lp(0.5 / 5.5)
@@ -217,8 +212,7 @@ class RetrievalSpec extends AnyFunSuite {
       ("a", 0L, charLp), ("ab", 3L, lp(3.0 / 5.5)), ("abc", 1L, lp(1.0 / 5.5)),
       ("b", 0L, charLp), ("c", 0L, charLp)), s"trajectory mismatch: $got")
     // determinism: a re-run reproduces the table exactly
-    val again = TextAnalysis.unigramLmTrain(docs, "text",
-        persistIntermediate = false)
+    val again = TextAnalysis.unigramLmTrain(docs, "text")
       .orderBy("piece").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(again == got)
@@ -238,8 +232,7 @@ class RetrievalSpec extends AnyFunSuite {
     // from the model). Counts ab=3 c=2 d=2; n_multis=1, keep 1.
     // cs total = 3 + 2.5 + 2.5 + 0.5 + 0.5 = 9.
     val docs = Seq("ab ab ab cd cd").toDF("text")
-    val got = TextAnalysis.unigramLmTrain(docs, "text",
-        persistIntermediate = false, vocabSize = 1, shrinkFactor = 0.5)
+    val got = TextAnalysis.unigramLmTrain(docs, "text", vocabSize = 1, shrinkFactor = 0.5)
       .orderBy("piece").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == Seq(
@@ -248,8 +241,7 @@ class RetrievalSpec extends AnyFunSuite {
       s"pruned trajectory: $got")
     // without a target, the same corpus keeps 'cd' (usage-0 pruning
     // only — the legacy t37 trajectory is untouched by the new knob)
-    val noTarget = TextAnalysis.unigramLmTrain(docs, "text",
-        persistIntermediate = false)
+    val noTarget = TextAnalysis.unigramLmTrain(docs, "text")
       .orderBy("piece").collect().map(_.getString(0)).toSeq
     assert(noTarget.contains("cd"), s"no-target vocab: $noTarget")
   }
@@ -259,8 +251,7 @@ class RetrievalSpec extends AnyFunSuite {
     // an accidentally empty train split must not train a silent empty
     // vocabulary that verdicts every downstream word UNK (ADVICE r09)
     val e = intercept[IllegalArgumentException] {
-      TextAnalysis.unigramLmTrain(Seq("", "   ").toDF("text"), "text",
-        persistIntermediate = false)
+      TextAnalysis.unigramLmTrain(Seq("", "   ").toDF("text"), "text")
     }
     assert(e.getMessage.contains("ZERO words"), e.getMessage)
   }
@@ -277,8 +268,7 @@ class RetrievalSpec extends AnyFunSuite {
       (1L, "ab ab ab abc", true),
       (2L, "ba xy " + "a" * 17 + " abab", false),
       (3L, "", false)).toDF("id", "txt", "tr")
-    val got = TextAnalysis.tokenizerCost(docs, "txt", "id", col("tr"),
-        persistIntermediate = false)
+    val got = TextAnalysis.tokenizerCost(docs, "txt", "id", col("tr"))
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         Option(r.get(4)).map(_.asInstanceOf[Double])))

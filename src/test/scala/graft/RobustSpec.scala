@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.tables.Tables
 
 /** Scale-robustness guarantees that CORRECTNESS can't see:
@@ -16,7 +16,9 @@ import graft.tables.Tables
   *  - the bucketed ANN variants (LSH, IVF) reach quantified recall
   *    against the oracle-verified brute-force ground truth, and every
   *    pair they emit carries the exact brute-force cosine
-  *    (precision 1.0 on scores).
+  *    (precision 1.0 on scores);
+  *  - every intermediate an op persists is released by
+  *    `GraftSession.sweep`, and `minhashPrepare` persists nothing.
   */
 class RobustSpec extends AnyFunSuite {
   import SparkHarness._
@@ -26,24 +28,48 @@ class RobustSpec extends AnyFunSuite {
 
   test("d2/d4 verify joins: identical pairs under broadcast, shuffle-hash, and AQE strategies") {
     val strategies = Seq(Some(true), Some(false), None)
-    val d2 = strategies.map(strat =>
-      Dedup.minhashPairs(docs, "text", "doc_id", persistIntermediate = false,
-          verifyBroadcast = strat)
+    // each strategy runs on a swept session, so it recomputes the ops'
+    // persisted intermediates instead of reading the previous run's
+    def perStrategy(run: Option[Boolean] => String): Seq[String] =
+      strategies.map { strat => GraftSession.sweep(spark); run(strat) }
+    val d2 = perStrategy(strat =>
+      Dedup.minhashPairs(docs, "text", "doc_id", verifyBroadcast = strat)
         .orderBy("id1", "id2").collect().mkString("|"))
-    val d4 = strategies.map(strat =>
+    val d4 = perStrategy(strat =>
       Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source"),
-          persistIntermediate = false, verifyBroadcast = strat)
+          verifyBroadcast = strat)
         .orderBy("id1", "id2").collect().mkString("|"))
     assert(d2.distinct.size == 1, "minhashPairs diverges across join strategies")
     assert(d4.distinct.size == 1, "ngramJaccardPairs diverges across join strategies")
     assert(d2.head.nonEmpty && d4.head.nonEmpty)
-    val d8 = strategies.map(strat =>
+    val d8 = perStrategy(strat =>
       Dedup.embeddingNearDupPairsLsh(embs, "embedding", "vec_id", 0.4, dim = 64,
-          numPlanes = 24, bands = 6,
-          persistIntermediate = false, verifyBroadcast = strat)
+          numPlanes = 24, bands = 6, verifyBroadcast = strat)
         .orderBy("id1", "id2").collect().mkString("|"))
     assert(d8.distinct.size == 1, "embeddingNearDupPairsLsh diverges across join strategies")
     assert(d8.head.nonEmpty)
+  }
+
+  test("intermediate lifetime: ops pin shared intermediates, sweep releases them") {
+    val cache = spark.sharedState.cacheManager
+    val sc = spark.sparkContext
+    GraftSession.sweep(spark)
+    assert(cache.isEmpty && sc.getPersistentRDDs.isEmpty, "precondition: a swept session")
+    Dedup.minhashPairs(docs, "text", "doc_id").collect()
+    TextAnalysis.tfidfTopTerms(docs, "text", "doc_id").collect()
+    assert(!cache.isEmpty, "materialized ops registered no cached intermediate")
+    assert(sc.getPersistentRDDs.nonEmpty, "materialized ops hold no cached blocks")
+    GraftSession.sweep(spark)
+    assert(cache.isEmpty, "sweep left cached Datasets behind")
+    assert(sc.getPersistentRDDs.isEmpty,
+      s"sweep left persisted RDDs behind: ${sc.getPersistentRDDs.keys}")
+    // minhashPrepare's tables belong to the caller (the streaming sink
+    // accumulates them), so materializing them must pin nothing
+    val (hashes, bands) = Dedup.minhashPrepare(docs, "text", "doc_id")
+    hashes.collect()
+    bands.collect()
+    assert(cache.isEmpty && sc.getPersistentRDDs.isEmpty,
+      "minhashPrepare persisted an intermediate")
   }
 
   test("simhash block banding emits exactly the brute-force hamming<=3 pair set") {
@@ -244,9 +270,9 @@ class RobustSpec extends AnyFunSuite {
     // candidate volume at t=0.8: the derived banding must prune >= 4x
     // vs the fixed t=0.5 banding (candidates ARE the op's cost)
     val fixed = Dedup.minhashCandidates(docs, "text", "doc_id",
-      bands = 32, jaccardThreshold = 0.8, persistIntermediate = false).count()
+      bands = 32, jaccardThreshold = 0.8).count()
     val derived = Dedup.minhashCandidates(docs, "text", "doc_id",
-      jaccardThreshold = 0.8, persistIntermediate = false).count()
+      jaccardThreshold = 0.8).count()
     info(s"t=0.8 candidates: bands=32 -> $fixed, derived bands=16 -> $derived")
     assert(derived * 4 <= fixed,
       s"derived banding pruned ${fixed}->${derived}, less than 4x")
@@ -256,8 +282,7 @@ class RobustSpec extends AnyFunSuite {
     // nearly all minhash slots, so they collide on an 8-row band with
     // prob >= the 4-row band's — banding only got SAFER for them)
     val brute = bruteJaccardPairs(0.8)
-    val banded = Dedup.minhashPairs(docs, "text", "doc_id",
-        jaccardThreshold = 0.8, persistIntermediate = false)
+    val banded = Dedup.minhashPairs(docs, "text", "doc_id", jaccardThreshold = 0.8)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.nonEmpty, "degenerate corpus: no pairs at jaccard >= 0.8")
     assert(brute == banded,
@@ -265,10 +290,9 @@ class RobustSpec extends AnyFunSuite {
 
     // and the t=0.5 default result is byte-identical to the explicit
     // bands=32 call (the derived default IS 32 there)
-    val a = Dedup.minhashPairs(docs, "text", "doc_id", persistIntermediate = false)
+    val a = Dedup.minhashPairs(docs, "text", "doc_id")
       .orderBy("id1", "id2").collect().mkString("|")
-    val b = Dedup.minhashPairs(docs, "text", "doc_id", bands = 32,
-        persistIntermediate = false)
+    val b = Dedup.minhashPairs(docs, "text", "doc_id", bands = 32)
       .orderBy("id1", "id2").collect().mkString("|")
     assert(a == b)
   }
@@ -476,15 +500,13 @@ class RobustSpec extends AnyFunSuite {
     val train = substring(md5(concat(col("doc_id").cast("string"),
       lit(":"), lit("graft"))), 1, 4) < "e666"
     val trainLegs = Seq(true, false).map(b =>
-      TextAnalysis.unigramLmTrain(docs.filter(train), "text",
-          persistIntermediate = false, broadcastModel = b)
+      TextAnalysis.unigramLmTrain(docs.filter(train), "text", broadcastModel = b)
         .orderBy("piece").collect().mkString("|"))
     assert(trainLegs.distinct.size == 1,
       "unigramLmTrain diverges between broadcast and shuffle dictionary joins")
     assert(trainLegs.head.nonEmpty)
     val costLegs = Seq(true, false).map(b =>
-      TextAnalysis.tokenizerCost(docs, "text", "doc_id", train,
-          persistIntermediate = false, broadcastModel = b)
+      TextAnalysis.tokenizerCost(docs, "text", "doc_id", train, broadcastModel = b)
         .orderBy("doc_id").collect().mkString("|"))
     assert(costLegs.distinct.size == 1,
       "tokenizerCost diverges between broadcast and shuffle dictionary joins")
@@ -505,7 +527,7 @@ class RobustSpec extends AnyFunSuite {
     assert(g3.distinct.size == 1, "labelPropagation diverges across partitionings")
     // s10: the k-NN graph is a pure function of the corpus
     val s10 = run(e => Similarity.knnGraph(e, "embedding", "vec_id", 5,
-      dim = 64, numPlanes = 24, bands = 6, persistIntermediate = false)
+      dim = 64, numPlanes = 24, bands = 6)
       .orderBy("id", "rank"), embs)
     assert(s10.distinct.size == 1, "knnGraph diverges across partitionings")
     // t31: the A-ES sample is a pure function of (ids, weights)
@@ -542,7 +564,7 @@ class RobustSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def recallAt(bands: Int) =
       Dedup.bandingRecall(docs, "text", "doc_id", numPerm = 128,
-          bands = bands, sampleHex = "g000", persistIntermediate = false)
+          bands = bands, sampleHex = "g000")
         .head()
     // ground truth is banding-independent: pairs (1,2) J=1.0 and
     // (3,4) J≈0.55 — two true pairs under every configuration
@@ -575,7 +597,7 @@ class RobustSpec extends AnyFunSuite {
       (7L, "identical twin text with several words nobody else has"))
       .toDF("doc_id", "text")
     val r = Dedup.bandingRecall(docs, "text", "doc_id", numPerm = 128,
-      bands = 32, sampleHex = "g000", persistIntermediate = false).head()
+      bands = 32, sampleHex = "g000").head()
     assert(r.getLong(0) == 2L, s"sample_docs should drop short docs: $r")
     assert(r.getLong(1) == 1L && r.getLong(2) == 1L && r.getLong(3) == 1L,
       s"only the real pair should be a candidate: $r")
@@ -604,7 +626,7 @@ class RobustSpec extends AnyFunSuite {
     def recallAt(bands: Int) =
       Dedup.embeddingBandingRecall(embs, "embedding", "vec_id",
           threshold = 0.7, dim = 8, numPlanes = 24, bands = bands,
-          sampleHex = "g000", persistIntermediate = false)
+          sampleHex = "g000")
         .head()
     // truth is banding-independent: pairs (1,2) cos=1 and (3,4)
     // cos~0.766 — two true pairs under every configuration

@@ -25,7 +25,11 @@ class TopKRewriteSpec extends AnyFunSuite {
       coalesce(col("l_orderkey") * 10 + col("l_linenumber"), lit(-1L))
         .cast("bigint").as("id"))
 
+  /** Runs `f` with the rule on or off, on a swept session: a rule-off
+    * run must recompute, never read blocks the rule-on run cached.
+    */
   private def withRule[A](enabled: Boolean)(f: => A): A = {
+    GraftSession.sweep(spark)
     spark.conf.set(TopKRewriteRule.ConfKey, enabled.toString)
     try f finally spark.conf.unset(TopKRewriteRule.ConfKey)
   }
