@@ -25,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   *    a megabytes-sized file is ONE ceil(bytes/maxPartitionBytes)
   *    task). Advisory and shuffle-free — but it cannot split below a
   *    parquet ROW GROUP, so a single-row-group file still scans as
-  *    one task regardless; the probes×corpus scoring operators
-  *    (s1/s2/s3/s7) additionally floor their corpus parallelism with
-  *    a conditional repartition (see `Par.widen`), which is
+  *    one task regardless; the `documents` and `embeddings` corpus
+  *    loaders in [[graft.tables.Tables]] floor that with a
+  *    conditional repartition directly above the scan, which is
   *    where the single-task artifact actually bit (s7's sf1 scoring:
   *    47 s on one core of 32).
   */

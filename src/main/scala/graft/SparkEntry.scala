@@ -2094,13 +2094,13 @@ object SparkEntry {
   private lazy val oracleSqlBase: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
-         floor(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) * 100 + 0.5) / 100 AS sum_qty,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) * 100 + 0.5) / 100 AS sum_base_price,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS DOUBLE) * 100 + 0.5) / 100 AS sum_disc_price,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6))) * (1 + CAST(l_tax AS DECIMAL(18,6)))) AS DOUBLE) * 100 + 0.5) / 100 AS sum_charge,
-         floor(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / count(l_quantity) * 10000 + 0.5) / 10000 AS avg_qty,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) / count(l_extendedprice) * 10000 + 0.5) / 10000 AS avg_price,
-         floor(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(l_discount) * 10000 + 0.5) / 10000 AS avg_disc,
+         floor(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS sum_qty,
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS sum_base_price,
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS sum_disc_price,
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6))) * (1 + CAST(l_tax AS DECIMAL(18,6)))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS sum_charge,
+         floor(CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(l_quantity) * 10000 + 0.5) / 10000 AS avg_qty,
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(l_extendedprice) * 10000 + 0.5) / 10000 AS avg_price,
+         floor(CAST(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(l_discount) * 10000 + 0.5) / 10000 AS avg_disc,
          count(*) AS count_order
          FROM lineitem
          WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
@@ -2128,7 +2128,7 @@ object SparkEntry {
     "q5_composite_enrich" ->
       """WITH hourly AS (
            SELECT date_trunc('hour', ts) AS hb, event_type,
-                  floor(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
+                  floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                         / count(value) * 10000 + 0.5) / 10000 AS hourly_avg
            FROM events GROUP BY 1, 2)
          SELECT e.event_id, epoch_ms(h.hb) AS hour_ms, h.hourly_avg
@@ -2187,8 +2187,8 @@ object SparkEntry {
     "q11_hourly_rollup" ->
       """SELECT epoch_ms(date_trunc('hour', ts)) AS hour_ms, event_type,
          count(*) AS n,
-         floor(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
-         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_value
+         floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
+         round(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE), 2) AS sum_value
          FROM events GROUP BY 1, 2 ORDER BY hour_ms, event_type""",
 
     "q12_sessionize" ->
@@ -2216,14 +2216,14 @@ object SparkEntry {
 
     "q14_revenue_topk" ->
       """SELECT o_orderkey, CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS order_date,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS DOUBLE) * 100 + 0.5) / 100 AS revenue
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS revenue
          FROM orders JOIN lineitem ON o_orderkey = l_orderkey
          GROUP BY o_orderkey, o_orderdate
          ORDER BY revenue DESC, o_orderkey LIMIT 10""",
 
     "q15_market_share" ->
       """SELECT r_name AS region, CAST(year(o_orderdate) AS INTEGER) AS yr,
-         floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS DOUBLE) * 100 + 0.5) / 100 AS revenue,
+         floor(CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6)) * (1 - CAST(l_discount AS DECIMAL(18,6)))) AS VARCHAR) AS DOUBLE) * 100 + 0.5) / 100 AS revenue,
          count(*) AS n_items
          FROM lineitem
          JOIN orders ON l_orderkey = o_orderkey
@@ -2274,7 +2274,7 @@ object SparkEntry {
     "q21_rollup" ->
       """SELECT event_type, epoch_ms(date_trunc('hour', ts)) AS hb_ms,
          count(*) AS n,
-         floor(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
+         floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
          CAST(GROUPING(event_type) AS INTEGER) AS g_type,
          CAST(GROUPING(epoch_ms(date_trunc('hour', ts))) AS INTEGER) AS g_hour
          FROM events
@@ -2283,9 +2283,9 @@ object SparkEntry {
 
     "q22_moving_avg" ->
       """SELECT event_id, epoch_ms(ts) AS ts_ms,
-         floor(CAST(sum(CAST(value AS DECIMAL(18,6)))
+         floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6)))
              OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id
-                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE)
+                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE)
            / count(value)
              OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id
                    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
@@ -2776,7 +2776,7 @@ object SparkEntry {
          comp AS (SELECT grp, generate_subscripts(v, 1) AS d, unnest(v) AS x FROM n),
          cd AS (
            SELECT grp, d,
-             floor((CAST(sum(CAST(floor(x * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS DOUBLE)
+             floor((CAST(CAST(sum(CAST(floor(x * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                     / count(*)) * 1000000.0 + 0.5) / 1000000.0 AS cx
            FROM comp GROUP BY grp, d),
          cent AS (SELECT grp, list(cx ORDER BY d) AS cvec FROM cd GROUP BY grp),
@@ -2789,10 +2789,10 @@ object SparkEntry {
          SELECT grp, CAST(count(*) AS BIGINT) AS n_vecs,
            min(dim) AS dim_min, max(dim) AS dim_max,
            CAST(count(*) FILTER (nrm = 0) AS BIGINT) AS n_zero_norm,
-           floor((CAST(sum(CAST(floor(nrm * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS DOUBLE)
+           floor((CAST(CAST(sum(CAST(floor(nrm * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                   / count(*)) * 10000.0 + 0.5) / 10000.0 AS mean_norm,
            floor(quantile_cont(floor(nrm * 1000000.0 + 0.5) / 1000000.0, 0.5) * 10000.0 + 0.5) / 10000.0 AS p50_norm,
-           floor((CAST(sum(CAST(floor(cosc * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS DOUBLE)
+           floor((CAST(CAST(sum(CAST(floor(cosc * 1000000.0 + 0.5) / 1000000.0 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                   / count(*)) * 10000.0 + 0.5) / 10000.0 AS mean_cos_centroid
          FROM j GROUP BY grp ORDER BY grp""",
 
@@ -2844,7 +2844,7 @@ object SparkEntry {
                     j -> struct_pack(d := j, x := v[j]))) AS u FROM a1)),
           cent AS (
             SELECT cid, d,
-              floor(CAST(sum(xq) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
+              floor(CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
             FROM comp GROUP BY cid, d),
           cent2 AS (SELECT cid, list(cx ORDER BY d) AS c FROM cent GROUP BY cid),
           atr AS (${asgSql("tr")}),
@@ -2907,7 +2907,7 @@ object SparkEntry {
                     j -> struct_pack(d := j, x := v[j]))) AS u FROM ${p}a1)),
           ${p}cent AS (
             SELECT cid, d,
-              floor(CAST(sum(xq) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
+              floor(CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
             FROM ${p}comp GROUP BY cid, d),
           ${p}cent2 AS (SELECT cid, list(cx ORDER BY d) AS c FROM ${p}cent GROUP BY cid)"""
       // frozen assignment of `src` at `${p}cent2` (argmax cos, lower
@@ -2989,8 +2989,8 @@ object SparkEntry {
 
     "t1_lang_profile" ->
       s"""SELECT lang, count(*) AS n_docs,
-          floor(CAST(sum(n_chars) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_chars,
-          floor(CAST(sum(len(${toksSql("text")})) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_tokens
+          floor(CAST(CAST(sum(n_chars) AS VARCHAR) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_chars,
+          floor(CAST(CAST(sum(len(${toksSql("text")})) AS VARCHAR) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000 AS avg_tokens
           FROM documents GROUP BY lang ORDER BY lang""",
 
     "t2_quality_score" ->
@@ -3258,7 +3258,7 @@ object SparkEntry {
                     j -> struct_pack(d := j, x := v[j]))) AS u FROM a1)),
           cent AS (
             SELECT cid, d,
-              floor(CAST(sum(xq) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
+              floor(CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
             FROM comp GROUP BY cid, d),
           cent2 AS MATERIALIZED (
             SELECT cid, list(cx ORDER BY d) AS c FROM cent GROUP BY cid),
@@ -3530,7 +3530,7 @@ object SparkEntry {
                 / 1000000.0 AS logp
             FROM p LEFT JOIN train t USING (term) CROSS JOIN stats s)
           SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-            floor((-CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS DOUBLE)
+            floor((-CAST(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                    / sum(tf)) * 10000.0 + 0.5) / 10000.0 AS mean_nll
           FROM scored GROUP BY doc_id ORDER BY doc_id""",
 
@@ -3573,7 +3573,7 @@ object SparkEntry {
             FROM posts p LEFT JOIN tgt t USING (b) JOIN rawm r USING (b)
             CROSS JOIN stats s)
           SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_feats,
-            floor(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(lr AS DECIMAL(18,6))) AS DOUBLE)
+            floor(CAST(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(lr AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                   * 10000.0 + 0.5) / 10000.0 AS log_w
           FROM scored GROUP BY doc_id
           ORDER BY log_w DESC, doc_id LIMIT 50""",
@@ -3844,7 +3844,7 @@ object SparkEntry {
             LEFT JOIN uni u USING (w2)
             CROSS JOIN stats s)
           SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-            floor((-CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS DOUBLE)
+            floor((-CAST(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                    / sum(tf)) * 10000.0 + 0.5) / 10000.0 AS mean_nll
           FROM scored GROUP BY doc_id ORDER BY doc_id""",
 
@@ -3964,8 +3964,8 @@ object SparkEntry {
               ) * 1000000.0 + 0.5) / 1000000.0 AS tr
             FROM j CROSS JOIN tot t),
           s AS (
-            SELECT CAST(sum(CAST(ta AS DECIMAL(28,6))) AS DOUBLE) AS sa,
-                   CAST(sum(CAST(tr AS DECIMAL(28,6))) AS DOUBLE) AS sr
+            SELECT CAST(CAST(sum(CAST(ta AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sa,
+                   CAST(CAST(sum(CAST(tr AS DECIMAL(28,6))) AS VARCHAR) AS DOUBLE) AS sr
             FROM terms)
           SELECT 4096 AS buckets, t.a_total AS slice_tokens,
             t.r_total AS rest_tokens,
@@ -3981,11 +3981,11 @@ object SparkEntry {
           u AS (SELECT doc_id, unnest(toks) AS tok FROM t),
           c AS (SELECT doc_id, tok, count(*) AS c FROM u GROUP BY 1, 2),
           a AS (SELECT doc_id,
-                  CAST(sum(CASE WHEN c <= 1 THEN CAST(0 AS DECIMAL(38,6))
+                  CAST(CAST(sum(CASE WHEN c <= 1 THEN CAST(0 AS DECIMAL(38,6))
                     ELSE CAST(CAST(c AS DECIMAL(14,0)) *
                       CAST(floor(ln(c) * 1000000.0 + 0.5) / 1000000.0
                            AS DECIMAL(18,6)) AS DECIMAL(38,6)) END)
-                    AS DOUBLE) AS s,
+                    AS VARCHAR) AS DOUBLE) AS s,
                   count(*) AS nd, sum(c) AS n
                 FROM c GROUP BY 1)
           SELECT t.doc_id, CAST(coalesce(a.n, 0) AS BIGINT) AS n_tokens,
@@ -4170,8 +4170,8 @@ object SparkEntry {
     "t48_mixture_weights" -> {
       def wRound(t: Int): String =
         s"""b$t AS MATERIALIZED (
-             SELECT floor(CAST(sum(CAST(floor(w * loss * 100000000 + 0.5)
-                    / 100000000 AS DECIMAL(20,8))) AS DOUBLE)
+             SELECT floor(CAST(CAST(sum(CAST(floor(w * loss * 100000000 + 0.5)
+                    / 100000000 AS DECIMAL(20,8))) AS VARCHAR) AS DOUBLE)
                     * 1000000 + 0.5) / 1000000 AS b FROM w${t - 1}),
            r$t AS MATERIALIZED (
              SELECT source, loss,
@@ -4183,8 +4183,8 @@ object SparkEntry {
              FROM w${t - 1}),
            w$t AS MATERIALIZED (
              SELECT source, loss, excess,
-               floor(raw / (SELECT CAST(sum(CAST(raw AS DECIMAL(18,6)))
-                 AS DOUBLE) FROM r$t) * 1000000 + 0.5) / 1000000 AS w
+               floor(raw / (SELECT CAST(CAST(sum(CAST(raw AS DECIMAL(18,6)))
+                 AS VARCHAR) AS DOUBLE) FROM r$t) * 1000000 + 0.5) / 1000000 AS w
              FROM r$t)"""
       s"""WITH d AS (
             SELECT doc_id, ${toksSql(normSql)} AS toks FROM documents),
@@ -4208,13 +4208,13 @@ object SparkEntry {
                        < 'e666')),
           nll AS MATERIALIZED (
             SELECT doc_id,
-              floor((-CAST(sum(CAST(tf AS DECIMAL(9,0))
-                     * CAST(logp AS DECIMAL(18,6))) AS DOUBLE)
+              floor((-CAST(CAST(sum(CAST(tf AS DECIMAL(9,0))
+                     * CAST(logp AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                      / sum(tf)) * 10000.0 + 0.5) / 10000.0 AS mean_nll
             FROM scored GROUP BY doc_id),
           ls AS MATERIALIZED (
             SELECT dd.source,
-              floor(CAST(sum(CAST(mean_nll AS DECIMAL(18,4))) AS DOUBLE)
+              floor(CAST(CAST(sum(CAST(mean_nll AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
                 / count(*) * 1000000 + 0.5) / 1000000 AS loss
             FROM nll JOIN documents dd USING (doc_id) GROUP BY dd.source),
           w0 AS MATERIALIZED (
@@ -4311,7 +4311,7 @@ object SparkEntry {
     "q23_cube" ->
       """SELECT event_type, epoch_ms(date_trunc('hour', ts)) AS hb_ms,
          count(*) AS n,
-         floor(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
+         floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(value) * 10000 + 0.5) / 10000 AS avg_value,
          CAST(GROUPING(event_type) AS INTEGER) AS g_type,
          CAST(GROUPING(epoch_ms(date_trunc('hour', ts))) AS INTEGER) AS g_hour
          FROM events
@@ -4362,7 +4362,7 @@ object SparkEntry {
             FROM p LEFT JOIN train t USING (term) CROSS JOIN stats s),
           base AS (
             SELECT doc_id,
-              floor((-CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS DOUBLE)
+              floor((-CAST(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(logp AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                      / sum(tf)) * 10000.0 + 0.5) / 10000.0 AS mean_nll
             FROM scored GROUP BY doc_id),
           vals AS (
@@ -4520,7 +4520,7 @@ object SparkEntry {
     "c1_kmeans" ->
       s"""${kmeansA2Sql()}
          SELECT cid AS cluster_id, count(*) AS n_points,
-           floor(CAST(sum(CAST(floor(cos * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS DOUBLE)
+           floor(CAST(CAST(sum(CAST(floor(cos * 1000000 + 0.5) / 1000000 AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
                  / count(*) * 10000 + 0.5) / 10000 AS mean_cos
          FROM a2 GROUP BY cid ORDER BY cid""",
 
@@ -4746,7 +4746,7 @@ object SparkEntry {
       """SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n_events,
            CAST(count(k) AS BIGINT) AS n_parsed,
            min(k) AS v_min, max(k) AS v_max, CAST(sum(k) AS BIGINT) AS v_sum,
-           floor(CAST(sum(k) AS DOUBLE) / count(k) * 10000.0 + 0.5) / 10000.0 AS v_avg
+           floor(CAST(CAST(sum(k) AS VARCHAR) AS DOUBLE) / count(k) * 10000.0 + 0.5) / 10000.0 AS v_avg
          FROM (
            SELECT event_type,
              CAST(json_extract(props, '$.k') AS BIGINT) AS k
@@ -4859,8 +4859,8 @@ object SparkEntry {
     "q36_rollup_merge" ->
       """SELECT event_type, epoch_ms(date_trunc('hour', ts)) AS hb_ms,
            CAST(count(*) AS BIGINT) AS n,
-           round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_value,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*)
+           round(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE), 2) AS sum_value,
+           floor(CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / count(*)
              * 10000 + 0.5) / 10000 AS avg_value
          FROM events GROUP BY 1, 2 ORDER BY event_type, hb_ms""",
 
@@ -4917,9 +4917,9 @@ object SparkEntry {
            SELECT grp, CAST(count(*) AS BIGINT) AS n,
              CAST(count(*) - count(v) AS BIGINT) AS n_null,
              min(v) AS v_min, max(v) AS v_max,
-             CAST(sum(CAST(r AS DECIMAL(28,4))) AS DOUBLE) AS s,
-             CAST(sum(CAST(CAST(r AS DECIMAL(28,4)) * CAST(r AS DECIMAL(28,4))
-               AS DECIMAL(38,8))) AS DOUBLE) AS s2,
+             CAST(CAST(sum(CAST(r AS DECIMAL(28,4))) AS VARCHAR) AS DOUBLE) AS s,
+             CAST(CAST(sum(CAST(CAST(r AS DECIMAL(28,4)) * CAST(r AS DECIMAL(28,4))
+               AS DECIMAL(38,8))) AS VARCHAR) AS DOUBLE) AS s2,
              CAST(count(v) AS DOUBLE) AS nv,
              quantile_cont(r, 0.5) AS q50, quantile_cont(r, 0.9) AS q90
            FROM st GROUP BY grp)
@@ -5220,7 +5220,7 @@ object SparkEntry {
                    j -> struct_pack(d := j, x := x[j]))) AS u FROM a1)),
          cent AS (
            SELECT s, cid, d,
-             floor(CAST(sum(xq) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
+             floor(CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
            FROM comp GROUP BY s, cid, d),
          books AS (SELECT s, cid, list(cx ORDER BY d) AS c FROM cent GROUP BY s, cid),
          codes AS (
@@ -5268,7 +5268,7 @@ object SparkEntry {
             FROM (SELECT unnest(list_transform(range(1, len(v) + 1),
                     j -> struct_pack(d := j, x := v[j]))) AS u FROM e)),
           cen AS (SELECT list(cx ORDER BY d) AS c FROM
-            (SELECT d, ${fr6("CAST(sum(xq) AS DOUBLE) / count(*)")} AS cx
+            (SELECT d, ${fr6("CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*)")} AS cx
              FROM comp GROUP BY d)),
           r AS (SELECT vec_id, v, ${fr6(cosS("v", "c"))} AS rel FROM e CROSS JOIN cen)"""
     val iters = (1 to k).map { i =>
@@ -5377,7 +5377,7 @@ object SparkEntry {
         v$r AS (
           SELECT piece, cnt,
             floor(ln(CAST(cs AS DOUBLE) /
-              (SELECT CAST(sum(cs) AS DOUBLE) FROM $normSrc)) * 1000000.0 + 0.5)
+              (SELECT CAST(CAST(sum(cs) AS VARCHAR) AS DOUBLE) FROM $normSrc)) * 1000000.0 + 0.5)
               / 1000000.0 AS logp
           FROM $normSrc)"""
   }
@@ -5447,8 +5447,8 @@ object SparkEntry {
             CROSS JOIN stats s),
           agg AS (
             SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_feats,
-              floor(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(lr AS DECIMAL(18,6)))
-                    + (SELECT CAST(prior AS DECIMAL(18,6)) FROM stats) AS DOUBLE)
+              floor(CAST(CAST(sum(CAST(tf AS DECIMAL(9,0)) * CAST(lr AS DECIMAL(18,6)))
+                    + (SELECT CAST(prior AS DECIMAL(18,6)) FROM stats) AS VARCHAR) AS DOUBLE)
                     * 10000.0 + 0.5) / 10000.0 AS log_odds
             FROM scored GROUP BY doc_id),
           predd AS (
@@ -5581,7 +5581,7 @@ object SparkEntry {
             CAST(sum(s.np) AS BIGINT) AS n_pieces,
             CAST(sum(s.unk) AS BIGINT) AS n_unk_words,
             CASE WHEN count(*) - sum(s.unk) > 0
-              THEN floor(CAST(sum(s.np) AS DOUBLE)
+              THEN floor(CAST(CAST(sum(s.np) AS VARCHAR) AS DOUBLE)
                 / CAST(count(*) - sum(s.unk) AS DOUBLE) * 10000.0 + 0.5)
                 / 10000.0
               ELSE NULL END AS pieces_per_word
@@ -5619,7 +5619,7 @@ object SparkEntry {
           v0 AS (
             SELECT piece,
               floor(ln(CAST(cnt AS DOUBLE) /
-                (SELECT CAST(sum(cnt) AS DOUBLE) FROM seed)) * 1000000.0 + 0.5)
+                (SELECT CAST(CAST(sum(cnt) AS VARCHAR) AS DOUBLE) FROM seed)) * 1000000.0 + 0.5)
                 / 1000000.0 AS logp
             FROM seed),
           wp AS (SELECT DISTINCT word, piece FROM subs),
@@ -5658,7 +5658,7 @@ object SparkEntry {
                    j -> struct_pack(d := j, x := v[j]))) AS u FROM a1)),
          cent AS (
            SELECT cid, d,
-             floor(CAST(sum(xq) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
+             floor(CAST(CAST(sum(xq) AS VARCHAR) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS cx
            FROM comp GROUP BY cid, d),
          cent2 AS (SELECT cid, list(cx ORDER BY d) AS c FROM cent GROUP BY cid),
          a2 AS (

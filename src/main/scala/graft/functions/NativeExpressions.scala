@@ -595,11 +595,14 @@ object NativeKernels {
     *  - token lengths count CODE POINTS (Spark `length`).
     *  - marker hits compare each token LOWERCASED against the marker
     *    lists (`tokens(lower(s))` — lowercasing never creates or
-    *    removes whitespace, so token boundaries are unchanged); an
-    *    all-ASCII token lowercases bytewise, any non-ASCII token takes
-    *    the exact slow path (UTF8String.toLowerCase — Spark's own
-    *    `lower`), so exotic case foldings (U+212A KELVIN SIGN → 'k')
-    *    agree with the expression form.
+    *    removes whitespace, so token boundaries are unchanged). The
+    *    case mapping follows `lower`'s own (UTF8String.toLowerCase):
+    *    tokens of an all-ASCII STRING lowercase bytewise; when any byte
+    *    of the string is non-ASCII, every token — ASCII ones included —
+    *    lowercases as its slow path does, with the default-locale
+    *    `String.toLowerCase`. So exotic case foldings (U+212A KELVIN
+    *    SIGN → 'k') and locale ones (Turkish 'I' → dotless 'ı') agree
+    *    with the expression form.
     *  - n_punct / n_digit count `[.,;:!?]` / `[0-9]` code points over
     *    the RAW (untrimmed) string — the `matchCount` length-difference
     *    arithmetic; n_chars = `length(s)` of the raw string.
@@ -610,9 +613,11 @@ object NativeKernels {
     var nChars = 0
     var nPunct = 0L
     var nDigit = 0L
+    var ascii = true
     var i = 0
     while (i < n) {
       val c = b(i) & 0xff
+      if (c >= 0x80) ascii = false
       if ((c & 0xc0) != 0x80) nChars += 1
       if (c >= '0' && c <= '9') nDigit += 1
       else if (c == '.' || c == ',' || c == ';' || c == ':' || c == '!' || c == '?')
@@ -632,12 +637,9 @@ object NativeKernels {
     def emit(start: Int, end: Int): Unit = {
       nTok += 1
       var len = 0
-      var ascii = true
       var j = start
       while (j < end) {
-        val c = b(j) & 0xff
-        if ((c & 0xc0) != 0x80) len += 1
-        if (c >= 0x80) ascii = false
+        if ((b(j) & 0xc0) != 0x80) len += 1
         j += 1
       }
       sumLen += len
@@ -663,8 +665,9 @@ object NativeKernels {
           set += 1
         }
       } else if (!ascii) {
-        // exact slow path: Spark's own lower(), equality on UTF8String
-        val low = UTF8String.fromBytes(b, start, byteLen).toLowerCase
+        // exact slow path: lower()'s toLowerCaseSlow, equality on UTF8String
+        val low = UTF8String.fromString(
+          UTF8String.fromBytes(b, start, byteLen).toString.toLowerCase)
         var set = 0
         while (set < 4) {
           val ms = MarkerU8(set)

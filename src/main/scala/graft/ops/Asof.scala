@@ -67,8 +67,8 @@ object Asof {
       return asofJoinComposed(left, r2, keys, leftTimeCol,
         rightTimeCol + rightSuffix, rightSuffix)
     val node = AsofJoin(
-      GraftSqlBridge.analyzedPlan(left),
-      GraftSqlBridge.analyzedPlan(r2),
+      left.queryExecution.analyzed,
+      r2.queryExecution.analyzed,
       keys.map { case (lk, _) => attr(left, lk) },
       keys.map { case (_, rk) => attr(r2, rk + rightSuffix) },
       attr(left, leftTimeCol),

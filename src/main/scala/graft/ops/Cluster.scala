@@ -314,11 +314,7 @@ object Cluster {
 
   def kmeansAssign(embs: DataFrame, vecCol: String, idCol: String,
                    k: Int, iters: Int = 1): DataFrame = {
-    // Par.widen: fit runs one assignment scan per Lloyd round and the
-    // final assignment is another — all over this projection; a
-    // single-row-group input otherwise runs every scan on 1-2 tasks
-    // (the s7/s8 artifact). Slim (id, vector) rows, cheap exchange.
-    val points = Par.widen(embs).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val points = embs.select(col(idCol).as("id"), col(vecCol).as("v"))
     assign(points, "v", fit(points, k, iters))
       .select(col("id"), col("cluster_id"), col("cos"))
   }
@@ -442,8 +438,7 @@ object Cluster {
     require(blockProbes >= 1 && blockProbes <= cents.size,
       s"blockProbes must be in [1, k], got $blockProbes (k = ${cents.size})")
     val dot = Native.dotOf(delta)
-    val dpoints = Par.widen(delta)
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
+    val dpoints = delta.select(col(idCol).as("id"), col(vecCol).as("v"))
     val probe = probeBlocks(dpoints, cents, blockProbes)
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     // index home rows ride AS PERSISTED (one row per point); delta
@@ -602,14 +597,7 @@ object Cluster {
     val spark = embs.sparkSession
     import spark.implicits._
     val cos = cosOf
-    // Par.widen: the persisted scored table below inherits THIS
-    // partitioning, and every one of the k sequential argmax scans
-    // reads it — a single-row-group input otherwise runs all k scans
-    // on 1–2 tasks (the s7 artifact; measured r15 at sf1 as the s8
-    // wall). The one-off exchange ships slim (id, vector) rows and is
-    // amortized across the k cached scans.
-    val pts = Par.widen(embs)
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    val pts = embs.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // global decimal-exact mean vector: dim rows of driver state
     val cen: Array[Double] = pts
       .select(posexplode(col("v")).as(Seq("d", "x")))

@@ -221,20 +221,15 @@ object Curation {
     // same way (IEEE nearest-even) in every engine, the division is
     // an exact power-of-two scale
     val u = (h + lit(1L)).cast("double") / lit(1152921504606846976.0)
-    // Par.widen: the weight expression callers pass is typically the
-    // operator's dominant cost (t31's qualityScore — 4 regex splits +
-    // 2 regexp_replace per row), and a single-row-group input
-    // otherwise evaluates it on one scan split (measured r15 at sf1:
-    // one 5.5 s two-task job on a 32-slot session).
-    val wide = Par.widen(df)
     if (Native.enabled(df, "graft_topk")) {
       // The weight>0 cut is folded into skey as a NULL (graft_topk
       // skips null scores — row-identical to the filter) instead of a
       // separate Filter: a deterministic filter on the derived weight
-      // column is pushed below the widening exchange and re-evaluates
-      // the full weight expression on the narrow scan split (§4.4's
-      // duplicate-evaluation, measured as the t31 wall).
-      val scored = wide
+      // column is pushed below the corpus loader's parallelism-floor
+      // exchange and re-evaluates the full weight expression on the
+      // narrow scan split (§4.4's duplicate-evaluation, measured as the
+      // t31 wall).
+      val scored = df
         .select(col(groupCol).as("grp"), col(idCol).as("id"),
           when(col(weightCol) > 0.0, fround(log(u), 6) / col(weightCol))
             .as("skey"))
@@ -244,7 +239,7 @@ object Curation {
         .select(col("grp"), (col("pos") + 1).cast("int").as("rank"),
           col("col.id").as("id"), fround(col("col.score"), 6).as("skey"))
     } else {
-      val scored = wide
+      val scored = df
         .filter(col(weightCol) > 0.0)
         .select(col(groupCol).as("grp"), col(idCol).as("id"),
           (fround(log(u), 6) / col(weightCol)).as("skey"))
@@ -802,9 +797,7 @@ object Curation {
     // scrub → split CHAIN map-only with the needed columns carried
     // through (`passthrough`). Output identical row-for-row — the
     // same verdicts on the same texts — under the same oracle.
-    // Par.widen: fingerprint + the downstream quality/scrub chain are
-    // map-heavy — keep them off a single scan split (see Par.widen)
-    val fpd = Par.widen(docs).select(col(idCol), col(langCol), col(textCol),
+    val fpd = docs.select(col(idCol), col(langCol), col(textCol),
       md5(Native.normOf(docs)(col(textCol))).as("graft_fp"))
     val canon = fpd.groupBy("graft_fp").agg(min(col(idCol)).as(idCol))
       .select(col(idCol))
@@ -849,11 +842,6 @@ object Curation {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val norm = Native.normOf(docs)
     val fold = Native.md5FoldOf(docs)
-    // no widen: the feature pass runs ONCE (posts is persisted below),
-    // so the raw-text exchange a widen inserts costs more than the
-    // narrow-split fraction it parallelizes (measured r15 at sf1:
-    // 1.55 -> 1.76 s with it; contrast heavyHitters, whose token
-    // stream feeds three passes and keeps its widen)
     val toks = docs.withColumn("graft_norm", norm(col(textCol)))
       .select(col(idCol).as("doc_id"), targetFilter.as("is_target"),
         text.tokens(col("graft_norm")).as("toks"))
@@ -943,7 +931,6 @@ object Curation {
                       extras: Seq[(String, Column)]): DataFrame = {
     val norm = Native.normOf(df)
     val fold = Native.md5FoldOf(df)
-    // no widen: single persisted feature pass — see dsirWeights
     val toks = df.withColumn("graft_norm", norm(col(textCol)))
       .select(col(idCol).as("doc_id") +: extras.map { case (n, c) => c.as(n) } :+
         text.tokens(col("graft_norm")).as("toks"): _*)
@@ -1218,9 +1205,7 @@ object Curation {
         col(idCol).cast("long")
       case _ => col(idCol)
     }
-    // Par.widen: callers pass computed score expressions (t43's
-    // qualityScore) whose evaluation must not run on one scan split
-    val scored = Par.widen(df).select(col(groupCol).as("grp"),
+    val scored = df.select(col(groupCol).as("grp"),
       idExpr.as("id"),
       col(scoreCol).cast("double").as("score"))
     if (Native.enabled(df, "graft_topk")) {
@@ -1280,9 +1265,7 @@ object Curation {
         p => trim(p)),
       p => p =!= "")
     val pass = passthrough.map(col)
-    // Par.widen: the per-doc paragraph sort/dedup transforms are the
-    // map-heavy stage — keep them off a single scan split
-    Par.widen(df).select(col(idCol).as("doc_id") +: paras.as("paras") +: pass: _*)
+    df.select(col(idCol).as("doc_id") +: paras.as("paras") +: pass: _*)
       // (paragraph, 1-based position) structs sorted by (p, i):
       // duplicates become ADJACENT and each group's head carries the
       // group's smallest position — first occurrence without the
@@ -1539,7 +1522,7 @@ object Curation {
     * Output: (doc_id, contaminated 0/1, n_eval_matches, max_cosine
     * 4dp — NULL for clean rows) over every train id.
     */
-  def decontaminateByEmbedding(embs0: DataFrame, vecCol: String, idCol: String,
+  def decontaminateByEmbedding(embs: DataFrame, vecCol: String, idCol: String,
                                evalFilter: Column, threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
                                seed: Long = 42L,
@@ -1547,7 +1530,6 @@ object Curation {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val embs = Par.widen(embs0)
     val nPlanes =
       if (numPlanes > 0) numPlanes
       else bands * graft.ops.Similarity.autoBandBits(embs.count(), bands)

@@ -270,9 +270,7 @@ object Dedup {
       else hashing.charShingleHashes(col("norm"), shingleK)
     // Hash arrays are sorted once per doc so the pairwise verify can
     // use the allocation-free two-pointer intersect kernel.
-    // Par.widen: shingling + 128 minhashes per doc is the map-heavy
-    // stage — a single-row-group input must not run it on one core.
-    val hashed = Par.widen(docs)
+    val hashed = docs
       .select(col(idCol).as("id"), Native.normOf(docs)(col(textCol)).as("norm"))
       .select(col("id"), array_sort(shingles).as("hs"))
     // Signature per doc. Native path: one compiled O(shingles·perms)
@@ -485,7 +483,7 @@ object Dedup {
     // the kernel vs the hex-string conv chain of the expression form —
     // values identical either way (same fingerprints, oracle unchanged)
     val fold = Native.md5FoldOf(docs)
-    val hashed = Par.widen(docs).select(col(idCol).as("id"),
+    val hashed = docs.select(col(idCol).as("id"),
         transform(text.tokens(Native.normOf(docs)(col(textCol))),
           e => fold(e)).as("th"))
       .filter(size(col("th")) > 0)
@@ -556,12 +554,11 @@ object Dedup {
     * prefilter (J <= min/max of gram counts) still rides the
     * candidate join unchanged.
     */
-  def ngramJaccardPairs(docs0: DataFrame, textCol: String, idCol: String,
+  def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         blockCol: Column, n: Int = 3,
                         threshold: Double = 0.4,
                         verifyBroadcast: Option[Boolean] = None,
                         prefixFilter: Boolean = true): DataFrame = {
-    val docs = Par.widen(docs0)
     // Staged normalize → tokens → grams → hashes (per-element lambdas
     // must see attributes — see wordNgramsOfTokens scaladoc). Grams
     // are hashed to longs once per doc (set-isomorphic, so the Jaccard
@@ -684,14 +681,13 @@ object Dedup {
     * (`prefixFilter = false`, the measured ×33-at-sf1 scale-killer)
     * is kept as the A/B twin; OperatorSpec asserts path equality.
     */
-  def containmentPairs(docs0: DataFrame, textCol: String, idCol: String,
+  def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        blockCol: Column, n: Int = 3,
                        threshold: Double = 0.8,
                        verifyBroadcast: Option[Boolean] = None,
                        prefixFilter: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val docs = Par.widen(docs0)
     val prepared =
       if (Native.enabled(docs, "graft_ngram_hashes"))
         docs.select(col(idCol).as("id"), blockCol.as("block"),
@@ -761,9 +757,8 @@ object Dedup {
   /** Embedding-cosine near-dup pairs within a blocking column (e.g.
     * a cluster/label id): pairs with cosine >= threshold.
     */
-  def embeddingNearDupPairs(embs0: DataFrame, vecCol: String, idCol: String,
+  def embeddingNearDupPairs(embs: DataFrame, vecCol: String, idCol: String,
                             blockCol: String, threshold: Double): DataFrame = {
-    val embs = Par.widen(embs0)
     import graft.functions.vectors
     // Norms are computed once per row before the pair join — the
     // per-pair work is then a single dot product (not dot + 2 norms).
@@ -820,12 +815,11 @@ object Dedup {
     * lifetime (the lazy result can't know when its consumer is done),
     * same contract as [[minhashPairs]].
     */
-  def embeddingNearDupPairsLsh(embs0: DataFrame, vecCol: String, idCol: String,
+  def embeddingNearDupPairsLsh(embs: DataFrame, vecCol: String, idCol: String,
                                threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
                                seed: Long = 42L,
                                verifyBroadcast: Option[Boolean] = None): DataFrame = {
-    val embs = Par.widen(embs0)
     // bands is validated FIRST: the modulo below would otherwise throw
     // a bare ArithmeticException (/ by zero) for bands = 0 instead of
     // the intended message
@@ -926,7 +920,7 @@ object Dedup {
     * Output (1 row): (sample_vecs, n_true_pairs, n_candidates,
     * n_banded_true, recall 4dp).
     */
-  def embeddingBandingRecall(embs0: DataFrame, vecCol: String, idCol: String,
+  def embeddingBandingRecall(embs: DataFrame, vecCol: String, idCol: String,
                              threshold: Double, dim: Int,
                              numPlanes: Int = 24, bands: Int = 6,
                              seed: Long = 42L, salt: String = "graft",
@@ -937,7 +931,6 @@ object Dedup {
     require(numPlanes >= 1 && numPlanes % bands == 0 && numPlanes <= 63,
       s"numPlanes ($numPlanes) must be in [1, 63] and a multiple of bands ($bands)")
     import graft.functions.vectors
-    val embs = Par.widen(embs0)
     val planes = Similarity.hyperplanes(numPlanes, dim, seed)
     val bitsPerBand = numPlanes / bands
     val dotOf = Native.dotOf(embs)
@@ -1033,7 +1026,7 @@ object Dedup {
                          chunkTokens: Int): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
     import graft.functions.text
-    Par.widen(docs)
+    docs
       .select(col(idCol).as("doc_id"),
         text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
       .withColumn("n", size(col("toks")))
@@ -1301,11 +1294,8 @@ object Dedup {
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
     val rowsPerBand = numPerm / nBands
-    // staged selects so every HOF lambda sees attributes; Par.widen —
-    // the per-doc md5-fold of every shingle plus the interpreted
-    // minhash mix is the map-heavy stage, and a few-row-group input
-    // must not run it (or stream the truth join) on a few cores
-    val normed = Par.widen(docs).select(col(idCol).as("id"),
+    // staged selects so every HOF lambda sees attributes
+    val normed = docs.select(col(idCol).as("id"),
       Native.normOf(docs)(col(textCol)).as("nrm"))
     val sampledPlan = normed
       .where(substring(md5(concat(md5(col("nrm")), lit(":"), lit(salt))), 1, 4)

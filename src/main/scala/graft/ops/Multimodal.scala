@@ -305,7 +305,7 @@ object Multimodal {
                           divisor: Int = 16, maxDf: Int = 20): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val chunks0 = cdcChunks(Par.widen(df), payloadCol, idCol, window, divisor)
+    val chunks0 = cdcChunks(df, payloadCol, idCol, window, divisor)
     // the chunk table feeds four subplans (sets, the index, both join
     // legs) — without the persist the byte-level chunking re-runs per
     // consumer (sweep via GraftSession.sweep in long-lived sessions)

@@ -47,9 +47,8 @@ object Similarity {
     * Probes must be small enough to broadcast (they are, by contract:
     * a query workload, not the corpus).
     */
-  def bruteForceTopK(corpus0: DataFrame, probes: DataFrame,
+  def bruteForceTopK(corpus: DataFrame, probes: DataFrame,
                      vecCol: String, idCol: String, k: Int): DataFrame = {
-    val corpus = Par.widen(corpus0)
     val dot = Native.dotOf(corpus)
     // Norms computed once per probe / corpus row, not once per pair.
     val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
@@ -74,9 +73,8 @@ object Similarity {
     * a pure map over the corpus scan with no shuffle, no window, no
     * top-k state. Emits (query_id, neighbor_id, cosine 4dp).
     */
-  def rangeSearch(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def rangeSearch(corpus: DataFrame, probes: DataFrame, vecCol: String,
                   idCol: String, minCosine: Double): DataFrame = {
-    val corpus = Par.widen(corpus0)
     val dot = Native.dotOf(corpus)
     val p = probes.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       sqrt(dot(col(vecCol), col(vecCol))).as("qn"))
@@ -112,10 +110,9 @@ object Similarity {
     * shuffle each; empty clusters keep their previous centroid). With
     * nProbe = numCentroids the result equals bruteForceTopK exactly.
     */
-  def ivfTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def ivfTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
               idCol: String, k: Int, numCentroids: Int = 16,
               nProbe: Int = 4, kmeansIters: Int = 0): DataFrame = {
-    val corpus = Par.widen(corpus0)
     val dot = Native.dotOf(corpus)
     // tiny deterministic centroid table → driver (numCentroids rows)
     var cents: Array[Array[Float]] = corpus
@@ -228,12 +225,11 @@ object Similarity {
     * planes at 37× wall for 10× rows). Pass an explicit value to pin
     * the layout, as the oracle-replicated s2 query does.
     */
-  def lshTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def lshTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
               idCol: String, k: Int, dim: Int,
               numPlanes: Int = 0, bands: Int = 4,
               probeRadius: Int = 1): DataFrame = {
     require(probeRadius >= 0 && probeRadius <= 1, "probeRadius must be 0 or 1")
-    val corpus = Par.widen(corpus0)
     val nPlanes =
       if (numPlanes > 0) numPlanes
       else bands * autoBandBits(corpus.count(), bands)
@@ -301,12 +297,11 @@ object Similarity {
     * Output: (id, rank, neighbor_id, cosine 4dp), rank 1..<=k by
     * (cosine desc, neighbor_id).
     */
-  def knnGraph(corpus0: DataFrame, vecCol: String, idCol: String, k: Int,
+  def knnGraph(corpus: DataFrame, vecCol: String, idCol: String, k: Int,
                dim: Int, numPlanes: Int = 0, bands: Int = 6,
                seed: Long = 42L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(bands >= 1, s"bands must be >= 1, got $bands")
-    val corpus = Par.widen(corpus0)
     val nPlanes =
       if (numPlanes > 0) numPlanes
       else bands * autoBandBits(corpus.count(), bands)
@@ -477,14 +472,14 @@ object Similarity {
     * Output (query_id, rank, neighbor_id, cosine 4dp) — s1's shape, so
     * [[recallAtK]] composes directly.
     */
-  def pqRerankTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def pqRerankTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
                    idCol: String, k: Int, candidates: Int = 50,
                    subspaces: Int = 8, codebookSize: Int = 64,
                    lloydIters: Int = 1): DataFrame = {
     require(candidates >= k,
       s"candidates ($candidates) must be >= k ($k)")
-    exactRerank(corpus0, probes, vecCol, idCol, k,
-      pqTopK(corpus0, probes, vecCol, idCol, candidates,
+    exactRerank(corpus, probes, vecCol, idCol, k,
+      pqTopK(corpus, probes, vecCol, idCol, candidates,
         subspaces, codebookSize, lloydIters))
   }
 
@@ -499,15 +494,15 @@ object Similarity {
     * recovers brute force exactly (both degradations spec-asserted
     * separately; the composition inherits them).
     */
-  def ivfPqRerankTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def ivfPqRerankTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
                       idCol: String, k: Int, candidates: Int = 50,
                       numCentroids: Int = 16, nProbe: Int = 4,
                       subspaces: Int = 8, codebookSize: Int = 64,
                       lloydIters: Int = 1): DataFrame = {
     require(candidates >= k,
       s"candidates ($candidates) must be >= k ($k)")
-    exactRerank(corpus0, probes, vecCol, idCol, k,
-      ivfPqTopK(corpus0, probes, vecCol, idCol, candidates,
+    exactRerank(corpus, probes, vecCol, idCol, k,
+      ivfPqTopK(corpus, probes, vecCol, idCol, candidates,
         numCentroids, nProbe, subspaces, codebookSize, lloydIters))
   }
 
@@ -517,11 +512,10 @@ object Similarity {
     * scan, so the full-precision fetch is a map-side semi-join with
     * no corpus shuffle.
     */
-  private def exactRerank(corpus0: DataFrame, probes: DataFrame,
+  private def exactRerank(corpus: DataFrame, probes: DataFrame,
                           vecCol: String, idCol: String, k: Int,
                           candidates0: DataFrame): DataFrame = {
     val cand = candidates0.select(col("query_id"), col("neighbor_id"))
-    val corpus = Par.widen(corpus0)
     val dot = Native.dotOf(corpus)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       sqrt(dot(col(vecCol), col(vecCol))).as("cn"))
@@ -535,10 +529,10 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  def pqTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def pqTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
              idCol: String, k: Int, subspaces: Int = 8,
              codebookSize: Int = 64, lloydIters: Int = 1): DataFrame = {
-    val parts = pqParts(Par.widen(corpus0), probes, vecCol, idCol,
+    val parts = pqParts(corpus, probes, vecCol, idCol,
       subspaces, codebookSize, lloydIters)
     val scored = parts.encoded.crossJoin(broadcast(parts.pt))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -792,14 +786,13 @@ object Similarity {
     * Output (query_id, rank, neighbor_id, adist) — s7's shape, so
     * [[recallAtK]] and the rerank pattern compose directly.
     */
-  def ivfPqTopK(corpus0: DataFrame, probes: DataFrame, vecCol: String,
+  def ivfPqTopK(corpus: DataFrame, probes: DataFrame, vecCol: String,
                 idCol: String, k: Int, numCentroids: Int = 16,
                 nProbe: Int = 4, subspaces: Int = 8,
                 codebookSize: Int = 64, lloydIters: Int = 1): DataFrame = {
     require(numCentroids >= 1, s"numCentroids must be >= 1, got $numCentroids")
     require(nProbe >= 1 && nProbe <= numCentroids,
       s"nProbe must be in [1, numCentroids], got $nProbe (numCentroids = $numCentroids)")
-    val corpus = Par.widen(corpus0)
     val dot = Native.dotOf(corpus)
     // coarse quantizer: the s3 deterministic hash-order sample —
     // tiny driver-side table (numCentroids rows), oracle-replicable
@@ -888,7 +881,7 @@ object Similarity {
                      numCentroids: Int, kmeansIters: Int = 1): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val points = Par.widen(corpus).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val points = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val cents = Cluster.fit(points, numCentroids, kmeansIters)
     require(cents.nonEmpty, "ivfIndexTables: corpus is empty — nothing to fit")
     val assigned = Cluster.assign(points, "v", cents)
@@ -950,7 +943,7 @@ object Similarity {
         s"train_cos_q05 values (${q05s.sorted.take(4).mkString(", ")}…) — " +
         "index-level state must be uniform across centroid rows")
     val q05 = q05s.head
-    val points = Par.widen(delta).select(col(idCol).as("id"), col(vecCol).as("v"))
+    val points = delta.select(col(idCol).as("id"), col(vecCol).as("v"))
     Cluster.assign(points, "v", cents)
       .select(col("id"), col("cluster_id"), col("cos"),
         (graft.functions.num.fround(col("cos"), 4) < lit(q05)).as("stale"))

@@ -36,9 +36,6 @@ object TextAnalysis {
     */
   def qualityScores(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     if (Native.enabled(docs, "graft_text_stats"))
-      // no widen here: the kernel pass is cheap enough that the widen
-      // exchange (raw text) costs more than it parallelizes (measured
-      // r15: t27's persisted scoring pass 0.5 -> 1.6 s with it)
       docs
         .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
         .select(col(idCol).as("doc_id"),
@@ -46,7 +43,7 @@ object TextAnalysis {
           col("graft_stats.n_punct").as("n_punct"),
           coalesce(col("graft_stats.hits_en"), lit(0L)).as("n_stopwords"),
           text.qualityScoreFromStats(col(textCol), col("graft_stats")).as("quality"))
-    else Par.widen(docs).select(col(idCol).as("doc_id"),
+    else docs.select(col(idCol).as("doc_id"),
       text.tokenCount(col(textCol)).as("n_tokens"),
       text.punctCount(col(textCol)).as("n_punct"),
       text.markerHits(col(textCol), text.EnMarkers).as("n_stopwords"),
@@ -100,10 +97,7 @@ object TextAnalysis {
     require(capacity >= phiDenom,
       s"capacity ($capacity) must be >= phiDenom ($phiDenom) for the superset guarantee")
     val spark = docs.sparkSession
-    // Par.widen: the token stream feeds three consumers (sketch, total,
-    // recount), each a map-heavy tokenize pass that must not run on a
-    // single scan split (the s7 artifact; see Par.widen)
-    val toks = Par.widen(docs).select(
+    val toks = docs.select(
       explode(text.tokens(Native.normOf(docs)(col(textCol)))).as("term"))
     import org.apache.spark.sql.{Encoders, Row}
     val candidates = toks.mapPartitions { it =>
@@ -191,11 +185,10 @@ object TextAnalysis {
     * exact integer counts, identically associated in the oracle
     * (`cp·N·N / (M·ca·cb)`), then the t18 6dp-floor-rounded ln.
     */
-  def pmiPairs(docs0: DataFrame, textCol: String, window: Int = 3,
+  def pmiPairs(docs: DataFrame, textCol: String, window: Int = 3,
                minCount: Long = 5L, topN: Int = 50): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    val docs = Par.widen(docs0)
     // the tokenize pass feeds THREE consumers (pairs, unigram counts,
     // token total) — persist it or the regex normalization runs per
     // consumer (the Curation.seqPack precedent)
@@ -256,9 +249,8 @@ object TextAnalysis {
     * frame from the bounded totals table. Output: (grp_a, grp_b,
     * n_a = |G_A|, n_shared, containment 4dp) for every A ≠ B.
     */
-  def sourceOverlap(docs0: DataFrame, textCol: String, groupCol: String,
+  def sourceOverlap(docs: DataFrame, textCol: String, groupCol: String,
                     n: Int = 3): DataFrame = {
-    val docs = Par.widen(docs0)
     val prepared =
       if (Native.enabled(docs, "graft_ngram_hashes"))
         docs.select(col(groupCol).as("grp"),
@@ -679,9 +671,7 @@ object TextAnalysis {
   def lmScore(train: DataFrame, docs: DataFrame, textCol: String, idCol: String,
               alpha: Double = 0.5, broadcastModel: Boolean = true): DataFrame = {
     val norm = Native.normOf(docs)
-    // Par.widen per tokenize leg: see lmScoreBigram — the map-heavy
-    // normalize/split/explode stage must not run on one scan split
-    def tokenStream(df: DataFrame) = Par.widen(df)
+    def tokenStream(df: DataFrame) = df
       .withColumn("graft_norm", norm(col(textCol)))
       .select(col(idCol).as("doc_id"), explode(text.tokens(col("graft_norm"))).as("term"))
     def postings(df: DataFrame) = tokenStream(df)
@@ -750,12 +740,7 @@ object TextAnalysis {
     def staged(df: DataFrame): DataFrame =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val norm = Native.normOf(docs)
-    // Par.widen on each tokenize leg: the normalize + split + explode
-    // pass is the operator's map-heavy stage, and a single-row-group
-    // input otherwise runs it on one scan split (measured r15 at sf1:
-    // the two train legs were 6.7 s + 6.2 s TWO-task jobs on a
-    // 32-slot session — the s7 artifact, §2.6/Par.widen scaladoc)
-    def toks(df: DataFrame) = Par.widen(df)
+    def toks(df: DataFrame) = df
       .withColumn("graft_norm", norm(col(textCol)))
       .select(col(idCol).as("doc_id"), text.tokens(col("graft_norm")).as("toks"))
     def bigramStream(df: DataFrame) = toks(df)
@@ -846,9 +831,7 @@ object TextAnalysis {
     // corpus stats via ONE graft_text_stats pass when available: the
     // full tokenize re-ran just for avg(dl) otherwise (the n_tokens
     // field equals size(tokens) for every input; null text coalesces
-    // to 0 exactly as size(tokens(null)) = 0). A widen here measured
-    // NET-NEGATIVE (the raw-text exchange costs ~1 s at sf1, more
-    // than the narrow tokenize it parallelizes) — reverted r15.
+    // to 0 exactly as size(tokens(null)) = 0).
     val stats =
       if (Native.enabled(docs, "graft_text_stats"))
         docs.select(coalesce(call_function("graft_text_stats",
@@ -978,6 +961,10 @@ object TextAnalysis {
     * window buffer is small and the partition key is
     * high-cardinality — the scale-safe window case.
     *
+    * The postings feed two consumers and are persisted
+    * `MEMORY_AND_DISK`; they stay cached until `GraftSession.sweep`
+    * releases them.
+    *
     * FP determinism: idf floor-rounds to 6dp (ln ulp guard), the
     * tf·idf product floor-rounds to 4dp, and ranking orders by the
     * ROUNDED score with term-ASC tie-break — engine-portable.
@@ -988,11 +975,10 @@ object TextAnalysis {
     // postings feeds TWO consumers (the df rollup + the scoring join):
     // unpersisted, the tokenize + explode + per-doc agg pass — the
     // operator's dominant cost — runs once per consumer (measured r15
-    // at sf1: two ~2 s jobs for one logical pass). Par.widen keeps the
-    // map-heavy stage off a single scan split (the s7 artifact). The
-    // persisted table is the SLIM (doc, term, tf) postings — the
-    // d2-style staging persist.
-    val postingsPlan = Par.widen(docs)
+    // at sf1: two ~2 s jobs for one logical pass). The persisted table
+    // is the SLIM (doc, term, tf) postings — the d2-style staging
+    // persist.
+    val postingsPlan = docs
       .select(col(idCol).as("doc_id"),
         explode(text.tokens(norm(col(textCol)))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).cast("double").as("tf"))
@@ -1057,7 +1043,7 @@ object TextAnalysis {
     * in the double-separator string form.
     */
   private def bpeWordTable(docs: DataFrame, textCol: String): DataFrame = {
-    val plan = Par.widen(docs)
+    val plan = docs
       .select(explode(text.tokens(graft.ops.Native.normOf(docs)(col(textCol)))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
@@ -1369,9 +1355,9 @@ object TextAnalysis {
     * distinct normalized words grow with the corpus (Heaps' law) — so
     * it is never broadcast: its `freq` rides the (word, piece)
     * candidate table, which is always the PROBE side of the
-    * vocabulary broadcast join (`broadcastModel` keeps its contract on
-    * the apply side — [[tokenizerCost]]'s word-stat join-back — where
-    * the unbounded table is the build side). Seed selection is a
+    * vocabulary broadcast join (the `broadcastModel` knob lives on the
+    * apply side — [[tokenizerCost]]'s word-stat join-back — where the
+    * unbounded table is the build side). Seed selection is a
     * TakeOrdered top-k, never a global sort.
     *
     * Output: (piece, cnt, logp) after round `iters` — cnt the raw
@@ -1381,7 +1367,6 @@ object TextAnalysis {
   def unigramLmTrain(docs: DataFrame, textCol: String,
                      seedSize: Int = 512, maxPieceLen: Int = 4,
                      maxWordLen: Int = 16, iters: Int = 2,
-                     broadcastModel: Boolean = true,
                      vocabSize: Int = 0,
                      shrinkFactor: Double = 0.75): DataFrame = {
     // upper bound = the broadcast-relation class the driver-side model
@@ -1399,16 +1384,10 @@ object TextAnalysis {
     require(vocabSize >= 0, s"vocabSize must be >= 0, got $vocabSize")
     require(shrinkFactor > 0.0 && shrinkFactor < 1.0,
       s"shrinkFactor must be in (0, 1), got $shrinkFactor")
-    // broadcastModel kept for signature stability: since the r14
-    // driver-collapse the training rounds hold the vocabulary as a
-    // LocalRelation (always the folded build side), so the knob only
-    // has meaning on the APPLY side (segmentCostWithVocab)
-    val _ = broadcastModel
     def persist(df: DataFrame): DataFrame =
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the ONE corpus scan (Par.widen: its tokenize must not run on a
-    // single scan split); dictionary-sized from here on
-    val words = persist(Par.widen(docs)
+    // the ONE corpus scan; dictionary-sized from here on
+    val words = persist(docs
       .select(explode(text.tokens(
         graft.ops.Native.normOf(docs)(col(textCol)))).as("word"))
       .where(length(col("word")).between(1, maxWordLen))
@@ -1610,7 +1589,7 @@ object TextAnalysis {
     // the trained model — localCheckpointed by the trainer, so this
     // subtree is a bounded table, not a replay of the EM rounds
     val vocab = unigramLmTrain(docs.filter(trainFilter), textCol, seedSize,
-        maxPieceLen, maxWordLen, iters, broadcastModel)
+        maxPieceLen, maxWordLen, iters)
       .select("piece", "logp")
     segmentCostWithVocab(docs, textCol, idCol, vocab, maxPieceLen,
       maxWordLen, broadcastModel)
@@ -1629,9 +1608,6 @@ object TextAnalysis {
                                    maxPieceLen: Int, maxWordLen: Int,
                                    broadcastModel: Boolean): DataFrame = {
     // deliberately NOT persisted: corpus-scale — see "Scale shape".
-    // No widen either: A/B'd r15 — the raw-text exchange cost +0.4 s
-    // per query at sf0.1 against ~0.1 s at sf1 (the two consumers'
-    // tokenize passes are cheap relative to the exchange)
     val aw = docs.select(col(idCol).as("doc_id"),
       explode(text.tokens(
         graft.ops.Native.normOf(docs)(col(textCol)))).as("word"))
@@ -1703,14 +1679,12 @@ object TextAnalysis {
   def unigramFitModel(train: DataFrame, textCol: String,
                       seedSize: Int = 512, maxPieceLen: Int = 4,
                       maxWordLen: Int = 16, iters: Int = 2,
-                      broadcastModel: Boolean = true,
                       vocabSize: Int = 0,
                       shrinkFactor: Double = 0.75): DataFrame = {
     val spark = train.sparkSession
     import spark.implicits._
     val v = unigramLmTrain(train, textCol, seedSize, maxPieceLen,
-      maxWordLen, iters, broadcastModel,
-      vocabSize, shrinkFactor)
+      maxWordLen, iters, vocabSize, shrinkFactor)
     val cfg = Seq(
       (UniCfgPrefix + "max_piece_len", maxPieceLen.toLong, 0.0),
       (UniCfgPrefix + "max_word_len", maxWordLen.toLong, 0.0))

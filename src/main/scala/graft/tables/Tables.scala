@@ -38,6 +38,29 @@ final case class Tables(spark: SparkSession, dir: String) {
         raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
-  def documents: DataFrame  = load("documents")
-  def embeddings: DataFrame = load("embeddings")
+  def documents: DataFrame  = floored(load("documents"))
+  def embeddings: DataFrame = floored(load("embeddings"))
+
+  /** The parallelism floor for the two corpora the map-heavy operators
+    * (dedup, text, curation, ANN, clustering) read. A small parquet
+    * file is one row group, and a row group is one scan split whatever
+    * `files.minPartitionNum` asks for (see [[graft.GraftSession]]), so
+    * every pre-shuffle stage over such a file would run as one task
+    * (s7's sf1 scoring: 47 s on one core of 32). When the scan plans
+    * fewer partitions than the session's default parallelism, the
+    * loader repartitions it round-robin to that count, directly above
+    * the scan. An input large enough to matter already scans as that
+    * many splits and passes through untouched.
+    *
+    * The exchange sits below every expression a caller adds, so a
+    * caller's `rand()` or `monotonically_increasing_id()` sees the same
+    * partitions on every action. The star-schema tables and `events`
+    * keep their plans; streams and DataFrames callers build themselves
+    * get no floor — operators take their inputs as given.
+    */
+  private def floored(scan: DataFrame): DataFrame = {
+    val want = spark.sparkContext.defaultParallelism
+    if (scan.queryExecution.toRdd.getNumPartitions < want) scan.repartition(want)
+    else scan
+  }
 }

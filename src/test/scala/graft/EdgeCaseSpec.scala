@@ -103,59 +103,65 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(pairs.count() == 0)
   }
 
-  test("Par.widen floors parallelism through Union and Deduplicate chains") {
-    import graft.ops.Par
+  test("Tables floors the corpus scans' parallelism directly above the scan, and only those") {
+    import graft.tables.Tables
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec,
+      InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val want = spark.sparkContext.defaultParallelism
     // on a single-core runner (defaultParallelism == 1) the "under-
     // parallel scan" precondition cannot exist — cancel, don't fail
-    assume(want > 1, "widen is a no-op at defaultParallelism == 1")
-    val dir = java.nio.file.Files.createTempDirectory("widen").toString
-    // one tiny file = one row group = one scan split
-    Seq(1L, 2L, 3L).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-    val small = spark.read.parquet(dir)
-    assert(small.rdd.getNumPartitions < want, "precondition: under-parallel scan")
-    // a union of small scans inherits the children's splits — widened
-    val u = Par.widen(small.union(small))
-    assert(u.rdd.getNumPartitions >= want,
-      s"union-of-scans not widened: ${u.rdd.getNumPartitions} < $want")
-    // dropDuplicates over a scan — widened through the Deduplicate node
-    val d = Par.widen(small.dropDuplicates("id"))
-    assert(d.rdd.getNumPartitions >= want,
-      s"dedup-over-scan not widened: ${d.rdd.getNumPartitions} < $want")
-    assert(u.count() == 6 && d.count() == 3)
-    // explode over a scan — widened through the Generate node (the m5
-    // payload-variant shape: its widen call used to no-op here)
-    val g = Par.widen(small.select(explode(array(col("id"), col("id") + 10L)).as("v")))
-    assert(g.rdd.getNumPartitions >= want,
-      s"explode-over-scan not widened: ${g.rdd.getNumPartitions} < $want")
-    assert(g.count() == 6)
-  }
-
-  test("Par.widen keeps nondeterministic expressions above its repartition") {
-    import graft.ops.Par
-    val want = spark.sparkContext.defaultParallelism
-    assume(want > 1, "widen is a no-op at defaultParallelism == 1")
-    val dir = java.nio.file.Files.createTempDirectory("widen-nd").toString
-    // one tiny file = one row group = one scan split
-    (1L to 64L).toDF("id").coalesce(1).write.mode("overwrite").parquet(dir)
-    val small = spark.read.parquet(dir)
-    // rand and monotonically_increasing_id read the partition index, so
-    // evaluated below a reshuffle they would change value
-    val df = small.select(col("id"), rand(7).as("r"),
+    assume(want > 1, "the floor is a no-op at defaultParallelism == 1")
+    object Plan extends AdaptiveSparkPlanHelper
+    def exchanges(df: DataFrame): Seq[ShuffleExchangeExec] =
+      Plan.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case c: ColumnarToRowExec => unwrap(c.child)
+      case i: InputAdapter => unwrap(i.child)
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case other => other
+    }
+    def corpora(dir: String, files: Int): Unit = {
+      def write(df: DataFrame, name: String): Unit =
+        df.repartition(files).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      val ids = (1L to 64L).toDF("id")
+      write(ids.select(col("id").as("doc_id"),
+        concat(lit("doc "), col("id").cast("string")).as("text")), "documents")
+      write(ids.select(col("id").as("vec_id"),
+        array(col("id").cast("float"), lit(1f)).as("embedding")), "embeddings")
+      write(ids.select(col("id").as("event_id"),
+        timestamp_seconds(col("id")).as("ts")), "events")
+    }
+    // one tiny file per table = one row group = one scan split
+    val small = java.nio.file.Files.createTempDirectory("floor").toString
+    corpora(small, 1)
+    val t = Tables(spark, small)
+    for ((name, df) <- Seq("documents" -> t.documents, "embeddings" -> t.embeddings)) {
+      assert(df.rdd.getNumPartitions >= want, s"$name not floored")
+      val ex = exchanges(df)
+      assert(ex.size == 1 && ex.head.outputPartitioning.isInstanceOf[RoundRobinPartitioning],
+        s"$name: want one round-robin exchange, got ${ex.map(_.outputPartitioning)}")
+      assert(unwrap(ex.head.child).isInstanceOf[FileSourceScanExec],
+        s"$name: the exchange must sit directly on the scan:\n${ex.head}")
+      assert(df.count() == 64L)
+    }
+    assert(exchanges(t.events).isEmpty, "events must keep its plan")
+    // a corpus already written as defaultParallelism files passes through
+    val wide = java.nio.file.Files.createTempDirectory("floor-wide").toString
+    corpora(wide, want)
+    assert(exchanges(Tables(spark, wide).documents).isEmpty)
+    assert(exchanges(Tables(spark, wide).embeddings).isEmpty)
+    // nondeterministic expressions a caller projects over a floored scan
+    // read the same partitions on every action
+    val nd = t.documents.select(col("doc_id"), rand(7).as("r"),
       monotonically_increasing_id().as("mid"))
-    val w = Par.widen(df)
-    assert(w.rdd.getNumPartitions >= want, "precondition: the scan was widened")
     def byId(d: DataFrame) =
       d.collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
-    assert(byId(w) == byId(df), "widen changed nondeterministic values")
-    // same for a nondeterministic generator
-    val gen = small.select(col("id"), explode(array(rand(3), rand(4))).as("v"))
-    def valuesById(d: DataFrame) = d.collect().groupBy(_.getLong(0))
-      .map { case (k, rs) => k -> rs.map(_.getDouble(1)).sorted.toSeq }
-    val wg = Par.widen(gen)
-    assert(wg.rdd.getNumPartitions >= want, "precondition: the generator input was widened")
-    assert(valuesById(wg) == valuesById(gen),
-      "widen changed a nondeterministic generator's values")
+    val first = byId(nd)
+    assert(first.size == 64 && byId(nd) == first,
+      "rand / monotonically_increasing_id changed between actions")
   }
 
   test("round-7 operators tolerate degenerate inputs") {

@@ -540,8 +540,9 @@ class OperatorSpec extends AnyFunSuite {
     assert(planted.subsetOf(got),
       s"missed planted re-encodes: ${planted -- got}")
     // scale contract: the payload bytes never cross a KEYED exchange
-    // (Par.widen's conditional round-robin is the local small-scan
-    // parallelism floor — a no-op on an already-parallel cluster scan)
+    // (a round-robin one may appear: the `Tables.documents` loader's
+    // small-scan parallelism floor, a no-op on an already-parallel
+    // cluster scan)
     val plan = pairs.queryExecution.executedPlan.toString
     assert(!plan.linesIterator.filter(_.contains("hashpartitioning"))
       .exists(_.contains("payload")), s"payload must not hash-shuffle:\n$plan")

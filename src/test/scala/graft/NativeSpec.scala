@@ -385,4 +385,22 @@ class NativeSpec extends AnyFunSuite {
       !col("c5") || !col("c6") || !col("c7"))
     assert(bad.count() == 0, "field mismatch vs expression twins")
   }
+
+  test("graft_text_stats lowercases markers as lower() does under a tr-TR default locale") {
+    // lower() takes its bytewise ASCII path only when the WHOLE string
+    // is ASCII; otherwise it lowercases with the JVM default locale,
+    // where Turkish maps 'I' to dotless 'ı' — "IN" and "IS" then miss
+    import graft.ops.TextAnalysis
+    val docs = Seq((1L, "IN caf\u00e9 IS")).toDF("doc_id", "text")
+    def run() = TextAnalysis.qualityScores(docs, "text", "doc_id")
+      .select("n_stopwords", "quality").collect().toSeq
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      val native = run()
+      spark.conf.set("graft.native.disabled", "true")
+      val fallback = try run() finally spark.conf.unset("graft.native.disabled")
+      assert(native == fallback, s"kernel $native != fallback $fallback")
+    } finally java.util.Locale.setDefault(saved)
+  }
 }

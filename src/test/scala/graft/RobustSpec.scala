@@ -490,21 +490,14 @@ class RobustSpec extends AnyFunSuite {
     assert(key(full) == key(bf), "fully-degraded ivfpq rerank != brute force")
   }
 
-  test("t37/t38: broadcast and shuffle dictionary-join legs are row-identical") {
-    // the word-frequency (t37) and distinct-word (t38) tables GROW
-    // with the corpus (Heaps' law), so the 100 TB path is
-    // broadcastModel = false — a plain equi-join AQE plans. Both legs
-    // must be row-identical (the d2/d4 verify-join treatment; VERDICT
-    // r09 #1)
+  test("t38: broadcast and shuffle dictionary-join legs are row-identical") {
+    // the distinct-word (t38) table GROWS with the corpus (Heaps' law),
+    // so the 100 TB path is broadcastModel = false — a plain equi-join
+    // AQE plans. Both legs must be row-identical (the d2/d4 verify-join
+    // treatment; VERDICT r09 #1)
     import graft.ops.TextAnalysis
     val train = substring(md5(concat(col("doc_id").cast("string"),
       lit(":"), lit("graft"))), 1, 4) < "e666"
-    val trainLegs = Seq(true, false).map(b =>
-      TextAnalysis.unigramLmTrain(docs.filter(train), "text", broadcastModel = b)
-        .orderBy("piece").collect().mkString("|"))
-    assert(trainLegs.distinct.size == 1,
-      "unigramLmTrain diverges between broadcast and shuffle dictionary joins")
-    assert(trainLegs.head.nonEmpty)
     val costLegs = Seq(true, false).map(b =>
       TextAnalysis.tokenizerCost(docs, "text", "doc_id", train, broadcastModel = b)
         .orderBy("doc_id").collect().mkString("|"))
