@@ -153,15 +153,51 @@ class EdgeCaseSpec extends AnyFunSuite {
     corpora(wide, want)
     assert(exchanges(Tables(spark, wide).documents).isEmpty)
     assert(exchanges(Tables(spark, wide).embeddings).isEmpty)
-    // nondeterministic expressions a caller projects over a floored scan
-    // read the same partitions on every action
-    val nd = t.documents.select(col("doc_id"), rand(7).as("r"),
+  }
+
+  // The parallelism floor that Par.widen inserted per operator now sits
+  // in the corpus loader (Tables.documents / Tables.embeddings); its
+  // nondeterminism guarantee is checked against that floor.
+  test("Par.widen keeps nondeterministic expressions above its repartition") {
+    import graft.tables.Tables
+    import org.apache.spark.sql.catalyst.expressions.Nondeterministic
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val want = spark.sparkContext.defaultParallelism
+    assume(want > 1, "the floor is a no-op at defaultParallelism == 1")
+    val dir = java.nio.file.Files.createTempDirectory("floor-nd").toString
+    // one tiny file = one row group = one scan split
+    (1L to 64L).toDF("id").select(col("id").as("doc_id"),
+      concat(lit("doc "), col("id").cast("string")).as("text"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val docs = Tables(spark, dir).documents
+    assert(docs.rdd.getNumPartitions >= want, "precondition: the scan was floored")
+    object Plan extends AdaptiveSparkPlanHelper
+    // no nondeterministic expression may be evaluated below the exchange
+    def belowExchange(df: DataFrame): Seq[String] = {
+      val ex = Plan.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+      assert(ex.nonEmpty, "precondition: the plan keeps the floor's exchange")
+      ex.flatMap(_.child.collect { case p => p.expressions }.flatten)
+        .filter(_.exists(_.isInstanceOf[Nondeterministic])).map(_.sql)
+    }
+    // rand and monotonically_increasing_id read the partition index, so
+    // evaluated below a reshuffle they would change value between actions
+    val nd = docs.select(col("doc_id"), rand(7).as("r"),
       monotonically_increasing_id().as("mid"))
+    assert(belowExchange(nd).isEmpty, s"nondeterministic below the exchange: ${belowExchange(nd)}")
     def byId(d: DataFrame) =
       d.collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     val first = byId(nd)
     assert(first.size == 64 && byId(nd) == first,
       "rand / monotonically_increasing_id changed between actions")
+    // same for a nondeterministic generator
+    val gen = docs.select(col("doc_id"), explode(array(rand(3), rand(4))).as("v"))
+    assert(belowExchange(gen).isEmpty, s"generator below the exchange: ${belowExchange(gen)}")
+    def valuesById(d: DataFrame) = d.collect().groupBy(_.getLong(0))
+      .map { case (k, rs) => k -> rs.map(_.getDouble(1)).sorted.toSeq }
+    val firstGen = valuesById(gen)
+    assert(firstGen.size == 64 && valuesById(gen) == firstGen,
+      "a nondeterministic generator's values changed between actions")
   }
 
   test("round-7 operators tolerate degenerate inputs") {
