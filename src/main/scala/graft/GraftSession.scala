@@ -30,6 +30,10 @@ import org.apache.spark.sql.SparkSession
   *    conditional repartition directly above the scan, which is
   *    where the single-task artifact actually bit (s7's sf1 scoring:
   *    47 s on one core of 32).
+  *  - `codegen.cache.maxEntries` = [[GraftSession.CodegenCacheEntries]]:
+  *    Spark's generated-class cache holds a pipeline's whole working
+  *    set, so a session that runs the pipeline again reuses its
+  *    compiled classes instead of compiling them on every pass.
   */
 object GraftSession {
 
@@ -48,8 +52,37 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     if (extensions) b.config("spark.sql.extensions", "graft.GraftExtensions") else b
   }
+
+  /** Entries of Spark's generated-class cache, sized to the working
+    * set of a pipeline that one session runs again and again.
+    *
+    * Why 1024: one pass of the benchmark's `curation` workload (d2, g4,
+    * t2, t7, s13, c1) generates 148 distinct classes and one `etl`
+    * pass 79, while Spark's default holds 100. The cache is an LRU,
+    * and a cyclic working set larger than an LRU misses on every
+    * access, so at 100 each warm pass compiled 128–135 (`curation`)
+    * and 41 (`etl`) classes again through Janino; at 1024 (about 7×
+    * curation's working set) a warm pass compiles none.
+    *
+    * Cost: an entry keeps a class's source and its loaded bytecode.
+    * Measured means over those passes (`CodegenMetrics`) are 7.9 KB
+    * of source (`METRIC_SOURCE_CODE_SIZE`) and 2.6 KB of bytecode per
+    * class (`METRIC_GENERATED_CLASS_BYTECODE_SIZE`), so a full cache
+    * holds at most 1024 × 10.5 KB ≈ 10.5 MiB (≈ 13 MiB counting the
+    * 2.1 classes an entry averages); a pipeline smaller than the
+    * cache only ever holds its own working set.
+    *
+    * The conf is STATIC: Spark sizes the cache, once per JVM, when the
+    * first class is generated, so it takes effect only when set at
+    * session build (a live session's `spark.conf.set` rejects it).
+    * A caller can still override it with
+    * `.config("spark.sql.codegen.cache.maxEntries", n)` after this
+    * builder, before `getOrCreate()`.
+    */
+  val CodegenCacheEntries = 1024
 
   /** The reader conf the events table needs; `Tables.events` checks it
     * rather than mutating session state as a load side effect.

@@ -1381,9 +1381,17 @@ object Curation {
         col(sourceCol), col("n_dup_paras"))
     val scrubbed = scrubPii(kept, textCol, idCol,
       passthrough = Seq(langCol, sourceCol, "n_dup_paras"))
-    // score what ships: quality over the scrubbed text
-    val scored = scrubbed.withColumn("quality",
-      graft.ops.Native.qualityOf(scrubbed)(col("clean_text")))
+    // score what ships: quality over the scrubbed text, the kernel's
+    // struct staged in its own column (one evaluation per row, as in
+    // TextAnalysis.qualityScores)
+    val scored =
+      if (Native.enabled(scrubbed, "graft_text_stats"))
+        scrubbed
+          .withColumn("graft_stats", call_function("graft_text_stats", col("clean_text")))
+          .withColumn("quality",
+            text.qualityScoreFromStats(col("clean_text"), col("graft_stats")))
+          .drop("graft_stats")
+      else scrubbed.withColumn("quality", text.qualityScore(col("clean_text")))
     val capped = sourceCap(scored, idCol, sourceCol, "quality", quotaN)
       .select(col("id").as(idCol), col("rank"))
     deterministicSplit(scored.join(capped, Seq(idCol)), idCol,

@@ -45,12 +45,6 @@ private[ops] object Native {
         call_function("graft_text_stats", c))
     else graft.functions.text.qualityScore
 
-  /** Language ID via the same kernel — see [[qualityOf]]. */
-  def langIdOf(df: DataFrame): Column => Column =
-    if (enabled(df, "graft_text_stats"))
-      c => graft.functions.text.langIdFromStats(call_function("graft_text_stats", c))
-    else graft.functions.text.langId
-
   /** Portable 60-bit md5 fold — one digest call when the kernel is
     * registered, the conv(substring(md5)) string chain otherwise.
     * Values are identical by construction (the fold IS the base-16

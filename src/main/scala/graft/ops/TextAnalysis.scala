@@ -140,10 +140,18 @@ object TextAnalysis {
       text.tokenCount(col(textCol)).as("n_tokens"))
   }
 
-  /** Heuristic language ID per document. */
+  /** Heuristic language ID per document. Native path: the kernel's
+    * struct is staged in its own column, as in [[qualityScores]], so
+    * it is evaluated once per row whether or not subexpression
+    * elimination runs.
+    */
   def languageId(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      Native.langIdOf(docs)(col(textCol)).as("lang_pred"))
+    if (Native.enabled(docs, "graft_text_stats"))
+      docs
+        .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
+        .select(col(idCol).as("doc_id"),
+          text.langIdFromStats(col("graft_stats")).as("lang_pred"))
+    else docs.select(col(idCol).as("doc_id"), text.langId(col(textCol)).as("lang_pred"))
 
   /** Per-group vocabulary stats: exact distinct-token count beside the
     * raw token count — the count-distinct aggregation family. Exact

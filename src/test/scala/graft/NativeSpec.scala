@@ -403,4 +403,37 @@ class NativeSpec extends AnyFunSuite {
       assert(native == fallback, s"kernel $native != fallback $fallback")
     } finally java.util.Locale.setDefault(saved)
   }
+
+  test("languageId and curationPipelineFull call graft_text_stats once per " +
+      "scoring projection, without subexpression elimination") {
+    import graft.ops.{Curation, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val docs = tables.Tables(spark, sfDir).documents
+    // kernel calls of each optimized projection that makes any
+    def callsPerProjection(df: DataFrame): Seq[Int] =
+      df.queryExecution.optimizedPlan.collect { case p: Project =>
+        p.projectList.map(_.collect {
+          case e if e.prettyName == "graft_text_stats" => e
+        }.size).sum
+      }.filter(_ > 0)
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "languageId" -> (() => TextAnalysis.languageId(docs, "text", "doc_id")
+        .orderBy("doc_id")),
+      "curationPipelineFull" -> (() => Curation.curationPipelineFull(docs,
+        "text", "doc_id", "lang", "source").orderBy("doc_id")))
+    spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")
+    try for ((name, op) <- ops) {
+      val native = op()
+      val calls = callsPerProjection(native)
+      assert(calls.nonEmpty && calls.forall(_ == 1),
+        s"$name: kernel calls per projection $calls\n" +
+          native.queryExecution.optimizedPlan)
+      spark.conf.set("graft.native.disabled", "true")
+      val fallback = try op().collect().toSeq
+        finally spark.conf.unset("graft.native.disabled")
+      assert(fallback.nonEmpty, s"$name: empty result")
+      assert(native.collect().toSeq == fallback, s"$name: kernel != fallback")
+    } finally spark.conf.unset("spark.sql.subexpressionElimination.enabled")
+  }
 }
