@@ -133,7 +133,7 @@ object Bench {
       val dir = new java.io.File(sfDir)
       val tables = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-      tables.foreach(p => spark.read.parquet(p).count())
+      tables.foreach(p => sources.Sources.readParquet(spark, p).count())
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] table warmup failed: " +
@@ -179,8 +179,10 @@ object Bench {
         // at least compiled before timing
         try {
           import org.apache.spark.sql.functions.col
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(64).cache()
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64).cache()
+          val docs = sources.Sources.readParquet(spark, s"$sfDir/documents.parquet")
+            .limit(64).cache()
+          val emb = sources.Sources.readParquet(spark, s"$sfDir/embeddings.parquet")
+            .limit(64).cache()
           graft.ops.Dedup.minhashPairs(docs, "text", "doc_id").count()
           graft.ops.Dedup.simhashPairs(docs, "text", "doc_id").count()
           graft.ops.Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source")).count()

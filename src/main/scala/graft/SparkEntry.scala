@@ -965,9 +965,9 @@ object SparkEntry {
       // best first by t2 quality (4dp, id tie-break) — the curation
       // rung between dedup and mixing that stops a handful of
       // boilerplate-heavy domains from dominating the selection
-      val docs = Tables(s, dir).documents
-      val scored = docs.select(col("source"), col("doc_id"),
-        TextAnalysis.qualityScoreOf(docs)(col("text")).as("quality"))
+      val scored = TextAnalysis.withQualityScore(Tables(s, dir).documents,
+          "text", "quality")
+        .select(col("source"), col("doc_id"), col("quality"))
       Curation.sourceCap(scored, "doc_id", "source", "quality", 10)
         .orderBy("grp", "rank")
     }),
@@ -1152,9 +1152,9 @@ object SparkEntry {
       // per-language robust (median/IQR) normalization of the t2
       // quality signal — makes scores comparable across languages
       // before one global threshold/ranking consumes them
-      val docs = Tables(s, dir).documents
-      val scored = docs.select(col("doc_id"),
-        col("lang"), TextAnalysis.qualityScoreOf(docs)(col("text")).as("quality"))
+      val scored = TextAnalysis.withQualityScore(Tables(s, dir).documents,
+          "text", "quality")
+        .select(col("doc_id"), col("lang"), col("quality"))
       TextAnalysis.normalizeScores(scored, "doc_id", "lang", "quality")
         .select(col("id").as("doc_id"), col("grp").as("lang"),
           col("score").as("quality"), col("norm_score"))
@@ -1703,9 +1703,9 @@ object SparkEntry {
     "t31_weighted_sample" -> ((s, dir) => {
       // quality-weighted per-language top-k sample: deterministic A-ES
       // order under a hash-derived u — inclusion ∝ weight, no RNG
-      val docs = Tables(s, dir).documents
-      val scored = docs.select(col("doc_id"),
-        col("lang"), TextAnalysis.qualityScoreOf(docs)(col("text")).as("quality"))
+      val scored = TextAnalysis.withQualityScore(Tables(s, dir).documents,
+          "text", "quality")
+        .select(col("doc_id"), col("lang"), col("quality"))
       Curation.weightedSample(scored, "doc_id", "lang", "quality", "ws", 20)
         .orderBy("grp", "rank")
     }),

@@ -1362,7 +1362,7 @@ object Curation {
         // consumer scans the parquet (column-pruned) instead of
         // holding the cleaned corpus in executor cache
         cleanedPlan.write.mode("overwrite").parquet(path)
-        docs.sparkSession.read.parquet(path)
+        graft.sources.Sources.readParquet(docs.sparkSession, path)
       case None =>
         cleanedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }

@@ -33,18 +33,6 @@ private[ops] object Native {
       c => call_function("graft_normalize", c)
     else graft.functions.text.normalize
 
-  /** Quality heuristic via the one-pass `graft_text_stats` kernel when
-    * registered (the regex chain re-tokenizes per statistic — 4 splits
-    * + 2 regexp_replace per evaluation); identical values by the
-    * kernel's exact-replication contract + the mirrored arithmetic in
-    * [[graft.functions.text.qualityScoreFromStats]].
-    */
-  def qualityOf(df: DataFrame): Column => Column =
-    if (enabled(df, "graft_text_stats"))
-      c => graft.functions.text.qualityScoreFromStats(c,
-        call_function("graft_text_stats", c))
-    else graft.functions.text.qualityScore
-
   /** Portable 60-bit md5 fold — one digest call when the kernel is
     * registered, the conv(substring(md5)) string chain otherwise.
     * Values are identical by construction (the fold IS the base-16

@@ -49,11 +49,19 @@ object TextAnalysis {
       text.markerHits(col(textCol), text.EnMarkers).as("n_stopwords"),
       text.qualityScore(col(textCol)).as("quality"))
 
-  /** [[graft.functions.text.qualityScore]] behind the
-    * `graft_text_stats` kernel gate — the public builder SparkEntry's
-    * score-column declarations ride (see [[graft.ops.Native.qualityOf]]).
+  /** `docs` plus [[graft.functions.text.qualityScore]] of `textCol` as
+    * `outCol`. Native path: the `graft_text_stats` struct is staged in
+    * its own column, as in [[qualityScores]], so the kernel runs once
+    * per row whether or not subexpression elimination runs; values are
+    * bit-identical to the expression chain.
     */
-  def qualityScoreOf(df: DataFrame): Column => Column = Native.qualityOf(df)
+  def withQualityScore(docs: DataFrame, textCol: String, outCol: String): DataFrame =
+    if (Native.enabled(docs, "graft_text_stats"))
+      docs
+        .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
+        .withColumn(outCol, text.qualityScoreFromStats(col(textCol), col("graft_stats")))
+        .drop("graft_stats")
+    else docs.withColumn(outCol, text.qualityScore(col(textCol)))
 
   /** Global token frequency top-k (explode → count → top-k). The
     * groupBy is partial-agg friendly; the final top-k sorts only the

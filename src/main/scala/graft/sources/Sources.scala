@@ -10,13 +10,80 @@ import org.apache.spark.sql.types.StructType
   * Readers take an explicit schema where the format can't carry one
   * (CSV/JSON): schema inference requires an extra full pass over the
   * data, which is unacceptable at 100 TB and non-deterministic under
-  * sampling. Parquet needs no schema (self-describing) and is the only
-  * format that serves predicate pushdown + column pruning at the scan.
+  * sampling. Parquet carries its schema in each file's footer and is
+  * the only format that serves predicate pushdown + column pruning at
+  * the scan, but reading that schema is not free: a schema-less
+  * `spark.read.parquet` runs one Spark job per call to read footers
+  * (even with `mergeSchema` off and one file). [[readParquet]] is the
+  * library's one parquet reader and skips that job when nothing it
+  * depends on changed.
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** What inference returned for one path, and what it depended on. */
+  private final case class Inferred(schema: StructType, listing: String,
+                                    confs: Map[String, String])
+
+  private val MaxInferred = 256
+
+  /** JVM-wide, keyed by the path as given; least recently used entries
+    * go first once [[MaxInferred]] paths are cached.
+    */
+  private val inferred =
+    new java.util.LinkedHashMap[String, Inferred](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Inferred]): Boolean = size > MaxInferred
+    }
+
+  /** SHA-256 of the leaf files (path, length, mtime) the DataFrame's own
+    * file index listed — the files inference read — or None when the
+    * plan is not a listed file scan.
+    */
+  private def listingOf(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed match {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location match {
+        case index: PartitioningAwareFileIndex =>
+          val md = java.security.MessageDigest.getInstance("SHA-256")
+          index.allFiles().map(f =>
+              s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}\n")
+            .sorted.foreach(s => md.update(s.getBytes("UTF-8")))
+          Some(java.util.HexFormat.of().formatHex(md.digest()))
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
+  /** Parquet at `path`, with the schema Spark infers — inferred at most
+    * once per unchanged input. An entry holds the inferred schema, the
+    * digest of the listing it was inferred from (see [[listingOf]]) and
+    * the session's SQL confs (`nanosAsLong`, `binaryAsString`,
+    * `int96AsTimestamp`, partition-type inference all change what
+    * inference returns). A read with equal confs reads with the cached
+    * schema and keeps that DataFrame only if its own listing digests
+    * the same; a first read, a file added, rewritten or removed, or a
+    * conf change reads as `spark.read.parquet(path)` does and replaces
+    * the entry; so does a cached-schema read that fails. Same files,
+    * same confs: same schema as inference, and the same errors (an
+    * emptied path fails the re-inference).
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = spark.conf.getAll
+    val cached = inferred.synchronized(Option(inferred.get(path)))
+    cached.filter(_.confs == confs).flatMap { e =>
+      // a stale schema can fail the read itself (a new partition value
+      // that does not cast to the cached partition type): a miss too
+      scala.util.Try(spark.read.schema(e.schema).parquet(path)).toOption
+        .filter(df => listingOf(df).contains(e.listing))
+    }.getOrElse {
+      val df = spark.read.parquet(path)
+      listingOf(df).foreach(l => inferred.synchronized(
+        inferred.put(path, Inferred(df.schema, l, confs))))
+      df
+    }
+  }
 
   /** CSV with a header row. The header is used for column ORDER only;
     * types come from the caller's schema (never inferred — see above).
@@ -189,7 +256,7 @@ object Sources {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/manifest")
     } finally asg.unpersist()
-    df.sparkSession.read.parquet(s"$path/manifest").orderBy("shard_id")
+    readParquet(df.sparkSession, s"$path/manifest").orderBy("shard_id")
   }
 
   /** Header + tab-separated rows of a (small) result to a stream —
@@ -258,7 +325,7 @@ object Sources {
       s"compactParquet refuses in-place/nested rewrite: $qOut and $qIn " +
         "must not be the same path or contain one another " +
         "(overwrite deletes outPath recursively before inPath is read)")
-    val df = spark.read.parquet(inPath)
+    val df = readParquet(spark, inPath)
     val rows = df.count()
     val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile)
     require(nFiles <= Int.MaxValue,

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-streaming twins of the batch window/session operators.
@@ -520,7 +521,7 @@ object EventStream {
         val parent =
           priorBatchDirs(spark, labelDir, batchId).lastOption.map(_._2)
         val labels = parent match {
-          case Some(p) => spark.read.parquet(p)
+          case Some(p) => Sources.readParquet(spark, p)
           case None => spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType(Seq(
@@ -637,7 +638,7 @@ object EventStream {
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val model = spark.read.parquet(modelPath)
+        val model = Sources.readParquet(spark, modelPath)
         val verdicts = graft.ops.Curation.nbScoreWithModel(batch.toDF(),
           textCol, idCol, model, buckets, alpha, threshold)
         if (monitorDir.isEmpty) {
@@ -656,7 +657,7 @@ object EventStream {
                   col("n_pass").cast("double") / col("n_scored").cast("double"),
                   4)).as("accept_rate"))
             val drift = graft.ops.TextAnalysis.driftAgainstHistogram(
-              batch.toDF(), textCol, spark.read.parquet(refHistPath),
+              batch.toDF(), textCol, Sources.readParquet(spark, refHistPath),
               driftBuckets, alpha)
             // batch_id arrives as the partition dir on read-back —
             // storing it as a column too would collide with partition
@@ -706,7 +707,7 @@ object EventStream {
     docs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val model = spark.read.parquet(modelPath)
+        val model = Sources.readParquet(spark, modelPath)
         val costs = graft.ops.TextAnalysis.unigramSegmentWithModel(
             batch.toDF(), textCol, idCol, model, maxPieceLen, maxWordLen)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -769,7 +770,7 @@ object EventStream {
     vecs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val cents = spark.read.parquet(centroidPath)
+        val cents = Sources.readParquet(spark, centroidPath)
         val assigned = graft.ops.Similarity.ivfAppendDelta(
             cents, batch.toDF(), vecCol, idCol)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -817,7 +818,7 @@ object EventStream {
     vecs.writeStream.foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val cents = spark.read.parquet(centroidPath)
+        val cents = Sources.readParquet(spark, centroidPath)
         // the batch's index extension: home-cluster rows in the d24
         // index shape (also supplies the empty-index schema on batch 0)
         val ext = batch.toDF().select(col(idCol), col(vecCol))
@@ -844,7 +845,7 @@ object EventStream {
         val delta = graft.ops.Enrich.hourlyRollupState(batch.toDF(),
           tsCol, typeCol, valCol)
         val merged = parent match {
-          case Some(p) => spark.read.parquet(p).unionByName(
+          case Some(p) => Sources.readParquet(spark, p).unionByName(
               delta.select(col("event_type"), col("hb_ms"), col("n"),
                 col("sum_value").cast("decimal(38,6)").as("sum_value")))
             .groupBy("event_type", "hb_ms")

@@ -2,16 +2,20 @@ package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Sources
 
 /** Schema'd loaders for the test star schema + events/documents/embeddings.
   *
   * The reference's "source of truth" is a PostgreSQL `incidents` table
   * (reference `src/db/schema.py`); here the source of truth is columnar
   * parquet so scans get predicate pushdown + column pruning for free.
+  * Every table loads through [[graft.sources.Sources.readParquet]], so
+  * a table whose files have not changed since its last load reuses the
+  * schema inferred then instead of running a footer-reading job again.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def load(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = load("region")
   def nation: DataFrame     = load("nation")

@@ -406,6 +406,8 @@ class NativeSpec extends AnyFunSuite {
 
   test("languageId and curationPipelineFull call graft_text_stats once per " +
       "scoring projection, without subexpression elimination") {
+    // t30_score_norm rides along: SparkEntry's quality-score columns
+    // (t30, t31, t43) share TextAnalysis.withQualityScore
     import graft.ops.{Curation, TextAnalysis}
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -421,7 +423,8 @@ class NativeSpec extends AnyFunSuite {
       "languageId" -> (() => TextAnalysis.languageId(docs, "text", "doc_id")
         .orderBy("doc_id")),
       "curationPipelineFull" -> (() => Curation.curationPipelineFull(docs,
-        "text", "doc_id", "lang", "source").orderBy("doc_id")))
+        "text", "doc_id", "lang", "source").orderBy("doc_id")),
+      "t30_score_norm" -> (() => SparkEntry.queries("t30_score_norm")(spark, sfDir)))
     spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")
     try for ((name, op) <- ops) {
       val native = op()

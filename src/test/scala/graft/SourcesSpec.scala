@@ -210,4 +210,143 @@ class SourcesSpec extends AnyFunSuite {
     // every doc landed in exactly one shard
     assert(m1.map(_.getLong(1)).sum == docs.count())
   }
+
+  /** Spark jobs `body` launches, counted at their start. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** One parquet file written with the raw parquet writer, so its footer
+    * carries no Spark schema and inference reads the parquet types
+    * (nanosecond timestamps, unannotated binary) as the confs say.
+    */
+  private def writeRaw(file: String, schema: String,
+                       rows: Seq[Seq[(String, Any)]]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    val mt = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(file))
+      .withType(mt).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val g = new SimpleGroupFactory(mt)
+    try rows.foreach { r =>
+      val row = g.newGroup()
+      r.foreach {
+        case (k, v: Long) => row.append(k, v)
+        case (k, v: String) => row.append(k, v)
+        case (k, v: Array[Byte]) => row.append(k, Binary.fromConstantByteArray(v))
+        case (k, v) => sys.error(s"unsupported value for $k: $v")
+      }
+      w.write(row)
+    } finally w.close()
+  }
+
+  private def nanosEvents(dir: String): String = {
+    val file = s"$dir/events.parquet"
+    writeRaw(file,
+      """message events { required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |  required binary event_type (STRING); }""".stripMargin,
+      (0L until 20L).map(i => Seq("event_id" -> i,
+        "ts" -> (1700000000000000000L + i * 1234567891L),
+        "event_type" -> s"t${i % 3}")))
+    file
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSeq.sortBy(_.toString)
+
+  /** readParquet equals inference on `path`: schema and rows. */
+  private def assertInferred(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    val fresh = spark.read.parquet(path)
+    assert(df.schema == fresh.schema, s"$path: ${df.schema} != ${fresh.schema}")
+    assert(rowsOf(df) == rowsOf(fresh), s"$path: rows differ")
+  }
+
+  test("readParquet: a second read of an unchanged path launches no Spark job") {
+    val dir = tmp("graft-schema-hit")
+    Sources.writeParquet(Tables(spark, sfDir).nation.coalesce(1), dir)
+    val (_, first) = jobsDuring(Sources.readParquet(spark, dir))
+    val (_, second) = jobsDuring(Sources.readParquet(spark, dir))
+    assert(first >= 1, "the first read infers the schema with a job")
+    assert(second == 0, s"the second read launched $second jobs")
+  }
+
+  test("readParquet: cached reads equal inference on a file, a multi-file " +
+      "dir, a hive-partitioned store and nanos events") {
+    val orders = Tables(spark, sfDir).orders
+    val multi = tmp("graft-schema-multi")
+    Sources.writeParquet(orders.repartition(8), multi)
+    assert(new java.io.File(multi).listFiles().count(_.getName.endsWith(".parquet")) == 8)
+    val store = tmp("graft-schema-store")
+    for (b <- 0 until 3)
+      Sources.writeParquet(orders.filter(col("o_orderkey") % 3 === b),
+        f"$store/batch=$b%04d")
+    val nanos = nanosEvents(tmp("graft-schema-nanos"))
+    for (path <- Seq(s"$sfDir/lineitem.parquet", multi, store, nanos)) {
+      Sources.readParquet(spark, path)
+      val (df, jobs) = jobsDuring(Sources.readParquet(spark, path))
+      assert(jobs == 0, s"$path: cached read launched $jobs jobs")
+      assertInferred(df, path)
+    }
+    assert(Sources.readParquet(spark, nanos).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType, "nanosAsLong reads ts as a long")
+    assert(Sources.readParquet(spark, store).schema("batch").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+  }
+
+  test("readParquet: a new partition, a rewritten file, an emptied path and " +
+      "a conf change each re-infer") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
+    val nation = Tables(spark, sfDir).nation
+    // a partition whose value is not an integer turns batch into a string
+    val store = tmp("graft-schema-grow")
+    Sources.writeParquet(nation, s"$store/batch=0000")
+    assert(Sources.readParquet(spark, store).schema("batch").dataType == IntegerType)
+    Sources.writeParquet(nation, s"$store/batch=late")
+    val grown = Sources.readParquet(spark, store)
+    assert(grown.schema("batch").dataType == StringType)
+    assertInferred(grown, store)
+    // a rewrite with an extra column
+    val table = tmp("graft-schema-rewrite")
+    Sources.writeParquet(nation, table)
+    Sources.readParquet(spark, table)
+    Sources.writeParquet(nation.withColumn("extra", lit(1L)), table)
+    val rewritten = Sources.readParquet(spark, table)
+    assert(rewritten.columns.contains("extra"))
+    assertInferred(rewritten, table)
+    // every file deleted: the read fails as inference does
+    Sources.readParquet(spark, table)
+    new java.io.File(table).listFiles().foreach(_.delete())
+    val want = intercept[AnalysisException](spark.read.parquet(table))
+    val got = intercept[AnalysisException](Sources.readParquet(spark, table))
+    assert(got.getCondition == want.getCondition && got.getMessage == want.getMessage)
+    // binaryAsString changes what inference returns for unannotated binary
+    val blobs = s"${tmp("graft-schema-binary")}/blobs.parquet"
+    writeRaw(blobs, "message blobs { required int64 id; required binary payload; }",
+      Seq(Seq("id" -> 1L, "payload" -> "ab".getBytes("UTF-8"))))
+    assert(Sources.readParquet(spark, blobs).schema("payload").dataType == BinaryType)
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try {
+      val flipped = Sources.readParquet(spark, blobs)
+      assert(flipped.schema("payload").dataType == StringType)
+      assertInferred(flipped, blobs)
+    } finally spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert(Sources.readParquet(spark, blobs).schema("payload").dataType == BinaryType)
+  }
 }
