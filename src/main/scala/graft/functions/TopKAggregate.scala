@@ -19,12 +19,13 @@ final class TopKHeap(val k: Int) {
 
   /** (s1,i1) ranks strictly worse than (s2,i2): lower score, or same
     * score with the larger id (matching ORDER BY score DESC, id ASC).
-    * Double.compare gives the same total order Spark's physical
-    * DoubleType ordering uses — NaN ranks above every number, so a
-    * NaN-scored row wins desc ordering on both paths.
+    * Scores compare as Spark's DoubleType ordering does: NaN ranks
+    * above every number and equals NaN, and -0.0 equals 0.0 — so a
+    * NaN-scored row wins desc ordering on both paths, and signed zeros
+    * tie on the id.
     */
   @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val c = java.lang.Double.compare(s1, s2)
+    val c = if (s1 == s2) 0 else java.lang.Double.compare(s1, s2)
     c < 0 || (c == 0 && i1 > i2)
   }
 
@@ -61,9 +62,7 @@ final class TopKHeap(val k: Int) {
 
   /** Retained entries best-first (score desc, id asc). */
   def sortedIndices: Array[Int] =
-    Array.range(0, n).sortWith { (a, b) =>
-      scores(a) > scores(b) || (scores(a) == scores(b) && ids(a) < ids(b))
-    }
+    Array.range(0, n).sortWith((a, b) => worse(scores(b), ids(b), scores(a), ids(a)))
 }
 
 /** `graft_topk(score double, id bigint, k) -> array<struct<score,id>>`
@@ -78,7 +77,8 @@ final class TopKHeap(val k: Int) {
   * that scales and one that sorts the corpus per probe. Output is
   * sorted best-first; ties break on the lower id, identical to the
   * window idiom, so the two forms are exchangeable row-for-row over
-  * non-null inputs (NaN scores included — Double.compare order). Rows
+  * non-null inputs (NaN and signed-zero scores included — Spark's
+  * double ordering). Rows
   * with a null score or id are SKIPPED, the standard aggregate-null
   * convention (cf. max/min); a window ranks null scores last instead,
   * so callers wanting exact window parity filter nulls first (the

@@ -49,43 +49,45 @@ object text {
     size(filter(tokens(lower(c)), t => array_contains(arr, t))).cast("long")
   }
 
-  /** Stopword ratio = marker hits / tokens (0 when empty). */
-  def stopwordRatio(c: Column): Column = {
-    val n = tokenCount(c)
-    when(n === 0, lit(0.0)).otherwise(markerHits(c, EnMarkers).cast("double") / n)
+  /** The text-statistics struct, as pure expressions: the fallback of
+    * the one-pass `graft_text_stats` kernel, with its schema and its
+    * values for every input (NativeSpec compares them field by field).
+    * Fields: n_tokens, sum_tok_len and max_tok_len (code points) over
+    * [[tokens]]; hits_en/es/fr/de, the [[markerHits]] of each marker
+    * list; n_punct, n_digit and n_chars over the raw string. NULL for
+    * a null text, as the kernel's null-intolerant struct is.
+    */
+  def textStats(c: Column): Column = {
+    val toks = tokens(c)
+    when(c.isNotNull, struct(
+      size(toks).cast("long").as("n_tokens"),
+      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("sum_tok_len"),
+      coalesce(array_max(transform(toks, t => length(t))), lit(0)).as("max_tok_len"),
+      markerHits(c, EnMarkers).as("hits_en"),
+      markerHits(c, EsMarkers).as("hits_es"),
+      markerHits(c, FrMarkers).as("hits_fr"),
+      markerHits(c, DeMarkers).as("hits_de"),
+      punctCount(c).as("n_punct"),
+      digitCount(c).as("n_digit"),
+      length(c).as("n_chars")))
   }
 
   /** Heuristic quality score in [0,1]: rewards mid-length docs with
     * stopwords and low punctuation/digit noise. Deterministic and
     * SQL-expressible; the exact weights are this engine's contract.
     */
-  def qualityScore(c: Column): Column = {
-    val n       = tokenCount(c).cast("double")
-    val lenTerm = least(n / lit(100.0), lit(1.0))
-    val stop    = least(stopwordRatio(c) * lit(5.0), lit(1.0))
-    val punct   = when(length(c) === 0, lit(0.0))
-      .otherwise(punctCount(c).cast("double") / length(c))
-    val digits  = when(length(c) === 0, lit(0.0))
-      .otherwise(digitCount(c).cast("double") / length(c))
-    val raw = lit(0.4) * lenTerm + lit(0.4) * stop +
-      lit(0.2) * (lit(1.0) - least((punct + digits) * lit(5.0), lit(1.0)))
-    // floor-round: rational inputs land exactly on .xxxx5 boundaries
-    // where engine round() semantics diverge (see num.fround)
-    num.fround(raw, 4)
-  }
+  def qualityScore(c: Column): Column = qualityScoreFromStats(c, textStats(c))
 
-  /** [[qualityScore]] computed from ONE `graft_text_stats` struct —
-    * the same when/least tree over the same integer inputs, so the
-    * doubles are bit-identical to the expression form for every input
-    * (a null text yields a null struct; the coalesces replicate
+  /** [[qualityScore]] from a [[textStats]] struct (or the kernel's).
+    * A null text yields a null struct: the coalesces replicate
     * `tokens(null) = []` → zero counts, while the punct/digit branches
-    * keep `length(null)`'s null propagation — the exact null surface
-    * of the regex chain).
+    * keep `length(null)`'s null propagation.
     */
   def qualityScoreFromStats(c: Column, stats: Column): Column = {
     val nL = coalesce(stats.getField("n_tokens"), lit(0L))
     val n = nL.cast("double")
     val lenTerm = least(n / lit(100.0), lit(1.0))
+    // stopword ratio = marker hits / tokens (0 when empty)
     val hits = coalesce(stats.getField("hits_en"), lit(0L))
     val stopRatio = when(nL === 0, lit(0.0)).otherwise(hits.cast("double") / nL)
     val stop = least(stopRatio * lit(5.0), lit(1.0))
@@ -95,13 +97,20 @@ object text {
       .otherwise(stats.getField("n_digit").cast("double") / length(c))
     val raw = lit(0.4) * lenTerm + lit(0.4) * stop +
       lit(0.2) * (lit(1.0) - least((punct + digits) * lit(5.0), lit(1.0)))
+    // floor-round: rational inputs land exactly on .xxxx5 boundaries
+    // where engine round() semantics diverge (see num.fround)
     num.fround(raw, 4)
   }
 
-  /** [[langId]] computed from ONE `graft_text_stats` struct — same
-    * greatest/priority tree over the same integer hit counts (null
-    * text coalesces to zero hits → 'und', matching markerHits over
-    * `tokens(null) = []`).
+  /** Stopword-marker voting language ID → 'en'/'es'/'fr'/'de'/'und'.
+    * N-gram-free heuristic (the reference corpus is synthetic); ties
+    * and zero-evidence both resolve deterministically.
+    */
+  def langId(c: Column): Column = langIdFromStats(textStats(c))
+
+  /** [[langId]] from a [[textStats]] struct (or the kernel's): a null
+    * text coalesces to zero hits → 'und', as markerHits over
+    * `tokens(null) = []` does.
     */
   def langIdFromStats(stats: Column): Column = {
     val en = coalesce(stats.getField("hits_en"), lit(0L))
@@ -109,23 +118,6 @@ object text {
     val fr = coalesce(stats.getField("hits_fr"), lit(0L))
     val de = coalesce(stats.getField("hits_de"), lit(0L))
     val m = greatest(en, es, fr, de)
-    when(m === 0, lit("und"))
-      .when(en === m, lit("en"))
-      .when(es === m, lit("es"))
-      .when(fr === m, lit("fr"))
-      .otherwise(lit("de"))
-  }
-
-  /** Stopword-marker voting language ID → 'en'/'es'/'fr'/'de'/'und'.
-    * N-gram-free heuristic (the reference corpus is synthetic); ties
-    * and zero-evidence both resolve deterministically.
-    */
-  def langId(c: Column): Column = {
-    val en = markerHits(c, EnMarkers)
-    val es = markerHits(c, EsMarkers)
-    val fr = markerHits(c, FrMarkers)
-    val de = markerHits(c, DeMarkers)
-    val m  = greatest(en, es, fr, de)
     when(m === 0, lit("und"))
       .when(en === m, lit("en"))   // priority order breaks ties
       .when(es === m, lit("es"))

@@ -534,8 +534,8 @@ object Cluster {
     * rows, NEVER a per-cluster sort of corpus/k rows (with small k a
     * window over cluster partitions would buffer enormous groups —
     * exactly the degenerate case the bounded aggregate exists for).
-    * The expression fallback is the standard window idiom: same rows,
-    * the q20 rewrite restores the bounded plan when injected.
+    * The fallback is the standard window idiom, the same rows
+    * ([[Native.topKOf]]).
     *
     * The hash ranks by the FIRST 52 BITS of the md5 (13 hex digits):
     * exact in double (the aggregate's score type), ties broken by id.
@@ -551,20 +551,8 @@ object Cluster {
       (lit(0L) - conv(substring(md5(concat(col("id").cast("string"),
           lit(":" + salt))), 1, 13), 16, 10).cast("long"))
         .cast("double").as("hscore"))
-    if (Native.enabled(scored, "graft_topk")) {
-      scored.groupBy("cluster_id")
-        .agg(call_function("graft_topk",
-          col("hscore"), col("id"), lit(nPer)).as("topk"))
-        .select(col("cluster_id"), posexplode(col("topk")))
-        .select(col("cluster_id"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("id"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("cluster_id").orderBy(col("hscore").desc, col("id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= nPer)
-        .select(col("cluster_id"), col("rank"), col("id"))
-    }
+    Native.topKOf(scored, "cluster_id", "hscore", "id", nPer)
+      .select(col("cluster_id"), col("rank"), col("id"))
   }
 
   /** Maximal Marginal Relevance selection (Carbonell & Goldstein,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-import graft.functions.{hashing, text}
+import graft.functions.text
 
 /** Corpus-curation operators for LLM-training-data pipelines: PII
   * scrubbing, deterministic train/val/test splitting, and token-budget
@@ -207,7 +207,7 @@ object Curation {
     * Scale shape: key math is map-only; per-group top-k rides the
     * `graft_topk` bounded aggregate (partial-agg, fixed k-row state
     * per task — never a per-group sort of the corpus) with the
-    * window fallback for extension-less sessions. Output:
+    * window fallback ([[Native.topKOf]]). Output:
     * (grp, rank, id, skey 6dp), rank 1..k by (skey desc, id).
     */
   def weightedSample(df: DataFrame, idCol: String, groupCol: String,
@@ -221,34 +221,18 @@ object Curation {
     // same way (IEEE nearest-even) in every engine, the division is
     // an exact power-of-two scale
     val u = (h + lit(1L)).cast("double") / lit(1152921504606846976.0)
-    if (Native.enabled(df, "graft_topk")) {
-      // The weight>0 cut is folded into skey as a NULL (graft_topk
-      // skips null scores — row-identical to the filter) instead of a
-      // separate Filter: a deterministic filter on the derived weight
-      // column is pushed below the corpus loader's parallelism-floor
-      // exchange and re-evaluates the full weight expression on the
-      // narrow scan split (§4.4's duplicate-evaluation, measured as the
-      // t31 wall).
-      val scored = df
-        .select(col(groupCol).as("grp"), col(idCol).as("id"),
-          when(col(weightCol) > 0.0, fround(log(u), 6) / col(weightCol))
-            .as("skey"))
-      scored.groupBy("grp")
-        .agg(call_function("graft_topk", col("skey"), col("id"), lit(k)).as("topk"))
-        .select(col("grp"), posexplode(col("topk")))
-        .select(col("grp"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("id"), fround(col("col.score"), 6).as("skey"))
-    } else {
-      val scored = df
-        .filter(col(weightCol) > 0.0)
-        .select(col(groupCol).as("grp"), col(idCol).as("id"),
-          (fround(log(u), 6) / col(weightCol)).as("skey"))
-      val w = Window.partitionBy("grp").orderBy(col("skey").desc, col("id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("grp"), col("rank").cast("int").as("rank"), col("id"),
-          fround(col("skey"), 6).as("skey"))
-    }
+    // The weight>0 cut is folded into skey as a NULL (top-k skips null
+    // scores) instead of a separate Filter: a deterministic filter on
+    // the derived weight column is pushed below the corpus loader's
+    // parallelism-floor exchange and re-evaluates the full weight
+    // expression on the narrow scan split (§4.4's duplicate-evaluation,
+    // measured as the t31 wall).
+    val scored = df
+      .select(col(groupCol).as("grp"), col(idCol).as("id"),
+        when(col(weightCol) > 0.0, fround(log(u), 6) / col(weightCol))
+          .as("skey"))
+    Native.topKOf(scored, "grp", "skey", "id", k)
+      .withColumn("skey", fround(col("skey"), 6))
   }
 
   /** Deterministic training-order shuffle: a reproducible global
@@ -387,14 +371,7 @@ object Curation {
                                  idCol: String, splitCol: String, n: Int): DataFrame = {
     val toksed = docs.select(col(idCol).as("id"), col(splitCol).as("split"),
       text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-    val grams =
-      if (Native.enabled(docs, "graft_ngram_hashes"))
-        toksed.select(col("id"), col("split"),
-          call_function("graft_ngram_hashes", col("toks"), lit(n)).as("grams"))
-      else
-        toksed.select(col("id"), col("split"),
-            text.wordNgramsOfTokens(col("toks"), n).as("g"))
-          .select(col("id"), col("split"), hashing.elementHashes(col("g")).as("grams"))
+    val grams = Native.ngramHashesOf(toksed, n)
     val explodedPlan = grams.select(col("id"), col("split"),
       explode(col("grams")).as("gram"))
     explodedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -477,38 +454,25 @@ object Curation {
                     minStopwords: Long = 1, maxDigitRatio: Double = 0.3,
                     maxWordLen: Long = 30,
                     passthrough: Seq[String] = Nil): DataFrame = {
-    // Native path: every rule bit feeds off ONE graft_text_stats pass
-    // (the regex/HOF forms re-tokenize per rule — the measured c3 scan
-    // wall once the keep filter is pushed to the source). Values are
-    // bit-identical: coalesces replicate `tokens(null) = []` → zero
-    // counts, digitRatio keeps length(null)'s null propagation.
-    val native = Native.enabled(df, "graft_text_stats")
-    val toksed =
-      if (native)
-        df.withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
-          .select(Seq(col(idCol).as("doc_id"), col(textCol).as("txt"),
-            col("graft_stats")) ++ passthrough.map(col): _*)
-      else df.select(Seq(col(idCol).as("doc_id"), col(textCol).as("txt"),
-        text.tokens(col(textCol)).as("toks")) ++ passthrough.map(col): _*)
-    val n =
-      if (native) coalesce(col("graft_stats.n_tokens"), lit(0L))
-      else size(col("toks")).cast("long")
+    // Every rule bit feeds off ONE text-stats struct (with the kernel,
+    // one byte scan instead of a re-tokenize per rule — the measured
+    // c3 scan wall once the keep filter is pushed to the source).
+    // Coalesces replicate `tokens(null) = []` → zero counts, digitRatio
+    // keeps length(null)'s null propagation.
+    val staged = df
+      .withColumn("graft_stats", Native.textStatsOf(df)(col(textCol)))
+      .select(Seq(col(idCol).as("doc_id"), col(textCol).as("txt"),
+        col("graft_stats")) ++ passthrough.map(col): _*)
+    val n = coalesce(col("graft_stats.n_tokens"), lit(0L))
     val meanWordLen = when(n === 0, 0.0)
-      .otherwise((if (native) col("graft_stats.sum_tok_len")
-                  else aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t)))
-        .cast("double") / n)
-    val maxWord =
-      if (native) coalesce(col("graft_stats.max_tok_len"), lit(0))
-      else coalesce(array_max(transform(col("toks"), t => length(t))), lit(0))
-    val stopHits =
-      if (native) coalesce(col("graft_stats.hits_en"), lit(0L))
-      else text.markerHits(col("txt"), text.EnMarkers)
-    val digitCnt =
-      if (native) col("graft_stats.n_digit") else text.digitCount(col("txt"))
+      .otherwise(col("graft_stats.sum_tok_len").cast("double") / n)
+    val maxWord = coalesce(col("graft_stats.max_tok_len"), lit(0))
+    val stopHits = coalesce(col("graft_stats.hits_en"), lit(0L))
+    val digitCnt = col("graft_stats.n_digit")
     val digitRatio = when(length(col("txt")) === 0, 0.0)
       .otherwise(digitCnt.cast("double") / length(col("txt")))
     val bit = (c: Column) => when(c, 1).otherwise(0)
-    toksed.select(Seq(
+    staged.select(Seq(
         col("doc_id"),
         n.as("n_tokens"),
         bit(n >= minTokens && n <= maxTokens).as("r_len"),
@@ -1184,9 +1148,9 @@ object Curation {
     * O(n · groups · partitions) rows, never a per-group sort of
     * corpus/groups rows (with few hot domains a window would buffer
     * enormous groups — the degenerate case the bounded aggregate
-    * exists for). The extension-less fallback is the standard window
-    * idiom: same rows, and the q20 rewrite restores the bounded plan
-    * when injected.
+    * exists for). The fallback is the standard window idiom, the same
+    * rows ([[Native.topKOf]]). A null score or id drops the row on both
+    * paths.
     *
     * Output: (grp, rank 1-based, id, score) — rank in quota order.
     */
@@ -1208,20 +1172,7 @@ object Curation {
     val scored = df.select(col(groupCol).as("grp"),
       idExpr.as("id"),
       col(scoreCol).cast("double").as("score"))
-    if (Native.enabled(df, "graft_topk")) {
-      scored.groupBy("grp")
-        .agg(call_function("graft_topk", col("score"), col("id"), lit(n))
-          .as("topk"))
-        .select(col("grp"), posexplode(col("topk")))
-        .select(col("grp"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("id"), col("col.score").as("score"))
-    } else {
-      val w = Window.partitionBy("grp").orderBy(col("score").desc, col("id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= n)
-        .select(col("grp"), col("rank").cast("int").as("rank"),
-          col("id"), col("score"))
-    }
+    Native.topKOf(scored, "grp", "score", "id", n)
   }
 
   /** WITHIN-document paragraph dedup — CCNet's first cleaning rung,
@@ -1381,17 +1332,8 @@ object Curation {
         col(sourceCol), col("n_dup_paras"))
     val scrubbed = scrubPii(kept, textCol, idCol,
       passthrough = Seq(langCol, sourceCol, "n_dup_paras"))
-    // score what ships: quality over the scrubbed text, the kernel's
-    // struct staged in its own column (one evaluation per row, as in
-    // TextAnalysis.qualityScores)
-    val scored =
-      if (Native.enabled(scrubbed, "graft_text_stats"))
-        scrubbed
-          .withColumn("graft_stats", call_function("graft_text_stats", col("clean_text")))
-          .withColumn("quality",
-            text.qualityScoreFromStats(col("clean_text"), col("graft_stats")))
-          .drop("graft_stats")
-      else scrubbed.withColumn("quality", text.qualityScore(col("clean_text")))
+    // score what ships: quality over the scrubbed text
+    val scored = TextAnalysis.withQualityScore(scrubbed, "clean_text", "quality")
     val capped = sourceCap(scored, idCol, sourceCol, "quality", quotaN)
       .select(col("id").as(idCol), col("rank"))
     deterministicSplit(scored.join(capped, Seq(idCol)), idCol,
@@ -1533,8 +1475,7 @@ object Curation {
   def decontaminateByEmbedding(embs: DataFrame, vecCol: String, idCol: String,
                                evalFilter: Column, threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
-                               seed: Long = 42L,
-                               verifyBroadcast: Option[Boolean] = None): DataFrame = {
+                               seed: Long = 42L): DataFrame = {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -1546,10 +1487,7 @@ object Curation {
     val planes = graft.ops.Similarity.hyperplanes(nPlanes, dim, seed)
     val bitsPerBand = nPlanes / bands
     val dotOf = Native.dotOf(embs)
-    val sigOf: Column => Column =
-      if (Native.enabled(embs, "graft_hyperplane_sig"))
-        v => call_function("graft_hyperplane_sig", v, lit(planes.flatten.toArray), lit(dim))
-      else v => graft.functions.vectors.hyperplaneSig(v, planes)
+    val sigOf = Native.hyperplaneSigOf(embs, planes, dim)
     val preparedPlan = embs.select(col(idCol).as("id"), evalFilter.as("is_eval"),
         col(vecCol).as("v"))
       .withColumn("nrm", sqrt(dotOf(col("v"), col("v"))))
@@ -1567,16 +1505,11 @@ object Curation {
       .join(banded.filter(col("is_eval")).as("b"), col("a.band") === col("b.band"))
       .select(col("a.id").as("train_id"), col("b.id").as("eval_id"))
       .dropDuplicates("train_id", "eval_id")
-    def sideHinted(df: DataFrame): DataFrame = verifyBroadcast match {
-      case Some(true)  => broadcast(df)
-      case Some(false) => df.hint("shuffle_hash")
-      case None        => df
-    }
     val vecs = prepared.select(col("id"), col("v"), col("nrm"))
     val nn = col("h1.nrm") * col("h2.nrm")
     val hits = candidates
-      .join(sideHinted(vecs).as("h1"), col("train_id") === col("h1.id"))
-      .join(sideHinted(vecs).as("h2"), col("eval_id") === col("h2.id"))
+      .join(vecs.as("h1"), col("train_id") === col("h1.id"))
+      .join(vecs.as("h2"), col("eval_id") === col("h2.id"))
       .withColumn("cosine",
         when(nn === 0.0, 0.0).otherwise(dotOf(col("h1.v"), col("h2.v")) / nn))
       .filter(col("cosine") >= threshold)

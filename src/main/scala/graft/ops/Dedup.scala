@@ -11,30 +11,15 @@ import graft.functions.{hashing, text}
   * near-dup family (MinHash+LSH, SimHash, n-gram Jaccard, embedding
   * cosine) is the standard web-scale dedup toolkit. All are one or two
   * shuffles on bounded keys — never an unblocked cross join.
+  *
+  * The pairwise-verify joins (candidates ⋈ doc→hashes) carry no join
+  * hint: the doc table is O(corpus), so an unconditional broadcast
+  * dies at Spark's 8 GB exchange cap past ~tens of millions of docs.
+  * AQE plans each from RUNTIME size stats and converts it to a
+  * broadcast only when the table actually fits the threshold — the
+  * size gate is Spark's own measured size, not a guess.
   */
 object Dedup {
-
-  /** Join-strategy gate for the pairwise-verify joins (candidates ⋈
-    * doc→hashes). The doc table is O(corpus), so an unconditional
-    * broadcast dies at Spark's 8 GB exchange cap past ~tens of
-    * millions of docs. Semantics:
-    *  - `None` (default): no hint — AQE plans the join from RUNTIME
-    *    size stats, converting to broadcast only when the table
-    *    actually fits the threshold. This is the size-gated path: the
-    *    gate is Spark's own measured size, not a guess.
-    *  - `Some(true)`: force the broadcast hint (caller knows the
-    *    corpus is small; skips the shuffle AQE would stage first).
-    *  - `Some(false)`: force a shuffled hash join on id (the 100 TB
-    *    path: per-partition build side is corpus/numPartitions, no
-    *    sort, no single-node exchange).
-    * Results are identical under every strategy (see DedupJoinSpec).
-    */
-  private def verifyHinted(df: DataFrame, strategy: Option[Boolean]): DataFrame =
-    strategy match {
-      case Some(true)  => broadcast(df)
-      case Some(false) => df.hint("shuffle_hash")
-      case None        => df
-    }
 
   /** Exact dedup groups: normalized-content md5 → (fingerprint,
     * n_dups, canonical = min id). One shuffle on the fingerprint.
@@ -169,16 +154,14 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
-                   jaccardThreshold: Double = 0.5,
-                   verifyBroadcast: Option[Boolean] = None): DataFrame = {
+                   jaccardThreshold: Double = 0.5): DataFrame = {
     val (hashed, candidates) = minhashStaged(docs, textCol, idCol, numPerm,
       bands, shingleK, jaccardThreshold)
     // The verify joins bring the doc→hashes table to the candidate
-    // pairs; strategy is size-gated via verifyHinted (AQE runtime
-    // stats by default — broadcast only when it actually fits).
+    // pairs; strategy is size-gated (see the object scaladoc).
     candidates
-      .join(verifyHinted(hashed, verifyBroadcast).as("h1"), col("id1") === col("h1.id"))
-      .join(verifyHinted(hashed, verifyBroadcast).as("h2"), col("id2") === col("h2.id"))
+      .join(hashed.as("h1"), col("id1") === col("h1.id"))
+      .join(hashed.as("h2"), col("id2") === col("h2.id"))
       .select(col("id1"), col("id2"),
         col("h1.hs").as("sh1"), col("h2.hs").as("sh2"))
       .withColumn("inter", Dedup.intersectSize(docs, col("sh1"), col("sh2")).cast("double"))
@@ -347,8 +330,7 @@ object Dedup {
   def minhashIncremental(index: DataFrame, delta: DataFrame,
                          textCol: String, idCol: String,
                          numPerm: Int = 128, bands: Int = 0, shingleK: Int = 5,
-                         jaccardThreshold: Double = 0.5,
-                         verifyBroadcast: Option[Boolean] = None): DataFrame = {
+                         jaccardThreshold: Double = 0.5): DataFrame = {
     val nBands = if (bands > 0) bands else defaultBands(numPerm, jaccardThreshold)
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
@@ -356,7 +338,7 @@ object Dedup {
     val (hIdx, bIdx) = persisted(hashedBanded(index, textCol, idCol, numPerm,
       nBands, rowsPerBand, shingleK))
     minhashIncrementalPrepared(hIdx, bIdx, delta, textCol, idCol, numPerm,
-      nBands, shingleK, jaccardThreshold, verifyBroadcast)
+      nBands, shingleK, jaccardThreshold)
   }
 
   /** The (id, hs) hash table + (id, n, band) band table for
@@ -391,8 +373,7 @@ object Dedup {
                                  textCol: String, idCol: String,
                                  numPerm: Int = 128, bands: Int = 0,
                                  shingleK: Int = 5,
-                                 jaccardThreshold: Double = 0.5,
-                                 verifyBroadcast: Option[Boolean] = None): DataFrame = {
+                                 jaccardThreshold: Double = 0.5): DataFrame = {
     val nBands = if (bands > 0) bands else defaultBands(numPerm, jaccardThreshold)
     require(numPerm % nBands == 0,
       s"numPerm ($numPerm) must be a multiple of bands ($nBands)")
@@ -415,8 +396,8 @@ object Dedup {
       .dropDuplicates("did", "pid", "p_idx")
     val partners = hIdx.unionByName(hDel)
     val verified = candidates
-      .join(verifyHinted(hDel, verifyBroadcast).as("h1"), col("did") === col("h1.id"))
-      .join(verifyHinted(partners, verifyBroadcast).as("h2"), col("pid") === col("h2.id"))
+      .join(hDel.as("h1"), col("did") === col("h1.id"))
+      .join(partners.as("h2"), col("pid") === col("h2.id"))
       .select(col("did"), col("p_idx"),
         col("h1.hs").as("sh1"), col("h2.hs").as("sh2"))
       .withColumn("inter", Dedup.intersectSize(delta, col("sh1"), col("sh2")).cast("double"))
@@ -523,6 +504,20 @@ object Dedup {
       .select("id1", "id2", "hamming")
   }
 
+  /** (id, block, grams): each doc's distinct word n-grams as SORTED
+    * xxhash64 longs ([[Native.ngramHashesOf]] over the staged
+    * normalize → tokens column — per-element lambdas must see
+    * attributes, see the wordNgramsOfTokens scaladoc). Hashing is
+    * set-isomorphic, so Jaccard and containment are unchanged; the
+    * pairwise intersect then runs on longs and the shuffle carries
+    * 8-byte elements, not strings.
+    */
+  private def sortedGramHashes(docs: DataFrame, textCol: String, idCol: String,
+                               blockCol: Column, n: Int): DataFrame =
+    Native.ngramHashesOf(docs.select(col(idCol).as("id"), blockCol.as("block"),
+        text.tokens(Native.normOf(docs)(col(textCol))).as("toks")), n)
+      .select(col("id"), col("block"), array_sort(col("grams")).as("grams"))
+
   /** Exact word-n-gram Jaccard within a blocking key — result pairs
     * only form inside a block, and EVERY within-block pair with
     * rounded Jaccard >= threshold is returned (recall 1.0; this is an
@@ -557,30 +552,11 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         blockCol: Column, n: Int = 3,
                         threshold: Double = 0.4,
-                        verifyBroadcast: Option[Boolean] = None,
                         prefixFilter: Boolean = true): DataFrame = {
-    // Staged normalize → tokens → grams → hashes (per-element lambdas
-    // must see attributes — see wordNgramsOfTokens scaladoc). Grams
-    // are hashed to longs once per doc (set-isomorphic, so the Jaccard
-    // value is unchanged); the pairwise intersect then runs on longs
-    // and the shuffle carries 8-byte elements, not strings.
-    // The native kernel hashes exactly the bytes of each space-joined
-    // gram with the xxhash64 seed, so its output set is identical to
-    // the expression fallback's.
-    val prepared =
-      if (Native.enabled(docs, "graft_ngram_hashes"))
-        docs.select(col(idCol).as("id"), blockCol.as("block"),
-            text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-          .select(col("id"), col("block"),
-            array_sort(call_function("graft_ngram_hashes", col("toks"), lit(n))).as("grams"))
-      else docs
-        .select(col(idCol).as("id"), blockCol.as("block"),
-          text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-        .select(col("id"), col("block"), text.wordNgramsOfTokens(col("toks"), n).as("g"))
-        .select(col("id"), col("block"), array_sort(hashing.elementHashes(col("g"))).as("grams"))
     // prepared feeds three subplans (candidate join sides + the verify
     // broadcast) — persist it.
-    val grams = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = sortedGramHashes(docs, textCol, idCol, blockCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Candidates carry the lossless size prefilter in the join
     // condition — J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so pairs whose
     // gram counts differ by more than 1/threshold can never pass. The
@@ -625,13 +601,11 @@ object Dedup {
               sizeOk)
           .select(col("a.id").as("id1"), col("b.id").as("id2"))
       }
-    // Verify-join strategy is size-gated (see verifyHinted): AQE
-    // runtime stats by default, never an unconditional broadcast of an
-    // O(corpus) table.
+    // Verify-join strategy is size-gated (see the object scaladoc).
     val verified = candidates
-      .join(verifyHinted(grams.select(col("id"), col("grams")), verifyBroadcast).as("h1"),
+      .join(grams.select(col("id"), col("grams")).as("h1"),
         col("id1") === col("h1.id"))
-      .join(verifyHinted(grams.select(col("id"), col("grams")), verifyBroadcast).as("h2"),
+      .join(grams.select(col("id"), col("grams")).as("h2"),
         col("id2") === col("h2.id"))
       .withColumn("inter",
         Dedup.intersectSize(docs, col("h1.grams"), col("h2.grams")).cast("double"))
@@ -684,22 +658,11 @@ object Dedup {
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        blockCol: Column, n: Int = 3,
                        threshold: Double = 0.8,
-                       verifyBroadcast: Option[Boolean] = None,
                        prefixFilter: Boolean = true): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val prepared =
-      if (Native.enabled(docs, "graft_ngram_hashes"))
-        docs.select(col(idCol).as("id"), blockCol.as("block"),
-            text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-          .select(col("id"), col("block"),
-            array_sort(call_function("graft_ngram_hashes", col("toks"), lit(n))).as("grams"))
-      else docs
-        .select(col(idCol).as("id"), blockCol.as("block"),
-          text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-        .select(col("id"), col("block"), text.wordNgramsOfTokens(col("toks"), n).as("g"))
-        .select(col("id"), col("block"), array_sort(hashing.elementHashes(col("g"))).as("grams"))
-    val grams = prepared.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grams = sortedGramHashes(docs, textCol, idCol, blockCol, n)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // gram-less docs (shorter than n tokens) have no containment
     // evidence either way — candidates need both sides non-empty
     val candidates =
@@ -736,9 +699,9 @@ object Dedup {
           .select(col("a.id").as("id1"), col("b.id").as("id2"))
       }
     val verified = candidates
-      .join(verifyHinted(grams.select(col("id"), col("grams")), verifyBroadcast).as("h1"),
+      .join(grams.select(col("id"), col("grams")).as("h1"),
         col("id1") === col("h1.id"))
-      .join(verifyHinted(grams.select(col("id"), col("grams")), verifyBroadcast).as("h2"),
+      .join(grams.select(col("id"), col("grams")).as("h2"),
         col("id2") === col("h2.id"))
       .withColumn("inter",
         Dedup.intersectSize(docs, col("h1.grams"), col("h2.grams")).cast("double"))
@@ -818,8 +781,7 @@ object Dedup {
   def embeddingNearDupPairsLsh(embs: DataFrame, vecCol: String, idCol: String,
                                threshold: Double, dim: Int,
                                numPlanes: Int = 0, bands: Int = 6,
-                               seed: Long = 42L,
-                               verifyBroadcast: Option[Boolean] = None): DataFrame = {
+                               seed: Long = 42L): DataFrame = {
     // bands is validated FIRST: the modulo below would otherwise throw
     // a bare ArithmeticException (/ by zero) for bands = 0 instead of
     // the intended message
@@ -829,14 +791,10 @@ object Dedup {
       else bands * Similarity.autoBandBits(embs.count(), bands)
     require(nPlanes % bands == 0 && nPlanes <= 63,
       s"numPlanes ($nPlanes) must be a multiple of bands ($bands) and <= 63")
-    import graft.functions.vectors
     val planes = Similarity.hyperplanes(nPlanes, dim, seed)
     val bitsPerBand = nPlanes / bands
     val dotOf = Native.dotOf(embs)
-    val sigOf: Column => Column =
-      if (Native.enabled(embs, "graft_hyperplane_sig"))
-        v => call_function("graft_hyperplane_sig", v, lit(planes.flatten.toArray), lit(dim))
-      else v => vectors.hyperplaneSig(v, planes)
+    val sigOf = Native.hyperplaneSigOf(embs, planes, dim)
     val preparedPlan = embs.select(col(idCol).as("id"), col(vecCol).as("v"),
         sqrt(dotOf(col(vecCol), col(vecCol))).as("nrm"))
       .withColumn("sig", sigOf(col("v")))
@@ -856,8 +814,8 @@ object Dedup {
     val vecs = prepared.select(col("id"), col("v"), col("nrm"))
     val nn = col("h1.nrm") * col("h2.nrm")
     candidates
-      .join(verifyHinted(vecs, verifyBroadcast).as("h1"), col("id1") === col("h1.id"))
-      .join(verifyHinted(vecs, verifyBroadcast).as("h2"), col("id2") === col("h2.id"))
+      .join(vecs.as("h1"), col("id1") === col("h1.id"))
+      .join(vecs.as("h2"), col("id2") === col("h2.id"))
       .withColumn("cosine",
         when(nn === 0.0, 0.0).otherwise(dotOf(col("h1.v"), col("h2.v")) / nn))
       .filter(col("cosine") >= threshold)
@@ -871,11 +829,9 @@ object Dedup {
     */
   def embeddingNearDupPairsLshAuto(embs: DataFrame, vecCol: String, idCol: String,
                                    threshold: Double, dim: Int,
-                                   bands: Int = 6, seed: Long = 42L,
-                                   verifyBroadcast: Option[Boolean] = None): DataFrame =
+                                   bands: Int = 6, seed: Long = 42L): DataFrame =
     embeddingNearDupPairsLsh(embs, vecCol, idCol, threshold, dim,
-      numPlanes = 0, bands = bands, seed = seed,
-      verifyBroadcast = verifyBroadcast)
+      numPlanes = 0, bands = bands, seed = seed)
 
   /** SAMPLED BANDING-RECALL gate for EMBEDDING LSH (d23) —
     * [[bandingRecall]]'s role for the d8/d9 hyperplane family:
@@ -930,15 +886,10 @@ object Dedup {
     require(bands >= 1, s"bands must be >= 1, got $bands")
     require(numPlanes >= 1 && numPlanes % bands == 0 && numPlanes <= 63,
       s"numPlanes ($numPlanes) must be in [1, 63] and a multiple of bands ($bands)")
-    import graft.functions.vectors
     val planes = Similarity.hyperplanes(numPlanes, dim, seed)
     val bitsPerBand = numPlanes / bands
     val dotOf = Native.dotOf(embs)
-    val sigOf: Column => Column =
-      if (Native.enabled(embs, "graft_hyperplane_sig"))
-        v => call_function("graft_hyperplane_sig", v,
-          lit(planes.flatten.toArray), lit(dim))
-      else v => vectors.hyperplaneSig(v, planes)
+    val sigOf = Native.hyperplaneSigOf(embs, planes, dim)
     val sampledPlan = embs
       .where(substring(md5(concat(col(idCol).cast("string"), lit(":"),
         lit(salt))), 1, 4) < lit(sampleHex))

@@ -117,7 +117,6 @@ object Graph {
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           maxRounds: Int = 64, blockRounds: Int = 6,
                           fallbackToAlternating: Boolean = true,
-                          firstBlockRounds: Int = -1,
                           driverThreshold: Int = DriverCcEdgeThreshold): DataFrame = {
     val half = pairs
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
@@ -171,21 +170,14 @@ object Graph {
     var rounds = 0
     var changed = 1L
     while (changed > 0 && rounds < maxRounds) {
-      // `firstBlockRounds` (opt-in, -1 = same as blockRounds) shortens
-      // the FIRST block for callers whose graphs provably converge in
-      // 2-3 rounds, trading rounds of tiny-shuffle scheduling floor
-      // against the risk of a second full block. MEASURED on the d12 /
-      // g4 cluster graphs at sf0.1: their 2-probe near-dup chains need
-      // 4-5 rounds, so firstBlock=3 RAISES the cost 4.2 -> 6.8 s (the
-      // second block fires) — which is why the default stays neutral;
-      // labels are identical either way (min-propagation is monotone;
-      // rounds past convergence change nothing).
-      val nr = if (rounds == 0 && firstBlockRounds > 0)
-                 math.min(firstBlockRounds, blockRounds)
-               else blockRounds
-      val obs = Seq.fill(nr)(Observation())
+      // Every block is blockRounds long, the first included. A shorter
+      // first block MEASURED slower on the d12 / g4 cluster graphs at
+      // sf0.1: their 2-probe near-dup chains need 4-5 rounds, so a
+      // 3-round first block RAISED the cost 4.2 -> 6.8 s (the second
+      // block fires).
+      val obs = Seq.fill(blockRounds)(Observation())
       var cur = labels
-      for (i <- 0 until nr)
+      for (i <- 0 until blockRounds)
         cur = edges.join(cur, col("b") === col("id"))
           .select(col("a"), col("comp"), col("self"))
           .groupBy("a").agg(min("comp").as("comp"),
@@ -202,7 +194,7 @@ object Graph {
       // alternating fallback / the non-convergence require instead of
       // silently returning unstable labels.
       val perRound = obs.map(_.get.get("changed").map(_.asInstanceOf[Long]).getOrElse(-1L))
-      rounds += nr
+      rounds += blockRounds
       changed = if (perRound.contains(0L)) 0L else perRound.last
     }
     edges.unpersist()
@@ -247,7 +239,9 @@ object Graph {
     * propagation form would exceed its round budget.
     */
   def connectedComponentsAlternating(pairs: DataFrame, srcCol: String,
-                                     dstCol: String, maxIters: Int = 32): DataFrame = {
+                                     dstCol: String): DataFrame = {
+    // O(log n) iterations: 32 covers any graph that fits a cluster
+    val maxIters = 32
     // canonicalize ONCE (and checkpoint: the generating subtree must
     // not re-execute); keep the full vertex set before dropping
     // self-pairs so vertices that appear ONLY as (v, v) still get a
@@ -363,18 +357,16 @@ object Graph {
     * partial-agg shuffle (sum per dst) — O(E) traffic, never O(N²);
     * degree rides in the state table so no extra join per round.
     * Edges are materialized once up front (they feed the degree table
-    * and every iteration), and state is `localCheckpoint`ed every
-    * `checkpointEvery` rounds so lineage stays bounded at any
-    * iteration count. Driver state is one Long (N).
+    * and every iteration), and state is `localCheckpoint`ed every 5
+    * rounds so lineage stays bounded at any iteration count. Driver state is one Long (N).
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int = 3,
-               damping: Double = 0.85, checkpointEvery: Int = 5,
+               damping: Double = 0.85,
                driverThreshold: Int = DriverCcEdgeThreshold): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(damping > 0.0 && damping < 1.0,
       s"damping must be in (0, 1), got $damping")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+    val checkpointEvery = 5
     import graft.functions.num.fround
     val ids = nodes.select(col(nodes.columns.head).as("id"))
     val e = edges
@@ -594,19 +586,18 @@ object Graph {
     * src's current label to dst) + one partial-agg shuffle per vote
     * count + one partial-agg argmax per vertex via
     * `min(struct(-count, label))` — O(E) traffic, no windows, no
-    * driver state; `localCheckpoint` every `checkpointEvery` rounds
-    * bounds lineage exactly like [[pageRank]]. Vertices = edge
+    * driver state; `localCheckpoint` every 2 rounds bounds lineage
+    * like [[pageRank]]. Vertices = edge
     * endpoints (an isolated doc is its own community by definition).
     *
     * Returns (id, label, n_members): the converged-after-`iters`
     * community label and its community size.
     */
   def labelPropagation(pairs: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int = 3, checkpointEvery: Int = 2,
+                       iters: Int = 3,
                        driverThreshold: Int = DriverCcEdgeThreshold): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+    val checkpointEvery = 2
     // canonicalize + dedup so a pair listed twice (or in both
     // directions) votes once per direction, then expand to directed
     // edges; checkpoint once — the edge table feeds every round

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.vectors
 
@@ -16,32 +15,13 @@ import graft.functions.vectors
 object Similarity {
 
   /** Top-k rows per query from a scored candidate set, ranked by
-    * (cosine desc, neighbor_id asc).
-    *
-    * Native path: the `graft_topk` bounded aggregate — partial-agg
-    * friendly, so each map task forwards at most k entries per query
-    * and the shuffle carries O(k · queries · partitions) rows.
-    * Fallback: the window row_number idiom — same rows out, but every
-    * candidate row crosses the exchange and is sorted. The two paths
-    * are asserted row-identical in NativeSpec.
+    * (cosine desc, neighbor_id asc) — [[Native.topKOf]]: the bounded
+    * `graft_topk` aggregate (shuffle O(k · queries · partitions)) or
+    * the window idiom, the same rows (asserted in NativeSpec).
     */
-  private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    if (Native.enabled(scored, "graft_topk")) {
-      scored.groupBy("query_id")
-        .agg(call_function("graft_topk",
-          col("cosine"), col("neighbor_id"), lit(k)).as("topk"))
-        .select(col("query_id"), posexplode(col("topk")))
-        .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("neighbor_id"), round(col("col.score"), 4).as("cosine"))
-    } else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"),
-          round(col("cosine"), 4).as("cosine"))
-    }
-  }
+  private[graft] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    Native.topKOf(scored, "query_id", "cosine", "neighbor_id", k)
+      .withColumn("cosine", round(col("cosine"), 4))
 
   /** Exact top-k cosine neighbors for each probe row.
     * Probes must be small enough to broadcast (they are, by contract:
@@ -238,11 +218,7 @@ object Similarity {
     val planes = hyperplanes(nPlanes, dim)
     val bitsPerBand = nPlanes / bands
     val dot = Native.dotOf(corpus)
-    val sigOf: Column => Column =
-      if (Native.enabled(corpus, "graft_hyperplane_sig"))
-        v => call_function("graft_hyperplane_sig",
-          v, lit(planes.flatten.toArray), lit(dim))
-      else v => vectors.hyperplaneSig(v, planes)
+    val sigOf = Native.hyperplaneSigOf(corpus, planes, dim)
     def withBands(df: DataFrame, id: String, vec: String, radius: Int): DataFrame = {
       val sig = sigOf(col(vec))
       val bandCols = (0 until bands).flatMap { b =>
@@ -310,11 +286,7 @@ object Similarity {
     val planes = hyperplanes(nPlanes, dim, seed)
     val bitsPerBand = nPlanes / bands
     val dot = Native.dotOf(corpus)
-    val sigOf: Column => Column =
-      if (Native.enabled(corpus, "graft_hyperplane_sig"))
-        v => call_function("graft_hyperplane_sig",
-          v, lit(planes.flatten.toArray), lit(dim))
-      else v => vectors.hyperplaneSig(v, planes)
+    val sigOf = Native.hyperplaneSigOf(corpus, planes, dim)
     val preparedPlan = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
         sqrt(dot(col(vecCol), col(vecCol))).as("nrm"))
       .withColumn("sig", sigOf(col("v")))
@@ -552,25 +524,14 @@ object Similarity {
   private case class PqParts(encoded: DataFrame, pt: DataFrame, adist: Column)
 
   /** Rank an ADC-scored candidate set by (adist asc, neighbor asc) and
-    * keep the top k per query — graft_topk (negated score) when
-    * available, the window idiom otherwise.
+    * keep the top k per query: [[Native.topKOf]] over the negated
+    * distance.
     */
   private def rankByAdist(scored: DataFrame, k: Int): DataFrame =
-    if (Native.enabled(scored, "graft_topk")) {
-      scored.withColumn("negd", -col("adist"))
-        .groupBy("query_id")
-        .agg(call_function("graft_topk",
-          col("negd"), col("neighbor_id"), lit(k)).as("topk"))
-        .select(col("query_id"), posexplode(col("topk")))
-        .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("neighbor_id"), (-col("col.score")).as("adist"))
-    } else {
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("adist").asc, col("neighbor_id"))
-      scored.withColumn("rank", row_number().over(w).cast("int"))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("adist"))
-    }
+    Native.topKOf(scored.withColumn("negd", -col("adist")),
+        "query_id", "negd", "neighbor_id", k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        (-col("negd")).as("adist"))
 
   private def pqParts(corpus: DataFrame, probes: DataFrame, vecCol: String,
                       idCol: String, subspaces: Int, codebookSize: Int,

@@ -27,41 +27,31 @@ object TextAnalysis {
         fround(sum("n_chars").cast("double") / count(lit(1)), 4).as("avg_chars"),
         fround(sum("n_tokens").cast("double") / count(lit(1)), 4).as("avg_tokens"))
 
-  /** Per-document quality features + score. Native path: every output
-    * feeds off ONE `graft_text_stats` pass (the alias is referenced
-    * multiple times, so CollapseProject keeps the kernel call in its
-    * own projection — one evaluation per row); values are
-    * bit-identical to the expression chain (coalesces replicate
-    * `tokens(null) = []`, n_punct keeps the length(null) null).
+  /** Per-document quality features + score, all read off ONE
+    * [[Native.textStatsOf]] struct staged in its own column (the alias
+    * is referenced multiple times, so CollapseProject keeps it in its
+    * own projection — one evaluation per row). The coalesces replicate
+    * `tokens(null) = []`; n_punct keeps the length(null) null.
     */
   def qualityScores(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (Native.enabled(docs, "graft_text_stats"))
-      docs
-        .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
-        .select(col(idCol).as("doc_id"),
-          coalesce(col("graft_stats.n_tokens"), lit(0L)).as("n_tokens"),
-          col("graft_stats.n_punct").as("n_punct"),
-          coalesce(col("graft_stats.hits_en"), lit(0L)).as("n_stopwords"),
-          text.qualityScoreFromStats(col(textCol), col("graft_stats")).as("quality"))
-    else docs.select(col(idCol).as("doc_id"),
-      text.tokenCount(col(textCol)).as("n_tokens"),
-      text.punctCount(col(textCol)).as("n_punct"),
-      text.markerHits(col(textCol), text.EnMarkers).as("n_stopwords"),
-      text.qualityScore(col(textCol)).as("quality"))
+    docs
+      .withColumn("graft_stats", Native.textStatsOf(docs)(col(textCol)))
+      .select(col(idCol).as("doc_id"),
+        coalesce(col("graft_stats.n_tokens"), lit(0L)).as("n_tokens"),
+        col("graft_stats.n_punct").as("n_punct"),
+        coalesce(col("graft_stats.hits_en"), lit(0L)).as("n_stopwords"),
+        text.qualityScoreFromStats(col(textCol), col("graft_stats")).as("quality"))
 
   /** `docs` plus [[graft.functions.text.qualityScore]] of `textCol` as
-    * `outCol`. Native path: the `graft_text_stats` struct is staged in
-    * its own column, as in [[qualityScores]], so the kernel runs once
-    * per row whether or not subexpression elimination runs; values are
-    * bit-identical to the expression chain.
+    * `outCol`. The [[Native.textStatsOf]] struct is staged in its own
+    * column, as in [[qualityScores]], so it is evaluated once per row
+    * whether or not subexpression elimination runs.
     */
   def withQualityScore(docs: DataFrame, textCol: String, outCol: String): DataFrame =
-    if (Native.enabled(docs, "graft_text_stats"))
-      docs
-        .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
-        .withColumn(outCol, text.qualityScoreFromStats(col(textCol), col("graft_stats")))
-        .drop("graft_stats")
-    else docs.withColumn(outCol, text.qualityScore(col(textCol)))
+    docs
+      .withColumn("graft_stats", Native.textStatsOf(docs)(col(textCol)))
+      .withColumn(outCol, text.qualityScoreFromStats(col(textCol), col("graft_stats")))
+      .drop("graft_stats")
 
   /** Global token frequency top-k (explode → count → top-k). The
     * groupBy is partial-agg friendly; the final top-k sorts only the
@@ -148,18 +138,15 @@ object TextAnalysis {
       text.tokenCount(col(textCol)).as("n_tokens"))
   }
 
-  /** Heuristic language ID per document. Native path: the kernel's
-    * struct is staged in its own column, as in [[qualityScores]], so
-    * it is evaluated once per row whether or not subexpression
-    * elimination runs.
+  /** Heuristic language ID per document, read off the
+    * [[Native.textStatsOf]] struct staged in its own column, as in
+    * [[qualityScores]].
     */
   def languageId(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    if (Native.enabled(docs, "graft_text_stats"))
-      docs
-        .withColumn("graft_stats", call_function("graft_text_stats", col(textCol)))
-        .select(col(idCol).as("doc_id"),
-          text.langIdFromStats(col("graft_stats")).as("lang_pred"))
-    else docs.select(col(idCol).as("doc_id"), text.langId(col(textCol)).as("lang_pred"))
+    docs
+      .withColumn("graft_stats", Native.textStatsOf(docs)(col(textCol)))
+      .select(col(idCol).as("doc_id"),
+        text.langIdFromStats(col("graft_stats")).as("lang_pred"))
 
   /** Per-group vocabulary stats: exact distinct-token count beside the
     * raw token count — the count-distinct aggregation family. Exact
@@ -267,17 +254,8 @@ object TextAnalysis {
     */
   def sourceOverlap(docs: DataFrame, textCol: String, groupCol: String,
                     n: Int = 3): DataFrame = {
-    val prepared =
-      if (Native.enabled(docs, "graft_ngram_hashes"))
-        docs.select(col(groupCol).as("grp"),
-            text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-          .select(col("grp"),
-            call_function("graft_ngram_hashes", col("toks"), lit(n)).as("grams"))
-      else docs
-        .select(col(groupCol).as("grp"),
-          text.tokens(Native.normOf(docs)(col(textCol))).as("toks"))
-        .select(col("grp"), text.wordNgramsOfTokens(col("toks"), n).as("g"))
-        .select(col("grp"), graft.functions.hashing.elementHashes(col("g")).as("grams"))
+    val prepared = Native.ngramHashesOf(docs.select(col(groupCol).as("grp"),
+      text.tokens(Native.normOf(docs)(col(textCol))).as("toks")), n)
     // gset feeds totals + BOTH sides of the overlap self-join:
     // unpersisted, the tokenize + gram-hash + distinct pass runs once
     // per consumer. Distinct (group, gram) is ≪ the corpus (grams
@@ -844,18 +822,14 @@ object TextAnalysis {
       .select(col(idCol).as("doc_id"),
         text.tokens(col("graft_norm")).as("toks"))
       .withColumn("dl", size(col("toks")).cast("double"))
-    // corpus stats via ONE graft_text_stats pass when available: the
-    // full tokenize re-ran just for avg(dl) otherwise (the n_tokens
-    // field equals size(tokens) for every input; null text coalesces
-    // to 0 exactly as size(tokens(null)) = 0).
-    val stats =
-      if (Native.enabled(docs, "graft_text_stats"))
-        docs.select(coalesce(call_function("graft_text_stats",
-            norm(col(textCol))).getField("n_tokens"), lit(0L))
-            .cast("double").as("dl"))
-          .agg(count(lit(1)).cast("double").as("n_docs"),
-            avg(col("dl")).as("avgdl"))
-      else lens.agg(count(lit(1)).cast("double").as("n_docs"),
+    // corpus stats off the text-stats struct's n_tokens (it equals
+    // size(tokens) for every input; null text coalesces to 0 exactly
+    // as size(tokens(null)) = 0): with the kernel, one byte scan
+    // instead of a second full tokenize just for avg(dl)
+    val stats = docs
+      .select(coalesce(Native.textStatsOf(docs)(norm(col(textCol)))
+        .getField("n_tokens"), lit(0L)).cast("double").as("dl"))
+      .agg(count(lit(1)).cast("double").as("n_docs"),
         avg(col("dl")).as("avgdl"))
 
     val (qterms, qvocab) = queryTerms(docs, queries)

@@ -53,15 +53,13 @@ import graft.functions.TopKAgg
   *     (`rn <= k`, `rn < k`, `k >= rn`, `k > rn`, `rn = 1`); other
   *     conjuncts survive as a residual Filter above the rewrite.
   *
-  * Disable with `spark.graft.topkRewrite.enabled=false` (used by the
-  * equivalence spec to run both forms). Injected via
-  * [[graft.GraftExtensions]] `injectOptimizerRule`, so extension-less
-  * sessions keep the plain window plan — same fallback philosophy as
-  * the native kernels.
+  * `graft.native.disabled=true`, the switch that turns off every
+  * native kernel, turns the rule off too (the equivalence spec runs
+  * both forms with it). Injected via [[graft.GraftExtensions]]
+  * `injectOptimizerRule`, so extension-less sessions keep the plain
+  * window plan — same fallback philosophy as the native kernels.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
-
-  val ConfKey = "spark.graft.topkRewrite.enabled"
 
   /** `rn` itself, or the analyzer-inserted widening cast the comparison
     * against a bigint literal wraps it in (`rn <= 3L` analyzes to
@@ -107,7 +105,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(ConfKey, "true").toBoolean) return plan
+    if (conf.getConfString(graft.ops.Native.DisabledConf, "false").toBoolean) return plan
     plan.transformUp {
       case f @ Filter(cond,
           w @ Window(Seq(alias @ Alias(WindowExpression(RowNumber(), spec), _)),

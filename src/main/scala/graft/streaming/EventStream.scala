@@ -472,11 +472,13 @@ object EventStream {
           priorBatchDirs(spark, s"$indexDir/$sub", batchId).map(_._2)
         val (ph, pb) = (prior("hashes"), prior("bands"))
         // empty-index schemas derive from a zero-row prep of the batch
-        // itself, so id/hash types always match the caller's
+        // itself, so id/hash types always match the caller's; the
+        // index reads pass them too, so no micro-batch runs a schema-
+        // inference job
         val (h0, b0) = graft.ops.Dedup.minhashPrepare(batch.limit(0),
           textCol, idCol, numPerm, bands, shingleK, jaccardThreshold)
-        val hIdx = if (ph.isEmpty) h0 else spark.read.parquet(ph: _*)
-        val bIdx = if (pb.isEmpty) b0 else spark.read.parquet(pb: _*)
+        val hIdx = if (ph.isEmpty) h0 else spark.read.schema(h0.schema).parquet(ph: _*)
+        val bIdx = if (pb.isEmpty) b0 else spark.read.schema(b0.schema).parquet(pb: _*)
         val verdicts = graft.ops.Dedup.minhashIncrementalPrepared(hIdx, bIdx,
             batch, textCol, idCol, numPerm, bands, shingleK, jaccardThreshold)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -545,14 +547,14 @@ object EventStream {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val prior = priorBatchDirs(spark, indexDir, batchId).map(_._2)
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("fingerprint",
+            org.apache.spark.sql.types.StringType)))
         val index =
           if (prior.isEmpty)
             spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("fingerprint",
-                  org.apache.spark.sql.types.StringType))))
-          else spark.read.parquet(prior: _*)
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          else spark.read.schema(schema).parquet(prior: _*)
         val verdicts = graft.ops.Dedup.incrementalDedup(index, batch,
             textCol, idCol, indexIsFingerprints = true)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -827,7 +829,8 @@ object EventStream {
             .select(col("id").as(idCol), col("cluster_id")), Seq(idCol))
         val prior = priorBatchDirs(spark, indexDir, batchId).map(_._2)
         val idx =
-          if (prior.isEmpty) ext.limit(0) else spark.read.parquet(prior: _*)
+          if (prior.isEmpty) ext.limit(0)
+          else spark.read.schema(ext.schema).parquet(prior: _*)
         graft.ops.Cluster.semDedupIncremental(cents, idx, batch.toDF(),
             vecCol, idCol, threshold, blockProbes)
           .write.mode("overwrite").parquet(s"$verdictDir/batch_id=$batchId")

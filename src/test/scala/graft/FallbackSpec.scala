@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Cluster, Curation, Dedup, Similarity, TextAnalysis}
 import graft.tables.Tables
 
 /** The ops must produce identical results with native kernels disabled
   * (`graft.native.disabled`) — this exercises the pure-expression
   * fallback branches that a session without GraftExtensions would run.
+  * The conf also turns TopKRewriteRule off, so window top-k forms run
+  * as written.
   */
 class FallbackSpec extends AnyFunSuite {
   import SparkHarness._
@@ -21,6 +23,8 @@ class FallbackSpec extends AnyFunSuite {
     val docs = Tables(spark, sfDir).documents
     val emb = Tables(spark, sfDir).embeddings
     val probes = emb.filter(col("vec_id") % 100 === 0)
+    val scored = TextAnalysis.withQualityScore(docs, "text", "quality")
+      .select("doc_id", "lang", "source", "quality")
     Seq(
       Dedup.exactGroups(docs, "text", "doc_id")
         .orderBy("fingerprint").collect().mkString("|"),
@@ -69,7 +73,38 @@ class FallbackSpec extends AnyFunSuite {
       graft.ops.Cluster.kmeansAssign(emb, "embedding", "vec_id", 8, 2)
         .orderBy("id").collect().mkString("|"),
       graft.ops.Cluster.semDedupPairs(emb, "embedding", "vec_id", 4, 0.4)
-        .orderBy("id1", "id2").collect().mkString("|"))
+        .orderBy("id1", "id2").collect().mkString("|"),
+      // text-stats consumers: graft_text_stats vs the expression struct
+      TextAnalysis.qualityScores(docs, "text", "doc_id")
+        .orderBy("doc_id").collect().mkString("|"),
+      TextAnalysis.languageId(docs, "text", "doc_id")
+        .orderBy("doc_id").collect().mkString("|"),
+      Curation.qualityFilter(docs, "text", "doc_id")
+        .orderBy("doc_id").collect().mkString("|"),
+      TextAnalysis.bm25Search(docs, "text", "doc_id",
+          Seq(0L -> "spark window merge", 1L -> "vector stream"), k = 5)
+        .orderBy("query_id", "rank").collect().mkString("|"),
+      // n-gram hash consumers: graft_ngram_hashes vs gram strings hashed
+      TextAnalysis.sourceOverlap(docs, "text", "source")
+        .orderBy("grp_a", "grp_b").collect().mkString("|"),
+      Dedup.containmentPairs(docs, "text", "doc_id", col("source"), threshold = 0.5)
+        .orderBy("id_sub", "id_sup").collect().mkString("|"),
+      // hyperplane-signature consumers
+      Similarity.knnGraph(emb, "embedding", "vec_id", k = 5, dim = 64, bands = 4)
+        .orderBy("id", "rank").collect().mkString("|"),
+      Dedup.embeddingBandingRecall(emb, "embedding", "vec_id",
+          threshold = 0.4, dim = 64)
+        .collect().mkString("|"),
+      Curation.decontaminateByEmbedding(emb, "embedding", "vec_id",
+          col("vec_id") % 10 === 0, threshold = 0.4, dim = 64)
+        .orderBy("doc_id").collect().mkString("|"),
+      // top-k consumers: graft_topk vs the row_number window
+      Curation.weightedSample(scored, "doc_id", "lang", "quality", "ws", 5)
+        .orderBy("grp", "rank").collect().mkString("|"),
+      Curation.sourceCap(scored, "doc_id", "source", "quality", 5)
+        .orderBy("grp", "rank").collect().mkString("|"),
+      Cluster.clusterSample(emb, "embedding", "vec_id", k = 4, nPer = 5)
+        .orderBy("cluster_id", "rank").collect().mkString("|"))
   }
 
   test("fallback expression paths match native kernel results exactly") {
@@ -77,6 +112,19 @@ class FallbackSpec extends AnyFunSuite {
     val fallback = withFallback(run())
     for (((n, f), i) <- native.zip(fallback).zipWithIndex)
       assert(n == f, s"op $i diverges between native and fallback")
+  }
+
+  test("sourceCap drops null-score rows on both the native and the window path") {
+    import spark.implicits._
+    val df = Seq[(Long, String, Option[Double])](
+        (1L, "a", Some(0.5)), (2L, "a", None), (3L, "a", Some(0.9)),
+        (4L, "b", None), (5L, "b", Some(0.1)))
+      .toDF("doc_id", "source", "quality")
+    def cap(): String = Curation.sourceCap(df, "doc_id", "source", "quality", 3)
+      .orderBy("grp", "rank").collect().mkString("|")
+    val native = cap()
+    assert(native == withFallback(cap()), "null scores rank differently across paths")
+    assert(native == "[a,1,3,0.9]|[a,2,1,0.5]|[b,1,5,0.1]", native)
   }
 
   test("asofJoin composed fallback matches the planned physical operator row-for-row") {

@@ -228,7 +228,11 @@ class NativeSpec extends AnyFunSuite {
       // group 2: fewer rows than k
       (2L, 0.1, 1L),
       // group 3: negative scores
-      (3L, -0.2, 5L), (3L, -0.1, 6L), (3L, -0.3, 4L))
+      (3L, -0.2, 5L), (3L, -0.1, 6L), (3L, -0.3, 4L),
+      // group 4: NaN ranks above every number
+      (4L, 0.5, 7L), (4L, 1.0, 8L), (4L, Double.NaN, 9L),
+      // group 5: -0.0 equals 0.0, so the id breaks the tie
+      (5L, 0.0, 3L), (5L, -0.0, 2L), (5L, 0.0, 1L))
       .toDF("query_id", "cosine", "neighbor_id")
     val agg = rows.groupBy("query_id")
       .agg(call_function("graft_topk", col("cosine"), col("neighbor_id"), lit(2)).as("t"))
@@ -345,6 +349,7 @@ class NativeSpec extends AnyFunSuite {
       "The quick brown fox. And the dog, of course!",
       "the a and of to in is",                  // every EN marker
       "THE AND In IS Of",                       // case-insensitive marker hits
+      "IN caf\u00e9 IS",                        // non-ASCII: locale lowercasing
       "el la de que y los le et les des der die und das ein zu",
       "  leading and trailing spaces  ",
       "\ttab-led start",                        // leading tab -> empty token
@@ -359,31 +364,26 @@ class NativeSpec extends AnyFunSuite {
       null
     ).toDF("text")
     val stats = call_function("graft_text_stats", col("text"))
-    // quality + language: kernel arithmetic twins vs the regex chains
-    val q = rows.select(
-      text.qualityScoreFromStats(col("text"), stats).as("nq"),
-      text.qualityScore(col("text")).as("eq"),
-      text.langIdFromStats(stats).as("nl"),
-      text.langId(col("text")).as("el"))
-    assert(q.filter(!(col("nq") <=> col("eq"))).count() == 0, "quality diverges")
-    assert(q.filter(!(col("nl") <=> col("el"))).count() == 0, "langId diverges")
-    // every raw statistic vs its expression twin
-    val toks = text.tokens(col("text"))
-    val cmp = rows.withColumn("s", stats).select(
-      (coalesce(col("s.n_tokens"), lit(0L)) <=> size(toks).cast("long")).as("c1"),
-      (coalesce(col("s.sum_tok_len"), lit(0L)) <=>
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t))).as("c2"),
-      (coalesce(col("s.max_tok_len"), lit(0)) <=>
-        coalesce(array_max(transform(toks, t => length(t))), lit(0))).as("c3"),
-      (col("s.n_punct") <=> text.punctCount(col("text"))).as("c4"),
-      (col("s.n_digit") <=> text.digitCount(col("text"))).as("c5"),
-      (coalesce(col("s.hits_en"), lit(0L)) <=>
-        text.markerHits(col("text"), text.EnMarkers)).as("c6"),
-      (coalesce(col("s.hits_de"), lit(0L)) <=>
-        text.markerHits(col("text"), text.DeMarkers)).as("c7"))
-    val bad = cmp.filter(!col("c1") || !col("c2") || !col("c3") || !col("c4") ||
-      !col("c5") || !col("c6") || !col("c7"))
-    assert(bad.count() == 0, "field mismatch vs expression twins")
+    def check(): Unit = {
+      // quality + language: the kernel struct vs the expression struct
+      val q = rows.select(
+        text.qualityScoreFromStats(col("text"), stats).as("nq"),
+        text.qualityScore(col("text")).as("eq"),
+        text.langIdFromStats(stats).as("nl"),
+        text.langId(col("text")).as("el"))
+      assert(q.filter(!(col("nq") <=> col("eq"))).count() == 0, "quality diverges")
+      assert(q.filter(!(col("nl") <=> col("el"))).count() == 0, "langId diverges")
+      // every field of the fallback struct (the null struct included)
+      val bad = rows.select(col("text"), stats.as("k"), text.textStats(col("text")).as("e"))
+        .collect().filter(r => r.get(1) != r.get(2))
+        .map(r => s"'${r.getString(0)}': kernel ${r.get(1)} vs expression ${r.get(2)}")
+      assert(bad.isEmpty, bad.mkString("\n"))
+    }
+    check()
+    // the non-ASCII rows lowercase with the default locale on both paths
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try check() finally java.util.Locale.setDefault(saved)
   }
 
   test("graft_text_stats lowercases markers as lower() does under a tr-TR default locale") {

@@ -6,10 +6,6 @@ import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.tables.Tables
 
 /** Scale-robustness guarantees that CORRECTNESS can't see:
-  *  - the d2/d4 verify joins produce identical pairs under every join
-  *    strategy (forced broadcast / forced shuffle-hash / AQE default),
-  *    so the 100 TB path (no broadcast) is interchangeable with the
-  *    small-corpus path;
   *  - SimHash block-banding finds EXACTLY the brute-force hamming<=h
   *    pair set (recall 1.0 by pigeonhole — 3 flipped bits leave >=3 of
   *    6 blocks clean);
@@ -25,30 +21,6 @@ class RobustSpec extends AnyFunSuite {
 
   private def docs = Tables(spark, sfDir).documents
   private def embs = Tables(spark, sfDir).embeddings
-
-  test("d2/d4 verify joins: identical pairs under broadcast, shuffle-hash, and AQE strategies") {
-    val strategies = Seq(Some(true), Some(false), None)
-    // each strategy runs on a swept session, so it recomputes the ops'
-    // persisted intermediates instead of reading the previous run's
-    def perStrategy(run: Option[Boolean] => String): Seq[String] =
-      strategies.map { strat => GraftSession.sweep(spark); run(strat) }
-    val d2 = perStrategy(strat =>
-      Dedup.minhashPairs(docs, "text", "doc_id", verifyBroadcast = strat)
-        .orderBy("id1", "id2").collect().mkString("|"))
-    val d4 = perStrategy(strat =>
-      Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source"),
-          verifyBroadcast = strat)
-        .orderBy("id1", "id2").collect().mkString("|"))
-    assert(d2.distinct.size == 1, "minhashPairs diverges across join strategies")
-    assert(d4.distinct.size == 1, "ngramJaccardPairs diverges across join strategies")
-    assert(d2.head.nonEmpty && d4.head.nonEmpty)
-    val d8 = perStrategy(strat =>
-      Dedup.embeddingNearDupPairsLsh(embs, "embedding", "vec_id", 0.4, dim = 64,
-          numPlanes = 24, bands = 6, verifyBroadcast = strat)
-        .orderBy("id1", "id2").collect().mkString("|"))
-    assert(d8.distinct.size == 1, "embeddingNearDupPairsLsh diverges across join strategies")
-    assert(d8.head.nonEmpty)
-  }
 
   test("intermediate lifetime: ops pin shared intermediates, sweep releases them") {
     val cache = spark.sharedState.cacheManager

@@ -932,6 +932,71 @@ class StreamParitySpec extends AnyFunSuite {
     assert(spark.read.parquet(indexDir).count() == 4L)
   }
 
+  /** Spark jobs `body` launches that read parquet footers to infer a
+    * schema: a schema-less read runs one driver-side `parallelize` job
+    * (an operator's own jobs carry their physical operator's RDD scope
+    * instead).
+    */
+  private def inferenceJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(r =>
+            r.name == "ParallelCollectionRDD" && r.scope.exists(_.name == "parallelize"))))
+          n.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      n.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("index sinks read the accumulated index with its known schema: no schema-inference job per micro-batch") {
+    import graft.ops.Similarity
+    val base = java.nio.file.Files.createTempDirectory("graft_sinkjobs")
+    // inference jobs of the SECOND micro-batch, the first one that
+    // reads an index written by an earlier batch
+    def secondBatch[A](ms: MemoryStream[A], b0: Seq[A], b1: Seq[A])(
+        start: => org.apache.spark.sql.streaming.StreamingQuery): Int = {
+      val q = start
+      try {
+        ms.addData(b0: _*); q.processAllAvailable()
+        ms.addData(b1: _*)
+        inferenceJobs(q.processAllAvailable())
+      } finally q.stop()
+    }
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"), (2L, "eta theta iota kappa"))
+    val more = Seq((3L, "alpha beta gamma delta epsilon zeta"), (4L, "lambda mu nu xi"))
+    val exact = MemoryStream[(Long, String)]
+    val exactJobs = secondBatch(exact, docs, more)(
+      EventStream.incrementalDedupSink(exact.toDS().toDF("doc_id", "text"),
+          "text", "doc_id", s"$base/exact/index", s"$base/exact/verdicts")
+        .option("checkpointLocation", s"$base/exact/ckpt").start())
+    val near = MemoryStream[(Long, String)]
+    val nearJobs = secondBatch(near, docs, more)(
+      EventStream.neardupIncrementalSink(near.toDS().toDF("doc_id", "text"),
+          "text", "doc_id", s"$base/near/index", s"$base/near/verdicts")
+        .option("checkpointLocation", s"$base/near/ckpt").start())
+    def v(x: Double, y: Double) = Array(x.toFloat, y.toFloat)
+    Similarity.ivfIndexTables((0 until 20).map { i =>
+        if (i % 2 == 0) (i.toLong, v(1.0, 0.01 * i)) else (i.toLong, v(0.01 * i, 1.0))
+      }.toDF("vec_id", "embedding"), "embedding", "vec_id", numCentroids = 2)
+      ._1.write.parquet(s"$base/sem/cents")
+    val sem = MemoryStream[(Long, Array[Float])]
+    val semJobs = secondBatch(sem, Seq((100L, v(1.0, 0.001)), (101L, v(-1.0, 0.004))),
+        Seq((200L, v(-1.0, 0.005))))(
+      EventStream.semDedupIngestSink(sem.toDS().toDF("vec_id", "embedding"),
+          "embedding", "vec_id", s"$base/sem/cents", s"$base/sem/index",
+          s"$base/sem/verdicts", threshold = 0.95)
+        .option("checkpointLocation", s"$base/sem/ckpt").start())
+    assert((exactJobs, nearJobs, semJobs) == ((0, 0, 0)),
+      "schema-inference jobs per micro-batch (exact, near-dup, semantic)")
+  }
+
   test("parity: funnel — streamed completions equal the batch stage rows") {
     import graft.streaming.EventStream.{FunnelOut, TypedEvent}
     import graft.ops.Funnel

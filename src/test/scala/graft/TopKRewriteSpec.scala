@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.TopKRewriteRule
 import graft.tables.Tables
 
 /** The injected optimizer rule (graft.plans.TopKRewriteRule): the
@@ -30,8 +29,8 @@ class TopKRewriteSpec extends AnyFunSuite {
     */
   private def withRule[A](enabled: Boolean)(f: => A): A = {
     GraftSession.sweep(spark)
-    spark.conf.set(TopKRewriteRule.ConfKey, enabled.toString)
-    try f finally spark.conf.unset(TopKRewriteRule.ConfKey)
+    spark.conf.set("graft.native.disabled", (!enabled).toString)
+    try f finally spark.conf.unset("graft.native.disabled")
   }
 
   private def planOf(df: DataFrame): String = {
