@@ -76,6 +76,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // SPARK_GRAFT_QUERIES=a,b,c restricts the run (sf1 headline set)
+    val only = SparkEntry.selectQueries(sys.env.get(SparkEntry.QueriesEnv)).toSet
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // ---- Calibration probe (pre) ----------------------------------
@@ -98,32 +100,16 @@ object Bench {
     // charged the session's one-time costs.
     val familyRank =
       Map('q' -> 0, 't' -> 1, 'm' -> 2, 'c' -> 3, 's' -> 4, 'd' -> 5)
-    // SPARK_GRAFT_QUERIES=a,b,c restricts the run (sf1 headline set);
-    // unknown names — or an empty value from an unset shell variable —
-    // fail loudly: neither may yield a vacuous total=0 line that reads
-    // as a result
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      require(names.nonEmpty,
-        "SPARK_GRAFT_QUERIES is set but names no queries (empty value)")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
     val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only.contains(name) }
       .sortBy { case (name, _) =>
         (familyRank.getOrElse(name.head, 9),
           name.drop(1).takeWhile(_.isDigit).toInt)
       }
     // Session hygiene between queries (GraftSession.sweep: clearCache
     // alone releases cached DATASETS but not localCheckpoint() RDD
-    // blocks — the r06 bleed). SPARK_GRAFT_NO_SWEEP=1 disables it for
-    // the A/B run that prices the sweep itself (leaked warm state
-    // subsidizing later queries vs the per-query GC tax).
-    val noSweep = sys.env.get("SPARK_GRAFT_NO_SWEEP").contains("1")
-    def sweep(): Unit = if (!noSweep) GraftSession.sweep(spark)
+    // blocks — the r06 bleed).
+    def sweep(): Unit = GraftSession.sweep(spark)
     // ---- Warmup phase A: page cache + parquet footers -------------
     // A cold recording box charges the first scan of every table its
     // disk reads; count() each input once so timed runs measure the
@@ -296,7 +282,7 @@ object Bench {
       case None => Some("BENCH_full_latest.json")
     }
     fullPath.foreach { p =>
-      val proto = s""""protocol":{"master":"local[$cpus]","sweep":${!noSweep},""" +
+      val proto = s""""protocol":{"master":"local[$cpus]","sweep":true,""" +
         s""""warmup":"${esc(warmDir.getOrElse("kernels-only"))}","repeats":"min-of-2+adaptive-3rd"}"""
       val full = line.dropRight(1) + "," + proto + "}"
       try {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BloomAgg, BloomContainsExpr, CosTopCExpr, CosTopCRoutedExpr, HyperplaneSigExpr, MinhashExpr, NgramHashesExpr, Md5Fold64Expr, NormalizeTextExpr, PqAdcTableExpr, PqArgminExpr, ShingleHashesExpr, Simhash64Expr, SortedIntersectSizeExpr, TextStatsExpr, TopKAgg, VectorDotExpr, WinnowExpr}
+import graft.functions.{BloomAgg, BloomContainsExpr, CosTopCExpr, HyperplaneSigExpr, MinhashExpr, NgramHashesExpr, Md5Fold64Expr, NormalizeTextExpr, PqAdcTableExpr, PqArgminExpr, ShingleHashesExpr, Simhash64Expr, SortedIntersectSizeExpr, TextStatsExpr, TopKAgg, VectorDotExpr, WinnowExpr}
 
 /** Registers graft's native Catalyst expressions through the public
   * SparkSessionExtensions hook:
@@ -52,11 +52,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_cos_topc",
         "graft_cos_topc(x, centroids, dim, n) - top-n (cos, idx) structs of the flattened centroids by cosine to x, cos desc / idx asc"),
       (children: Seq[Expression]) => CosTopCExpr(children(0), children(1), children(2), children(3))))
-    ext.injectFunction((FunctionIdentifier("graft_cos_topc_routed"),
-      info("graft_cos_topc_routed",
-        "graft_cos_topc_routed(x, meta_i, meta_d, dim, n) - exact top-n (cos, idx) via two-level triangle-inequality cell pruning; output identical to graft_cos_topc"),
-      (children: Seq[Expression]) => CosTopCRoutedExpr(children(0), children(1),
-        children(2), children(3), children(4))))
     ext.injectFunction((FunctionIdentifier("graft_text_stats"),
       info("graft_text_stats",
         "graft_text_stats(s) - one-pass token/marker/punct/digit statistics struct feeding the quality and language heuristics"),

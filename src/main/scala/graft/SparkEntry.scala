@@ -43,6 +43,27 @@ object SparkEntry {
       col("lat"), col("lon"))
   }
 
+  /** Environment variable naming the declared queries a main runs. */
+  val QueriesEnv = "SPARK_GRAFT_QUERIES"
+
+  /** The declared query names `spec` selects: every query when `spec`
+    * is None, else its comma-separated names in the order given
+    * (`SPARK_GRAFT_QUERIES`, or PlanDump's list argument). An empty
+    * list (an unset shell variable expanding to "") or an unknown name
+    * fails here, before any session starts: either would otherwise
+    * select nothing and read as a vacuous pass.
+    */
+  def selectQueries(spec: Option[String]): Seq[String] = spec match {
+    case None => queries.keys.toSeq.sorted
+    case Some(v) =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      require(names.nonEmpty, s"query selection '$v' names no queries")
+      val unknown = names.filterNot(queries.contains)
+      require(unknown.isEmpty,
+        s"query selection names undeclared queries: ${unknown.mkString(", ")}")
+      names
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- core relational / reference-derived -----
     "q1_pricing_summary" -> ((s, dir) => {

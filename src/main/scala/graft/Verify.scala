@@ -6,6 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_QUERIES=a,b,c restricts the dump (and the oracle
+    // json, so the driver-style compare checks the same subset) — used
+    // for the sf1 proof-point where the quadratic d2/d4 brute-force
+    // oracles are infeasible by design
+    val only = SparkEntry.selectQueries(sys.env.get(SparkEntry.QueriesEnv)).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_NO_EXT=1: run the whole gate WITHOUT GraftExtensions
     // — every operator must pass on its pure-built-in fallback path
@@ -15,25 +20,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_QUERIES=a,b,c restricts the dump (and the oracle
-    // json, so the driver-style compare checks the same subset) — used
-    // for the sf1 proof-point where the quadratic d2/d4 brute-force
-    // oracles are infeasible by design
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name would otherwise select NOTHING and the gate would
-    // pass vacuously (no result dirs, empty oracle json) — fail loudly;
-    // same for an EMPTY value (an unset shell variable expanding to ""),
-    // which would silently select zero queries
-    only.foreach { names =>
-      require(names.nonEmpty,
-        "SPARK_GRAFT_QUERIES is set but names no queries (empty value)")
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_QUERIES names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
-    def selected(name: String) = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => only.contains(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -55,7 +42,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => only.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

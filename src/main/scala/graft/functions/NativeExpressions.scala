@@ -147,174 +147,6 @@ object NativeKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** TWO-LEVEL ROUTED edition of [[cosTopC]] — EXACT top-n, with the
-    * k-centroid scan cut to ~O(√k·dim) per row by triangle-inequality
-    * group pruning (Elkan 2003's bound family, on the unit sphere):
-    * centroids arrive pre-grouped into g≈√k coarse cells, each with a
-    * representative vector and an angular RADIUS covering its members;
-    * for a query at angle θ_j from cell j's representative, no member
-    * can exceed cos(max(0, θ_j − r_j)), so once the running n-th best
-    * beats that bound (beyond a conservative fp margin) the whole cell
-    * skips unscanned. Cells scan best-bound-first, so the break fires
-    * as early as the geometry allows.
-    *
-    * EXACTNESS CONTRACT: output is bit-identical to [[cosTopC]] on
-    * the same centroid set, for every input. A scanned member's cosine
-    * accumulates in the same dim-ascending order over the same stored
-    * doubles; ties order by (cos desc via SQL double ordering, ORIGINAL
-    * index asc) — explicit here because cells scan out of index order,
-    * where the flat kernel gets idx-asc ties from its scan order. The
-    * skip bound is mathematically valid (spherical triangle
-    * inequality) and guarded by a 1e-6 cosine-space margin (plus the
-    * builder's 1e-7 radius pad) against acos/cos rounding — a missed
-    * skip costs a scan, never correctness. Grouping QUALITY (how tight
-    * the radii are) affects only the skip rate, never the result —
-    * which is why the group fit lives driver-side with no determinism
-    * or replication obligations, and why the DuckDB oracles that
-    * replicate flat assignment stay valid bit-for-bit.
-    *
-    * Degenerate inputs take the flat kernel's exact semantics: a
-    * zero-norm query scores 0.0 against everything (answer = first n
-    * indices); NaN components poison bounds to +∞ so nothing skips and
-    * the scan degrades to flat; a zero-norm MEMBER forces its cell's
-    * radius to π at build time (never skipped — its forced 0.0 score
-    * has no angular witness). A ragged query fails loud, the
-    * [[cosTopC]] contract.
-    *
-    * Layout (one Literal node per argument, the cosTopC discipline):
-    *  - `metaI`: [g, k, off_0..off_g (g+1 cell offsets into the
-    *    permuted member order), origIdx_0..origIdx_{k−1} (each
-    *    permuted member's index in the ORIGINAL cid-ascending order —
-    *    what the output reports)]
-    *  - `metaD`: coarse (g·dim) ++ radius (g) ++ permuted member
-    *    vectors (k·dim)
-    */
-  def cosTopCRouted(x: ArrayData, metaI: ArrayData, metaD: ArrayData,
-                    dim: Int, n: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    if (x.numElements() != dim)
-      throw new IllegalArgumentException(
-        s"graft_cos_topc_routed: vector length ${x.numElements()} != dim $dim " +
-          "(ragged embedding — the expression fallback would null-pad " +
-          "to a NULL cosine; fix the input)")
-    val g = metaI.getInt(0)
-    val k = metaI.getInt(1)
-    val offBase = 2
-    val idxBase = offBase + g + 1
-    val radiusBase = g * dim
-    val permBase = g * dim + g
-    val take = math.max(0, math.min(n, k))
-    var daa = 0.0
-    var i = 0
-    while (i < dim) { val v = x.getFloat(i).toDouble; daa += v * v; i += 1 }
-    val na = math.sqrt(daa)
-    val bestCos = new Array[Double](take)
-    val bestIdx = new Array[Int](take)
-    var filled = 0
-    // (cos desc, origIdx asc) insertion — cells scan out of index
-    // order, so the flat kernel's scan-order tie rule must be explicit
-    def insert(cos: Double, idx: Int): Unit = {
-      if (take == 0) return
-      if (filled == take) {
-        val c = compareDoubles(cos, bestCos(take - 1))
-        if (c < 0 || (c == 0 && idx >= bestIdx(take - 1))) return
-      }
-      var p = filled
-      while (p > 0 && {
-        val c = compareDoubles(bestCos(p - 1), cos)
-        c < 0 || (c == 0 && bestIdx(p - 1) > idx)
-      }) p -= 1
-      if (p < take) {
-        var j = math.min(filled, take - 1)
-        while (j > p) { bestCos(j) = bestCos(j - 1); bestIdx(j) = bestIdx(j - 1); j -= 1 }
-        bestCos(p) = cos
-        bestIdx(p) = idx
-        if (filled < take) filled += 1
-      }
-    }
-    if (take > 0) {
-      // cell upper bounds; a zero-norm query or NaN anywhere → +∞
-      // (cell can never skip, scan degrades to the flat kernel —
-      // which keeps the flat kernel's exact NaN/zero-norm semantics
-      // without a separate code path)
-      val ub = new Array[Double](g)
-      var j = 0
-      while (j < g) {
-        if (na == 0.0) { ub(j) = Double.PositiveInfinity; j += 1 }
-        else {
-        val cb = j * dim
-        var cc = 0.0
-        var dp = 0.0
-        var d = 0
-        while (d < dim) {
-          val c = metaD.getDouble(cb + d)
-          cc += c * c
-          dp += x.getFloat(d).toDouble * c
-          d += 1
-        }
-        val nn = na * math.sqrt(cc)
-        val cosj = if (nn == 0.0) 0.0 else dp / nn
-        val theta = math.acos(math.max(-1.0, math.min(1.0, cosj)))
-        val u = math.cos(math.max(0.0, theta - metaD.getDouble(radiusBase + j)))
-        ub(j) = if (java.lang.Double.isNaN(cosj) || java.lang.Double.isNaN(u))
-          Double.PositiveInfinity
-        else u
-        j += 1
-        }
-      }
-      // best-bound-first order (insertion sort — g ≈ √k is small)
-      val order = new Array[Int](g)
-      j = 0
-      while (j < g) { order(j) = j; j += 1 }
-      j = 1
-      while (j < g) {
-        val o = order(j)
-        val key = ub(o)
-        var p = j - 1
-        while (p >= 0 && ub(order(p)) < key) { order(p + 1) = order(p); p -= 1 }
-        order(p + 1) = o
-        j += 1
-      }
-      var oi = 0
-      var done = false
-      while (oi < g && !done) {
-        val cell = order(oi)
-        if (filled == take && ub(cell) + 1e-6 < bestCos(take - 1)) {
-          // sorted desc and NaN-bounds sort first: every later cell's
-          // bound is lower still — stop
-          done = true
-        } else {
-          var m = metaI.getInt(offBase + cell)
-          val end = metaI.getInt(offBase + cell + 1)
-          while (m < end) {
-            val base = permBase + m * dim
-            var cc = 0.0
-            var dp = 0.0
-            var d = 0
-            while (d < dim) {
-              val c = metaD.getDouble(base + d)
-              cc += c * c
-              dp += x.getFloat(d).toDouble * c
-              d += 1
-            }
-            val nn = na * math.sqrt(cc)
-            insert(if (nn == 0.0) 0.0 else dp / nn, metaI.getInt(idxBase + m))
-            m += 1
-          }
-        }
-        oi += 1
-      }
-    }
-    val out = new Array[Any](filled)
-    i = 0
-    while (i < filled) {
-      out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](bestCos(i), bestIdx(i)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
   /** Distinct xxhash64 values of the character k-shingles of `s`,
     * hashing the UTF-8 bytes in place — no shingle strings, no char
     * array. Byte-windowing equals char-windowing for ASCII input,
@@ -1112,42 +944,4 @@ case class HyperplaneSigExpr(first: Expression, second: Expression, third: Expre
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): HyperplaneSigExpr =
     copy(first = f, second = s, third = t)
-}
-
-/** `graft_cos_topc_routed(array<float>, array<int>, array<double>,
-  * dim, n) -> array<struct<cos: double, idx: int>>` — the two-level
-  * routed EXACT top-n (see [[NativeKernels.cosTopCRouted]]); output
-  * contract identical to `graft_cos_topc` over the same centroids.
-  */
-case class CosTopCRoutedExpr(first: Expression, second: Expression,
-                             third: Expression, fourth: Expression,
-                             fifth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuinaryExpression
-    with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cos", DoubleType, nullable = false),
-      org.apache.spark.sql.types.StructField("idx", IntegerType, nullable = false))),
-    containsNull = false)
-  override def prettyName: String = "graft_cos_topc_routed"
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType), ArrayType(IntegerType), ArrayType(DoubleType),
-      IntegerType, IntegerType)
-  override def children: Seq[Expression] =
-    Seq(first, second, third, fourth, fifth)
-
-  override protected def nullSafeEval(x: Any, mi: Any, md: Any,
-                                      dim: Any, n: Any): Any =
-    NativeKernels.cosTopCRouted(x.asInstanceOf[ArrayData],
-      mi.asInstanceOf[ArrayData], md.asInstanceOf[ArrayData],
-      dim.asInstanceOf[Int], n.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, mi, md, d, n) =>
-      s"${ev.value} = graft.functions.NativeKernels.cosTopCRouted($x, $mi, $md, $d, $n);")
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CosTopCRoutedExpr =
-    copy(first = newChildren(0), second = newChildren(1),
-      third = newChildren(2), fourth = newChildren(3), fifth = newChildren(4))
 }

@@ -79,142 +79,6 @@ object Cluster {
   private def cidAt(centroids: Seq[(Long, Array[Double])], idx: Column): Column =
     element_at(typedLit(centroids.map(_._1).toArray), (idx + 1).cast("int"))
 
-  /** k at or above which the two-level routed kernel replaces the flat
-    * scan. Routing is EXACT (identical output), so this is a pure perf
-    * knob: below it the g·dim coarse overhead isn't worth saving on a
-    * k·dim scan that's already tiny.
-    */
-  private val RouteMinK = 64
-
-  /** Driver-side build of [[graft.functions.NativeKernels
-    * .cosTopCRouted]]'s routing metadata: group the k centroids into
-    * g = ⌈√k⌉ cells by a few rounds of spherical k-means ON THE
-    * CENTROIDS (k ≤ kCap rows, pure driver arithmetic — the bounded
-    * state class), then record each cell's representative, its padded
-    * angular radius over members, the members permuted cell-contiguous,
-    * and each member's ORIGINAL index. Grouping quality moves the skip
-    * rate, never the result (the kernel's exactness contract), so this
-    * fit carries no determinism or oracle-replication obligation — it
-    * is still deterministic in fact (pure function of the centroid
-    * list), which keeps plans and codegen cache keys stable across
-    * re-runs.
-    */
-  private[graft] def routePlan(centroids: Seq[(Long, Array[Double])]): (Array[Int], Array[Double]) = {
-    val k = centroids.size
-    val dim = centroids.head._2.length
-    val g = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-    val vecs = centroids.map(_._2).toArray
-    val norms = vecs.map(v => math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x)))
-    def cosAt(i: Int, seed: Array[Double], seedNorm: Double): Double = {
-      if (norms(i) == 0.0 || seedNorm == 0.0) return -2.0 // grouped arbitrarily; radius π below
-      var dp = 0.0
-      var d = 0
-      while (d < dim) { dp += vecs(i)(d) * seed(d); d += 1 }
-      dp / (norms(i) * seedNorm)
-    }
-    var seeds = Array.tabulate(g)(j => vecs(j).clone())
-    var seedNorms = Array.tabulate(g)(j => norms(j))
-    val asg = new Array[Int](k)
-    for (_ <- 0 until 4) {
-      var i = 0
-      while (i < k) {
-        var best = Double.NegativeInfinity
-        var bj = 0
-        var j = 0
-        while (j < g) {
-          val c = cosAt(i, seeds(j), seedNorms(j))
-          if (c > best) { best = c; bj = j }
-          j += 1
-        }
-        asg(i) = bj
-        i += 1
-      }
-      val sums = Array.fill(g)(new Array[Double](dim))
-      val cnt = new Array[Int](g)
-      i = 0
-      while (i < k) {
-        if (norms(i) > 0.0) { // zero-norm members carry no direction
-          val j = asg(i)
-          cnt(j) += 1
-          var d = 0
-          while (d < dim) { sums(j)(d) += vecs(i)(d) / norms(i); d += 1 }
-        }
-        i += 1
-      }
-      seeds = Array.tabulate(g) { j =>
-        if (cnt(j) == 0) seeds(j) else sums(j)
-      }
-      seedNorms = seeds.map(v => math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x)))
-    }
-    // padded angular radius per cell; zero-norm member → π (its forced
-    // 0.0 score has no angular witness — cell must never skip)
-    val radius = new Array[Double](g)
-    var i = 0
-    while (i < k) {
-      val j = asg(i)
-      val r =
-        if (norms(i) == 0.0 || seedNorms(j) == 0.0) math.Pi
-        else math.acos(math.max(-1.0,
-          math.min(1.0, cosAt(i, seeds(j), seedNorms(j))))) + 1e-7
-      if (r > radius(j)) radius(j) = r
-      i += 1
-    }
-    // cell-contiguous permutation, original-index ascending within cell
-    val perm = (0 until k).sortBy(i => (asg(i), i)).toArray
-    val off = new Array[Int](g + 1)
-    perm.foreach(i => off(asg(i) + 1) += 1)
-    for (j <- 1 to g) off(j) += off(j - 1)
-    val metaI = new Array[Int](2 + g + 1 + k)
-    metaI(0) = g
-    metaI(1) = k
-    System.arraycopy(off, 0, metaI, 2, g + 1)
-    System.arraycopy(perm, 0, metaI, 2 + g + 1, k)
-    val metaD = new Array[Double](g * dim + g + k * dim)
-    for (j <- 0 until g; d <- 0 until dim) metaD(j * dim + d) = seeds(j)(d)
-    System.arraycopy(radius, 0, metaD, g * dim, g)
-    for (p <- 0 until k; d <- 0 until dim)
-      metaD(g * dim + g + p * dim + d) = vecs(perm(p))(d)
-    (metaI, metaD)
-  }
-
-  /** Median cell radius above which routing is hopeless and the plan
-    * builder falls back to flat: pruning needs cos(θ − r) to dip below
-    * the running best, and with cells ~69°+ wide that happens for
-    * almost no query — the ISOTROPIC regime (random high-dim vectors,
-    * pairwise cosines concentrated at 0), where no exact method beats
-    * the flat scan and routing is pure overhead (measured: flat 0.6 s
-    * vs routed 0.9 s at n=160k/k=1024 on the isotropic test
-    * embeddings). Real embedding corpora cluster hard, radii come in
-    * far tighter, and routing pays — the guard makes the substitution
-    * never-worse instead of geometry-dependent.
-    */
-  private val RouteMaxMedianRadius = 1.2
-
-  /** [[cosTopC]] with the routed kernel swapped in above [[RouteMinK]]
-    * centroids — same output either way (the routed kernel's exactness
-    * contract), so callers and oracles are indifferent to which fires.
-    * The swap needs BOTH enough centroids to amortize the coarse pass
-    * AND tight enough cells to actually prune ([[RouteMaxMedianRadius]]).
-    */
-  private def cosTopCAuto(df: DataFrame, vecCol: String,
-                          centroids: Seq[(Long, Array[Double])],
-                          n: Int): Column = {
-    val routed =
-      if (centroids.size >= RouteMinK &&
-          Native.enabled(df, "graft_cos_topc_routed")) {
-        val (metaI, metaD) = routePlan(centroids)
-        val g = metaI(0)
-        val dim = centroids.head._2.length
-        val radii = java.util.Arrays.copyOfRange(metaD, g * dim, g * dim + g)
-        java.util.Arrays.sort(radii)
-        if (radii(g / 2) <= RouteMaxMedianRadius)
-          Some(call_function("graft_cos_topc_routed", col(vecCol),
-            typedLit(metaI), typedLit(metaD), lit(dim), lit(n)))
-        else None
-      } else None
-    routed.getOrElse(cosTopC(vecCol, centroids, n))
-  }
-
   /** The expression-fallback twin of `graft_cos_topc`'s ragged-input
     * guard: a vector whose length ≠ the centroid dim is data
     * corruption with no consistent answer (the HOF dot would null-pad
@@ -243,7 +107,7 @@ object Cluster {
     if (floatVec(points, vecCol) && Native.enabled(points, "graft_cos_topc")) {
       points
         .withColumn("graft_best",
-          element_at(cosTopCAuto(points, vecCol, centroids, 1), 1))
+          element_at(cosTopC(vecCol, centroids, 1), 1))
         .withColumn("cluster_id", cidAt(centroids, col("graft_best.idx")))
         .withColumn("cos", col("graft_best.cos"))
         .drop("graft_best")
@@ -377,7 +241,7 @@ object Cluster {
                                blockProbes: Int): DataFrame =
     if (floatVec(points, "v") && Native.enabled(points, "graft_cos_topc")) {
       points.withColumn("cluster_id",
-        explode(transform(cosTopCAuto(points, "v", centroids, blockProbes),
+        explode(transform(cosTopC("v", centroids, blockProbes),
           s => cidAt(centroids, s.getField("idx")))))
     } else {
       val cos = cosOf

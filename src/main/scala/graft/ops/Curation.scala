@@ -911,6 +911,20 @@ object Curation {
       .agg(count(lit(1)).cast("double").as("tf"))
   }
 
+  /** One row (nt, nr): the distinct target and non-target doc ids of
+    * an [[nbPosts]] table — the naive-Bayes class prior counts. A row
+    * with a null id or a null `is_target` counts in neither class.
+    * One distinct over (doc_id, is_target) then one counting agg,
+    * instead of two distinct aggregates that Spark plans through an
+    * Expand whose branch order is not stable between runs.
+    */
+  private def nbDocCounts(posts: DataFrame): DataFrame =
+    posts.select(col("doc_id"), col("is_target"))
+      .where(col("doc_id").isNotNull && col("is_target").isNotNull)
+      .distinct()
+      .agg(count(when(col("is_target"), lit(1))).as("nt"),
+        count(when(!col("is_target"), lit(1))).as("nr"))
+
   def nbQualityScore(docs: DataFrame, textCol: String, idCol: String,
                      targetFilter: Column, trainFilter: Column,
                      buckets: Int = 8192, alpha: Double = 0.5,
@@ -928,9 +942,7 @@ object Curation {
       .groupBy("b").agg(sum("tf").as("tcnt"))
     val rst = posts.filter(col("is_train") && !col("is_target"))
       .groupBy("b").agg(sum("tf").as("rcnt"))
-    val pri = posts.filter(col("is_train"))
-      .agg(count_distinct(when(col("is_target"), col("doc_id"))).as("nt"),
-        count_distinct(when(!col("is_target"), col("doc_id"))).as("nr"))
+    val pri = nbDocCounts(posts.filter(col("is_train")))
     val stats = tgt.agg(coalesce(sum("tcnt"), lit(0.0)).as("t_total"))
       .crossJoin(broadcast(rst.agg(coalesce(sum("rcnt"), lit(0.0)).as("r_total"))))
       .crossJoin(broadcast(pri.select(graft.functions.num.fround(
@@ -1282,41 +1294,21 @@ object Curation {
     * cliff §3 documents for lambda-embedded subtrees, one level up).
     * Every downstream consumer then reads text_clean as DATA. This is
     * the same one-materialization a multi-job pipeline has between its
-    * cleaning and selection jobs.
-    *
-    * HOW the boundary materializes is a knob with a scale story:
-    * `checkpointPath = Some(path)` WRITES the cleaned corpus as
-    * parquet at `path` and reads it back — the 100 TB-honest form (a
-    * real pipeline's inter-job boundary is durable storage: no
-    * executor cache sized to the corpus, downstream stages scan a
-    * pruned columnar file, the cleaned corpus survives the session
-    * for reuse/restart). Default None keeps the single-session
-    * executor-cache persist — right at test scale and for one-shot
-    * interactive runs. Row-parity of the two
-    * legs and the path-scan of the reread plan are CurationSpec-
-    * asserted.
+    * cleaning and selection jobs; a caller that wants the boundary on
+    * durable storage writes the cleaned corpus out between its own
+    * jobs.
     */
   def curationPipelineFull(docs: DataFrame, textCol: String, idCol: String,
                            langCol: String, sourceCol: String,
                            quotaN: Int = 10, splitSalt: String = "graft",
                            fractions: Seq[(String, Double)] =
-                             Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)),
-                           checkpointPath: Option[String] = None)
+                             Seq(("train", 0.9), ("val", 0.05), ("test", 0.05)))
       : DataFrame = {
-    val cleanedPlan = paragraphDedup(docs, textCol, idCol,
+    val cleaned = paragraphDedup(docs, textCol, idCol,
         passthrough = Seq(langCol, sourceCol))
       .select(col("doc_id").as(idCol), col("text_clean").as(textCol),
         col(langCol), col(sourceCol), col("n_dup_paras"))
-    val cleaned = checkpointPath match {
-      case Some(path) =>
-        // durable stage boundary: write once, then every downstream
-        // consumer scans the parquet (column-pruned) instead of
-        // holding the cleaned corpus in executor cache
-        cleanedPlan.write.mode("overwrite").parquet(path)
-        graft.sources.Sources.readParquet(docs.sparkSession, path)
-      case None =>
-        cleanedPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // exact dedup keyed on the CLEANED text's normalized fingerprint —
     // c3's canonical-min-id form (two slim corpus scans, one semi-join)
     val fpd = cleaned.select(col(idCol), col(langCol), col(sourceCol),
@@ -1375,12 +1367,9 @@ object Curation {
     val merged = tgt.join(rst, Seq("b"), "full")
       .select(col("b"), coalesce(col("tcnt"), lit(0.0)).as("tcnt"),
         coalesce(col("rcnt"), lit(0.0)).as("rcnt"))
-    val pri = posts.agg(
-        count_distinct(when(col("is_target"), col("doc_id")))
-          .cast("double").as("tcnt"),
-        count_distinct(when(!col("is_target"), col("doc_id")))
-          .cast("double").as("rcnt"))
-      .select(lit(-1L).as("b"), col("tcnt"), col("rcnt"))
+    val pri = nbDocCounts(posts)
+      .select(lit(-1L).as("b"), col("nt").cast("double").as("tcnt"),
+        col("nr").cast("double").as("rcnt"))
     // fit-config marker: the buckets this model hashes with (see
     // scaladoc — apply-side mismatch silently corrupts log-odds)
     val cfg = train.sparkSession.range(1)

@@ -533,11 +533,10 @@ object Dedup {
     * lemma guarantees two sets with J >= t share a prefix gram, so
     * recall stays 1.0 BY CONSTRUCTION while the join touches only
     * RARE grams — a hot boilerplate gram sorts to the back of every
-    * prefix and never explodes the join. The earlier within-block
-    * full pair join (`prefixFilter = false`, kept as the A/B twin —
-    * OperatorSpec asserts path equality) is quadratic in block size:
-    * the sf1 board priced it at ×21 wall for 10× rows, while the
-    * prefix path's candidate volume tracks the TRUE pair count.
+    * prefix and never explodes the join. A within-block full pair
+    * join is quadratic in block size: the sf1 board priced it at ×21
+    * wall for 10× rows, while the prefix path's candidate volume
+    * tracks the TRUE pair count.
     * The prefix length uses t − 5e-5 (the 4dp rounding margin), so a
     * pair whose exact Jaccard sits just under t but ROUNDS to t is
     * still generated — the output is identical to the full join's
@@ -551,8 +550,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
                         blockCol: Column, n: Int = 3,
-                        threshold: Double = 0.4,
-                        prefixFilter: Boolean = true): DataFrame = {
+                        threshold: Double = 0.4): DataFrame = {
     // prepared feeds three subplans (candidate join sides + the verify
     // broadcast) — persist it.
     val grams = sortedGramHashes(docs, textCol, idCol, blockCol, n)
@@ -565,42 +563,30 @@ object Dedup {
     val sizeOk =
       least(col("a.n"), col("b.n")).cast("double") >=
         greatest(col("a.n"), col("b.n")).cast("double") * threshold
-    val candidates =
-      if (prefixFilter) {
-        // df-ordered prefix filter (see the method scaladoc): only
-        // each doc's |X| − ⌈t'·|X|⌉ + 1 globally-rarest grams enter
-        // the candidate equi-join on (block, gram). Within a doc the
-        // grams are distinct, so (df, gram) strictly orders them and
-        // the rank — hence the candidate set — is deterministic under
-        // any partitioning.
-        val occ = grams.select(col("id"), col("block"),
-          size(col("grams")).as("n"), explode(col("grams")).as("g"))
-        val gramDf = occ.groupBy("g").agg(count(lit(1)).as("df"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("id").orderBy(col("df"), col("g"))
-        val prefixPlan = occ.join(gramDf, Seq("g"))
-          .withColumn("rk", row_number().over(w))
-          .where(col("rk") <=
-            col("n") - ceil(col("n") * lit(threshold - 5e-5)) + 1)
-          .select(col("id"), col("block"), col("n"), col("g"))
-        // both self-join sides read the ranked prefix — persist it
-        // (session-lifetime pin, same contract as `grams` above)
-        val prefix = prefixPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        prefix.as("a").join(prefix.as("b"),
-            col("a.block") === col("b.block") && col("a.g") === col("b.g") &&
-              col("a.id") < col("b.id") && sizeOk)
-          .select(col("a.id").as("id1"), col("b.id").as("id2"))
-          .dropDuplicates("id1", "id2")
-      } else {
-        // A/B twin: the full within-block pair join on a slim
-        // projection — quadratic in block size (the measured sf1
-        // scale-killer); kept for the OperatorSpec path-equality gate.
-        val slim = grams.select(col("id"), col("block"), size(col("grams")).as("n"))
-        slim.as("a").join(slim.as("b"),
-            col("a.block") === col("b.block") && col("a.id") < col("b.id") &&
-              sizeOk)
-          .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      }
+    // df-ordered prefix filter (see the method scaladoc): only each
+    // doc's |X| − ⌈t'·|X|⌉ + 1 globally-rarest grams enter the
+    // candidate equi-join on (block, gram). Within a doc the grams
+    // are distinct, so (df, gram) strictly orders them and the rank —
+    // hence the candidate set — is deterministic under any
+    // partitioning.
+    val occ = grams.select(col("id"), col("block"),
+      size(col("grams")).as("n"), explode(col("grams")).as("g"))
+    val gramDf = occ.groupBy("g").agg(count(lit(1)).as("df"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("df"), col("g"))
+    val prefixPlan = occ.join(gramDf, Seq("g"))
+      .withColumn("rk", row_number().over(w))
+      .where(col("rk") <=
+        col("n") - ceil(col("n") * lit(threshold - 5e-5)) + 1)
+      .select(col("id"), col("block"), col("n"), col("g"))
+    // both self-join sides read the ranked prefix — persist it
+    // (session-lifetime pin, same contract as `grams` above)
+    val prefix = prefixPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val candidates = prefix.as("a").join(prefix.as("b"),
+        col("a.block") === col("b.block") && col("a.g") === col("b.g") &&
+          col("a.id") < col("b.id") && sizeOk)
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+      .dropDuplicates("id1", "id2")
     // Verify-join strategy is size-gated (see the object scaladoc).
     val verified = candidates
       .join(grams.select(col("id"), col("grams")).as("h1"),
@@ -651,53 +637,40 @@ object Dedup {
     * inherent to the predicate). Recall 1.0 by construction; hot
     * grams sort out of every sub-prefix, so the per-gram join cost is
     * df_prefix(g)·df(g) — near zero for exactly the grams that blow
-    * up a block join. The prior full within-block pair join
-    * (`prefixFilter = false`, the measured ×33-at-sf1 scale-killer)
-    * is kept as the A/B twin; OperatorSpec asserts path equality.
+    * up a block join (a full within-block pair join measured ×33
+    * wall at sf1 for 10× rows).
     */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
                        blockCol: Column, n: Int = 3,
-                       threshold: Double = 0.8,
-                       prefixFilter: Boolean = true): DataFrame = {
+                       threshold: Double = 0.8): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val grams = sortedGramHashes(docs, textCol, idCol, blockCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // gram-less docs (shorter than n tokens) have no containment
-    // evidence either way — candidates need both sides non-empty
-    val candidates =
-      if (prefixFilter) {
-        // asymmetric df-ordered prefix filter (see scaladoc): sub
-        // side explodes its ⌊(1−t')·n⌋+1 rarest grams, sup side all
-        // grams; each unordered pair surfaces once via least/greatest
-        // canonicalization + dedup, then is verified ONCE.
-        val occ = grams.where(size(col("grams")) > 0)
-          .select(col("id"), col("block"),
-            size(col("grams")).as("n"), explode(col("grams")).as("g"))
-        val gramDf = occ.groupBy("g").agg(count(lit(1)).as("df"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("id").orderBy(col("df"), col("g"))
-        val subPrefix = occ.join(gramDf, Seq("g"))
-          .withColumn("rk", row_number().over(w))
-          .where(col("rk") <=
-            col("n") - ceil(col("n") * lit(threshold - 5e-5)) + 1)
-          .select(col("id"), col("block"), col("g"))
-        val supAll = occ.select(col("id"), col("block"), col("g"))
-        subPrefix.as("a").join(supAll.as("b"),
-            col("a.block") === col("b.block") && col("a.g") === col("b.g") &&
-              col("a.id") =!= col("b.id"))
-          .select(least(col("a.id"), col("b.id")).as("id1"),
-            greatest(col("a.id"), col("b.id")).as("id2"))
-          .dropDuplicates("id1", "id2")
-      } else {
-        // A/B twin: full within-block pair join (quadratic in block
-        // size) — kept for the OperatorSpec path-equality gate.
-        val slim = grams.select(col("id"), col("block"))
-          .where(size(col("grams")) > 0)
-        slim.as("a").join(slim.as("b"),
-            col("a.block") === col("b.block") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      }
+    // evidence either way — candidates need both sides non-empty.
+    // Asymmetric df-ordered prefix filter (see scaladoc): the sub side
+    // explodes its ⌊(1−t')·n⌋+1 rarest grams, the sup side all grams;
+    // each unordered pair surfaces once via least/greatest
+    // canonicalization + dedup, then is verified ONCE.
+    val occ = grams.where(size(col("grams")) > 0)
+      .select(col("id"), col("block"),
+        size(col("grams")).as("n"), explode(col("grams")).as("g"))
+    val gramDf = occ.groupBy("g").agg(count(lit(1)).as("df"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("df"), col("g"))
+    val subPrefix = occ.join(gramDf, Seq("g"))
+      .withColumn("rk", row_number().over(w))
+      .where(col("rk") <=
+        col("n") - ceil(col("n") * lit(threshold - 5e-5)) + 1)
+      .select(col("id"), col("block"), col("g"))
+    val supAll = occ.select(col("id"), col("block"), col("g"))
+    val candidates = subPrefix.as("a").join(supAll.as("b"),
+        col("a.block") === col("b.block") && col("a.g") === col("b.g") &&
+          col("a.id") =!= col("b.id"))
+      .select(least(col("a.id"), col("b.id")).as("id1"),
+        greatest(col("a.id"), col("b.id")).as("id2"))
+      .dropDuplicates("id1", "id2")
     val verified = candidates
       .join(grams.select(col("id"), col("grams")).as("h1"),
         col("id1") === col("h1.id"))

@@ -108,15 +108,13 @@ object Graph {
     * to be long-diameter (the round budget runs out), the computation
     * DEGRADES rather than dies: it restarts as
     * [[connectedComponentsAlternating]] — O(log n) rounds — over the
-    * already-checkpointed pair table (set `fallbackToAlternating =
-    * false` to get the old fail-fast contract).
+    * already-checkpointed pair table.
     *
     * Returns (id, component) for every vertex that appears in
     * `pairs`; `component` = min vertex id reachable from `id`.
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           maxRounds: Int = 64, blockRounds: Int = 6,
-                          fallbackToAlternating: Boolean = true,
                           driverThreshold: Int = DriverCcEdgeThreshold): DataFrame = {
     val half = pairs
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
@@ -126,8 +124,8 @@ object Graph {
     // empty-input probe, so the gate costs no extra job. NOTE the
     // maxRounds/fallback contract is a property of the DISTRIBUTED
     // algorithm: the driver path always converges (union-find has no
-    // round budget), so callers testing the non-convergence contract
-    // pass driverThreshold = 0.
+    // round budget), so callers testing the fallback pass
+    // driverThreshold = 0.
     if (driverThreshold > 0) {
       val n = half.count()
       if (n == 0)
@@ -191,21 +189,18 @@ object Graph {
       // short-circuited above), so it must not read as "0 changes =
       // converged": default to a -1 sentinel, which never matches the
       // contains(0L) convergence test and so routes the run to the
-      // alternating fallback / the non-convergence require instead of
-      // silently returning unstable labels.
+      // alternating fallback instead of silently returning unstable
+      // labels.
       val perRound = obs.map(_.get.get("changed").map(_.asInstanceOf[Long]).getOrElse(-1L))
       rounds += blockRounds
       changed = if (perRound.contains(0L)) 0L else perRound.last
     }
     edges.unpersist()
-    if (changed != 0 && fallbackToAlternating)
-      // diameter exceeded the propagation budget — restart on the
-      // O(log n) algorithm; `half` is checkpointed, so the pair
-      // generator does not re-execute
-      return connectedComponentsAlternating(half, "a", "b")
-    require(changed == 0, s"connectedComponents did not converge in $maxRounds rounds " +
-      "(adversarial long-chain graph? use connectedComponentsAlternating)")
-    labels
+    // diameter exceeded the propagation budget — restart on the
+    // O(log n) algorithm; `half` is checkpointed, so the pair
+    // generator does not re-execute
+    if (changed != 0) connectedComponentsAlternating(half, "a", "b")
+    else labels
   }
 
   /** Connected components by ALTERNATING large-star / small-star — the

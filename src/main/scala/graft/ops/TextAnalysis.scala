@@ -151,22 +151,15 @@ object TextAnalysis {
   /** Per-group vocabulary stats: exact distinct-token count beside the
     * raw token count — the count-distinct aggregation family. Exact
     * `countDistinct` plans as a two-phase aggregation whose state is
-    * O(distinct values) per group; at the scale where a group's
-    * vocabulary no longer fits executor memory, pass `exact = false`
-    * for `approx_count_distinct` (HLL++ sketch: fixed memory,
-    * partial-agg mergeable, ±rsd relative error — no engine-exact
-    * oracle exists for the sketch, which is why the CORRECTNESS query
-    * runs the exact form).
+    * O(distinct values) per group; a group whose vocabulary outgrows
+    * executor memory needs a sketch (`approx_count_distinct`), which
+    * no engine-exact oracle can check.
     */
-  def vocabStats(docs: DataFrame, textCol: String, groupCol: String,
-                 exact: Boolean = true, rsd: Double = 0.05): DataFrame = {
+  def vocabStats(docs: DataFrame, textCol: String, groupCol: String): DataFrame = {
     val tokens = docs.select(col(groupCol).as("grp"),
       explode(text.tokens(Native.normOf(docs)(col(textCol)))).as("token"))
-    val distinctAgg =
-      if (exact) countDistinct(col("token"))
-      else approx_count_distinct(col("token"), rsd)
     tokens.groupBy("grp")
-      .agg(distinctAgg.as("n_vocab"), count(lit(1)).as("n_tokens"))
+      .agg(countDistinct(col("token")).as("n_vocab"), count(lit(1)).as("n_tokens"))
   }
 
   /** Windowed co-occurrence PMI: the top-N token pairs by pointwise
@@ -579,20 +572,14 @@ object TextAnalysis {
     * min/max/count — the corpus-shape profile a curation pipeline
     * reads before setting length filters.
     *
-    * `exact = true` uses `percentile` (linear interpolation at
-    * (n-1)·p, the same definition as DuckDB's quantile_cont, so the
-    * oracle matches bit-for-bit) — it buffers each group's values, so
-    * it is for bounded-cardinality groups (languages, sources).
-    * `exact = false` uses `approx_percentile` (GK sketch, fixed
-    * memory, partial-agg mergeable) — the 100 TB path, where a
-    * ±accuracy⁻¹ rank error is the right trade and no oracle can
-    * match it exactly.
+    * Exact `percentile` (linear interpolation at (n-1)·p, the same
+    * definition as DuckDB's quantile_cont, so the oracle matches
+    * bit-for-bit) buffers each group's values, so it is for
+    * bounded-cardinality groups (languages, sources); past that a
+    * sketch (`approx_percentile`) is the trade, with no exact oracle.
     */
-  def lengthQuantiles(docs: DataFrame, groupCol: String, lenCol: String,
-                      exact: Boolean = true, accuracy: Int = 10000): DataFrame = {
-    def q(p: Double): Column =
-      if (exact) percentile(col("len"), lit(p))
-      else approx_percentile(col("len"), lit(p), lit(accuracy))
+  def lengthQuantiles(docs: DataFrame, groupCol: String, lenCol: String): DataFrame = {
+    def q(p: Double): Column = percentile(col("len"), lit(p))
     docs.select(col(groupCol).as("grp"), col(lenCol).cast("double").as("len"))
       .groupBy("grp")
       .agg(count(lit(1)).as("n_docs"),

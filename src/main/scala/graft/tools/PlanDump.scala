@@ -4,7 +4,9 @@ package graft.tools
   * the plan evidence the optimization rounds commit under plans/rNN/.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * With no query list, dumps every declared query. The plan captured is
+  * With no query list, dumps every declared query; a list naming no
+  * query, or an undeclared one, fails before the session starts
+  * ([[graft.SparkEntry.selectQueries]]). The plan captured is
   * the POST-EXECUTION one (queryExecution.executedPlan after an AQE
   * run), so Exchange counts and join strategies reflect what actually
   * ran, not the pre-AQE guess; the formatted explain (initial plan) is
@@ -15,16 +17,14 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
-    val names: Seq[String] =
-      if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      else graft.SparkEntry.queries.keys.toSeq.sorted
+    val names = graft.SparkEntry.selectQueries(args.lift(3))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val queries = graft.SparkEntry.queries
     names.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
+      val fn = queries(name)
       spark.sparkContext.setJobDescription(s"plandump: $name")
       val df = fn(spark, sfDir)
       val formatted = df.queryExecution.explainString(

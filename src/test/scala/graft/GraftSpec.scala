@@ -404,22 +404,41 @@ class OperatorSpec extends AnyFunSuite {
     // The r14 scale fix: candidate generation via the df-ordered
     // prefix filter must be output-IDENTICAL to the quadratic
     // within-block pair join it replaced — recall 1.0 by the prefix
-    // lemma, precision 1.0 because both paths share the exact verify.
-    // Run on the real sf0.001 corpus so boilerplate/hot grams and the
+    // lemma, precision 1.0 because the verify is exact. The reference
+    // is that pair join, brute force: every ordered pair of docs in a
+    // block, intersected over the expression-built gram hashes. Run
+    // on the real sf0.001 corpus so boilerplate/hot grams and the
     // rounding margin are exercised, not a toy.
+    import graft.functions.num.fround
     val docs = Tables(spark, sfDir).documents
-    val j = (pf: Boolean) => Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-        col("source"), prefixFilter = pf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val (jPref, jFull) = (j(true), j(false))
+    val sets = docs
+      .select(col("doc_id").as("id"), col("source").as("block"),
+        text.tokens(text.normalize(col("text"))).as("toks"))
+      .select(col("id"), col("block"),
+        hashing.elementHashes(text.wordNgramsOfTokens(col("toks"), 3)).as("g"))
+    val pairs = sets.as("a").join(sets.as("b"),
+        col("a.block") === col("b.block") && col("a.id") =!= col("b.id"))
+      .select(col("a.id").as("ida"), col("b.id").as("idb"),
+        size(col("a.g")).cast("double").as("na"),
+        size(col("b.g")).cast("double").as("nb"),
+        size(array_intersect(col("a.g"), col("b.g"))).cast("double").as("inter"))
+    def triples(df: DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val union = col("na") + col("nb") - col("inter")
+    val jFull = triples(pairs.where(col("ida") < col("idb"))
+      .select(col("ida"), col("idb"),
+        fround(when(union === 0.0, 0.0).otherwise(col("inter") / union), 4).as("j"))
+      .where(col("j") >= 0.4))
+    val jPref = triples(Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source")))
     assert(jPref == jFull,
       s"d4 paths diverge: prefix-only ${(jPref -- jFull).take(3)}, " +
         s"full-only ${(jFull -- jPref).take(3)}")
     assert(jPref.nonEmpty, "corpus must produce at least one d4 pair")
-    val c = (pf: Boolean) => Dedup.containmentPairs(docs, "text", "doc_id",
-        col("source"), threshold = 0.5, prefixFilter = pf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val (cPref, cFull) = (c(true), c(false))
+    val cFull = triples(pairs.where(col("na") > 0 && col("nb") > 0)
+      .select(col("ida"), col("idb"), fround(col("inter") / col("na"), 4).as("c"))
+      .where(col("c") >= 0.5))
+    val cPref = triples(Dedup.containmentPairs(docs, "text", "doc_id",
+      col("source"), threshold = 0.5))
     assert(cPref == cFull,
       s"d17 paths diverge: prefix-only ${(cPref -- cFull).take(3)}, " +
         s"full-only ${(cFull -- cPref).take(3)}")
@@ -567,6 +586,20 @@ class QueriesSpec extends AnyFunSuite {
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")
+  }
+
+  test("query selection: all when unset; empty or unknown names fail; valid names kept in order") {
+    assert(SparkEntry.selectQueries(None) == SparkEntry.queries.keys.toSeq.sorted)
+    Seq("", " , ,").foreach { v =>
+      val e = intercept[IllegalArgumentException](SparkEntry.selectQueries(Some(v)))
+      assert(e.getMessage.contains("names no queries"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selectQueries(Some("q1_pricing_summary,q1_typo")))
+    assert(e.getMessage.contains("q1_typo") &&
+      !e.getMessage.contains("q1_pricing_summary"), e.getMessage)
+    assert(SparkEntry.selectQueries(Some(" t2_quality_score, q1_pricing_summary,t2_quality_score")) ==
+      Seq("t2_quality_score", "q1_pricing_summary"))
   }
 }
 

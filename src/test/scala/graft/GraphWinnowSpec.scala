@@ -188,13 +188,6 @@ class GraphWinnowSpec extends AnyFunSuite {
     val got = Graph.connectedComponents(chain, "id1", "id2",
       maxRounds = 8, blockRounds = 4, driverThreshold = 0)
     assert(got.count() == 100L && got.filter(col("comp") =!= 0L).count() == 0L)
-    // fail-fast contract preserved on request
-    val e = intercept[IllegalArgumentException] {
-      Graph.connectedComponents(chain, "id1", "id2",
-        maxRounds = 8, blockRounds = 4, fallbackToAlternating = false,
-        driverThreshold = 0).count()
-    }
-    assert(e.getMessage.contains("did not converge"))
   }
 
   test("alternating CC labels equal min-propagation labels on mixed graphs") {
