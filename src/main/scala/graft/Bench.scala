@@ -73,13 +73,18 @@ object Bench {
     }
   }
 
+  /** One timed run of a query: its wall time, the part of it spent in
+    * the `fn(spark, dir)` call (eager driver work: fits, collects,
+    * checkpoints), and the classes it compiled and jobs it started.
+    */
+  private final case class Run(secs: Double, eagerSecs: Double, compiles: Long, jobs: Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = QueryRunner.cpus
     // SPARK_GRAFT_QUERIES=a,b,c restricts the run (sf1 headline set)
     val only = SparkEntry.selectQueries(sys.env.get(SparkEntry.QueriesEnv)).toSet
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRunner.session()
     // ---- Calibration probe (pre) ----------------------------------
     // One tiny untimed job first so the pre-probe measures the session,
     // not first-job init; then the fixed CPU spin + fixed Spark job.
@@ -100,126 +105,96 @@ object Bench {
     // charged the session's one-time costs.
     val familyRank =
       Map('q' -> 0, 't' -> 1, 'm' -> 2, 'c' -> 3, 's' -> 4, 'd' -> 5)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.contains(name) }
-      .sortBy { case (name, _) =>
-        (familyRank.getOrElse(name.head, 9),
-          name.drop(1).takeWhile(_.isDigit).toInt)
-      }
-    // Session hygiene between queries (GraftSession.sweep: clearCache
-    // alone releases cached DATASETS but not localCheckpoint() RDD
-    // blocks — the r06 bleed).
-    def sweep(): Unit = GraftSession.sweep(spark)
+    val ordered = SparkEntry.queries.keys.toSeq.filter(only.contains)
+      .sortBy(name => (familyRank.getOrElse(name.head, 9),
+        name.drop(1).takeWhile(_.isDigit).toInt))
     // ---- Warmup phase A: page cache + parquet footers -------------
     // A cold recording box charges the first scan of every table its
-    // disk reads; count() each input once so timed runs measure the
+    // disk reads; read each input once so timed runs measure the
     // query, not the storage layer's first touch.
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       val dir = new java.io.File(sfDir)
       val tables = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
-      tables.foreach(p => sources.Sources.readParquet(spark, p).count())
+      tables.foreach(p => QueryRunner.materialize(sources.Sources.readParquet(spark, p)))
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] table warmup failed: " +
           s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
     // ---- Warmup phase B: one untimed pass of every selected query -
-    // Runs each query end-to-end at a small SF (default: the sibling
-    // sf0.001 of sfDir; SPARK_GRAFT_WARMUP_DIR overrides, empty
-    // disables). It JITs the library's kernels and Spark's execution
-    // paths the timed run executes — this is what lets the heavy
-    // ITERATIVE tail (graph ops, composed pipelines), whose wall clock
-    // keeps falling with repeat depth (the documented d7
-    // monotone-warmth effect), reach steady state within min-of-2 even
-    // in a cold single-session recording. It does not keep every
-    // query's generated classes for its timed run: they are
-    // plan-derived, but the LRU cache that keeps them holds
-    // GraftSession.CodegenCacheEntries classes, so a timed run reuses
-    // its warm-up's classes only while fewer than that many were
-    // generated after them (by the rest of this pass and the timed
-    // runs before it), and compiles the others again — each row's
-    // `codegen_compiles` records how many.
-    val warmDir: Option[String] = sys.env.get("SPARK_GRAFT_WARMUP_DIR") match {
-      case Some("") => None
-      case Some(d) => Some(d)
-      case None =>
-        val sib = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-        if (sib.isDirectory) Some(sib.getPath) else None
-    }
+    // Runs each query end-to-end at the sibling sf0.001 of sfDir. It
+    // JITs the library's kernels and Spark's execution paths the timed
+    // run executes — this is what lets the heavy ITERATIVE tail (graph
+    // ops, composed pipelines), whose wall clock keeps falling with
+    // repeat depth (the documented d7 monotone-warmth effect), reach
+    // steady state within min-of-2 even in a cold single-session
+    // recording. It does not keep every query's generated classes for
+    // its timed run: they are plan-derived, but the LRU cache that
+    // keeps them holds GraftSession.CodegenCacheEntries classes, so a
+    // timed run reuses its warm-up's classes only while fewer than
+    // that many were generated after them (by the rest of this pass
+    // and the timed runs before it), and compiles the others again —
+    // each row's `codegen_compiles` records how many.
+    val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    val warmDir = if (sibling.isDirectory) Some(sibling.getPath) else None
     warmDir match {
       case Some(wd) =>
-        ordered.foreach { case (name, fn) =>
-          try { fn(spark, wd).count() }
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] warmup of $name at $wd failed: " +
-                s"${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-          sweep()
+        QueryRunner.run(spark, ordered) { name =>
+          QueryRunner.materialize(SparkEntry.queries(name)(spark, wd))
+        }.collect { case (name, Left(err)) =>
+          System.err.println(s"[bench] warmup of $name at $wd failed: $err")
         }
       case None =>
         // no small-SF sibling: fall back to warming the pairwise-op
         // kernels on a tiny slice so their native/codegen paths are
         // at least compiled before timing
-        try {
+        QueryRunner.run(spark, Seq("kernels")) { _ =>
           import org.apache.spark.sql.functions.col
-          val docs = sources.Sources.readParquet(spark, s"$sfDir/documents.parquet")
-            .limit(64).cache()
-          val emb = sources.Sources.readParquet(spark, s"$sfDir/embeddings.parquet")
-            .limit(64).cache()
-          graft.ops.Dedup.minhashPairs(docs, "text", "doc_id").count()
-          graft.ops.Dedup.simhashPairs(docs, "text", "doc_id").count()
-          graft.ops.Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source")).count()
-          graft.ops.Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id", "label", 0.3).count()
-          graft.ops.Similarity.lshTopK(emb, emb.limit(4), "embedding", "vec_id", 5, 64).count()
-          docs.unpersist(); emb.unpersist()
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] warmup failed (timings may include " +
-              s"one-time costs): ${e.getClass.getSimpleName}: ${e.getMessage}")
+          val docs = sources.Sources.readParquet(spark, s"$sfDir/documents.parquet").limit(64)
+          val emb = sources.Sources.readParquet(spark, s"$sfDir/embeddings.parquet").limit(64)
+          Seq(graft.ops.Dedup.minhashPairs(docs, "text", "doc_id"),
+            graft.ops.Dedup.simhashPairs(docs, "text", "doc_id"),
+            graft.ops.Dedup.ngramJaccardPairs(docs, "text", "doc_id", col("source")),
+            graft.ops.Dedup.embeddingNearDupPairs(emb, "embedding", "vec_id", "label", 0.3),
+            graft.ops.Similarity.lshTopK(emb, emb.limit(4), "embedding", "vec_id", 5, 64)
+          ).foreach(QueryRunner.materialize)
+        }.collect { case (_, Left(err)) =>
+          System.err.println(s"[bench] warmup failed (timings may include one-time costs): $err")
         }
-        sweep()
     }
     // ---- Timed runs: min-of-2, adaptive third ----------------------
-    // min over repeats = steady-state latency, robust to one-off
-    // GC/compilation hiccups. When the two runs still disagree by
-    // >30% on a non-trivial query, the query is still descending its
-    // warmth curve (or caught a scheduling hiccup) — one more run
-    // decides which; the extra cost is bounded to the queries that
-    // need it. A query that throws is NOT silently timed as fast: its
-    // error surfaces in the JSON.
-    // Each run also records the classes it compiled (the compile-count
-    // delta); a row reports those of the run whose time it reports.
+    // Each run executes the query's full plan (QueryRunner.materialize;
+    // `count()` let Catalyst prune most of it). min over repeats =
+    // steady-state latency, robust to one-off GC/compilation hiccups.
+    // When the two runs still disagree by >30% on a non-trivial query,
+    // the query is still descending its warmth curve (or caught a
+    // scheduling hiccup) — one more run decides which; the extra cost
+    // is bounded to the queries that need it. A query that throws is
+    // NOT timed as fast: it reads -1 and its error surfaces in the JSON.
+    // A row reports the compiles, jobs and eager time of the run whose
+    // time it reports.
     def compiles(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val results = ordered.map { case (name, fn) =>
-      var err: Option[String] = None
-      def timedRun(): Option[(Double, Long)] = {
-        val c0 = compiles()
+    def timedRun(name: String): Run = {
+      val c0 = compiles()
+      val ((secs, eagerSecs), jobs) = QueryRunner.jobsDuring(spark) {
         val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-            false
-          }
-        // a failed run's duration is not a latency — min over failures
-        // would report a fast-failing query as a speedup
-        if (ok) Some(((System.nanoTime() - t0) / 1e9, compiles() - c0)) else None
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val t1 = System.nanoTime()
+        QueryRunner.materialize(df)
+        ((System.nanoTime() - t0) / 1e9, (t1 - t0) / 1e9)
       }
-      val firstTwo = (1 to 2).flatMap(_ => timedRun())
-      val times = firstTwo.map(_._1)
+      Run(secs, eagerSecs, compiles() - c0, jobs)
+    }
+    val results = QueryRunner.run(spark, ordered) { name =>
+      val firstTwo = Seq(timedRun(name), timedRun(name))
+      val times = firstTwo.map(_.secs)
       val runs =
-        if (times.size == 2 && times.min > 0.3 && times.max / times.min > 1.3)
-          firstTwo ++ timedRun()
+        if (times.min > 0.3 && times.max / times.min > 1.3) firstTwo :+ timedRun(name)
         else firstTwo
-      // release the ops' persisted intermediates between queries so the
-      // cached blocks of one query never occupy the next one's memory
-      sweep()
-      val best = runs.minByOption(_._1)
-      (name, best.fold(-1.0)(_._1), best.fold(-1L)(_._2), err)
+      runs.minBy(_.secs)
     }
     // ---- Calibration probe (post) + degraded stamp -----------------
     val (postCpu, postAcc) = cpuProbe()
@@ -241,7 +216,7 @@ object Bench {
     // board. The spark probe only compares at the baseline's local[n].
     val degraded: Option[Boolean] = baseline.map { case (bCpus, bCpu, bSpark) =>
       math.min(preCpu, postCpu) > 1.5 * bCpu ||
-        (bCpus == cpus.toInt && math.min(preSpark, postSpark) > 1.5 * bSpark)
+        (bCpus == cpus && math.min(preSpark, postSpark) > 1.5 * bSpark)
     }
     val probeJson = {
       val base = baseline match {
@@ -258,40 +233,31 @@ object Bench {
         s""""cpu_acc":${(preAcc + postAcc) & 0xffffL}$base$baseErr,""" +
         s""""degraded":${degraded.map(_.toString).getOrElse("null")}}"""
     }
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val cs = results.map { case (k, _, c, _) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, _, Some(e)) => s"\"${esc(k)}\":\"${esc(e)}\"" }
+    def row(value: Option[Run] => String): String = results.map { case (k, r) =>
+      QueryRunner.json(k) + ":" + value(r.toOption)
+    }.mkString("{", ",", "}")
+    val secs = results.map(_._2.fold(_ => -1.0, _.secs))
+    val qs = row(_.fold("-1.0")(_.secs.toString))
+    val cs = row(_.fold("-1")(_.compiles.toString))
+    val js = row(_.fold("-1")(_.jobs.toString))
+    val es = row(_.fold("-1.0")(_.eagerSecs.toString))
+    val errs = results.collect { case (k, Left(e)) => s"${QueryRunner.json(k)}:${QueryRunner.json(e.take(200))}" }
     val errJson = if (errs.isEmpty) "" else errs.mkString(""","errors":{""", ",", "}")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"codegen_compiles":$cs$errJson,$probeJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${secs.sum},"unit":"sec","queries":$qs,""" +
+      s""""codegen_compiles":$cs,"jobs":$js,"eager_s":$es$errJson,$probeJson,"sf":${QueryRunner.json(sfDir)}}"""
     println(line)
     // The driver's record truncates the per-query tail at ~2000 chars,
     // hiding the front of the board from audit — so ALSO write the
-    // complete record, with the protocol stamped on it, into the repo
-    // (SPARK_GRAFT_BENCH_FULL overrides the path; empty disables).
-    val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL") match {
-      case Some("") => None
-      case Some(p) => Some(p)
-      case None => Some("BENCH_full_latest.json")
-    }
-    fullPath.foreach { p =>
-      val proto = s""""protocol":{"master":"local[$cpus]","sweep":true,""" +
-        s""""warmup":"${esc(warmDir.getOrElse("kernels-only"))}","repeats":"min-of-2+adaptive-3rd"}"""
-      val full = line.dropRight(1) + "," + proto + "}"
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(p),
-          (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] full-record write to $p failed: ${e.getMessage}")
-      }
+    // complete record, with the protocol stamped on it, into the repo.
+    val proto = s""""protocol":{"master":"local[$cpus]","sweep":true,""" +
+      s""""warmup":${QueryRunner.json(warmDir.getOrElse("kernels-only"))},""" +
+      s""""repeats":"min-of-2+adaptive-3rd","timing":"materialize"}"""
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full_latest.json"),
+        (line.dropRight(1) + "," + proto + "}\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] full-record write failed: ${e.getMessage}")
     }
     spark.stop()
   }

@@ -84,11 +84,6 @@ object GraftSession {
     */
   val CodegenCacheEntries = 1024
 
-  /** The reader conf the events table needs; `Tables.events` checks it
-    * rather than mutating session state as a load side effect.
-    */
-  val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
-
   /** Session-level storage sweep for library callers — the ONE release
     * point for operator intermediates. An operator whose intermediate
     * feeds more than one consumer inside its returned plan always

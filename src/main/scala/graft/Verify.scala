@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,40 +9,19 @@ object Verify {
     // json, so the driver-style compare checks the same subset) — used
     // for the sf1 proof-point where the quadratic d2/d4 brute-force
     // oracles are infeasible by design
-    val only = SparkEntry.selectQueries(sys.env.get(SparkEntry.QueriesEnv)).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val names = SparkEntry.selectQueries(sys.env.get(SparkEntry.QueriesEnv))
+    val only = names.toSet
     // SPARK_GRAFT_NO_EXT=1: run the whole gate WITHOUT GraftExtensions
     // — every operator must pass on its pure-built-in fallback path
     // (the portability contract, proven end-to-end, not per-op)
-    val ext = !sys.env.get("SPARK_GRAFT_NO_EXT").contains("1")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, extensions = ext)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryRunner.session(extensions = !sys.env.get("SPARK_GRAFT_NO_EXT").contains("1"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.contains(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    QueryRunner.run(spark, names) { name =>
+      SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // the dedup/curation ops persist multi-use intermediates; release
-      // them per query so 40+ queries don't pin storage monotonically
-      spark.catalog.clearCache()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    }.collect { case (name, Left(err)) => System.err.println(s"[verify] $name failed: $err") }
     val json = SparkEntry.oracleSql.filter(kv => only.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${QueryRunner.json(k)}: ${QueryRunner.json(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

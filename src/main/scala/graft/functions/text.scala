@@ -34,7 +34,6 @@ object text {
     (length(c) - length(regexp_replace(c, singleCharPattern, ""))).cast("long")
 
   def punctCount(c: Column): Column = matchCount(c, "[\\.,;:!\\?]")
-  def upperCount(c: Column): Column = matchCount(c, "[A-Z]")
   def digitCount(c: Column): Column = matchCount(c, "[0-9]")
 
   /** English stopword-ish markers used for quality / language ID. */
@@ -176,39 +175,4 @@ object text {
         transform(sequence(lit(0), cnt - lit(n)), i =>
           concat_ws(" ", slice(toks, i + 1, lit(n))))))
   }
-
-  /** Distinct word n-grams straight from raw text (convenience; hot
-    * paths stage the token column and use wordNgramsOfTokens).
-    */
-  def wordNgrams(c: Column, n: Int): Column =
-    wordNgramsOfTokens(tokens(normalize(c)), n)
-
-  /** Distinct character k-shingles of an ALREADY-NORMALIZED column.
-    * Same staging contract as wordNgramsOfTokens: `s` must be a
-    * materialized column or the normalize regexes re-run per shingle.
-    *
-    * Implementation detail: `substr(i, k)` on UTF8String is O(i) (it
-    * must scan for the char boundary), which makes naive shingling
-    * O(len²) per document — a measured 8× slowdown at sf0.1. Instead
-    * the string is split into a char array once, and each shingle is
-    * an O(k) array slice. The single-element transform binds the char
-    * array to a lambda variable so it is evaluated once, not once per
-    * shingle.
-    */
-  def charShinglesOfNormalized(s: Column, k: Int): Column = {
-    val chars = split(s, "")
-    element_at(
-      transform(array(chars), cs =>
-        when(size(cs) < k, array().cast("array<string>")).otherwise(
-          array_distinct(
-            transform(sequence(lit(1), size(cs) - lit(k - 1)), i =>
-              concat_ws("", slice(cs, i, lit(k))))))),
-      1)
-  }
-
-  /** Distinct character k-shingles straight from raw text
-    * (convenience; hot paths stage normalize with withColumn).
-    */
-  def charShingles(c: Column, k: Int): Column =
-    charShinglesOfNormalized(normalize(c), k)
 }

@@ -20,7 +20,6 @@ final case class Tables(spark: SparkSession, dir: String) {
   def region: DataFrame     = load("region")
   def nation: DataFrame     = load("nation")
   def customer: DataFrame   = load("customer")
-  def supplier: DataFrame   = load("supplier")
   def part: DataFrame       = load("part")
   def orders: DataFrame     = load("orders")
   def lineitem: DataFrame   = load("lineitem")

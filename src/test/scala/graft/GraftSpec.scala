@@ -584,8 +584,10 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+    val oracles = SparkEntry.oracleSql.keySet
+    val queries = SparkEntry.queries.keySet
+    assert(oracles == queries,
+      s"oracle without query: ${oracles -- queries}; query without oracle: ${queries -- oracles}")
   }
 
   test("query selection: all when unset; empty or unknown names fail; valid names kept in order") {

@@ -211,22 +211,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(m1.map(_.getLong(1)).sum == docs.count())
   }
 
-  /** Spark jobs `body` launches, counted at their start. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    org.apache.spark.ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.ListenerDrain(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   /** One parquet file written with the raw parquet writer, so its footer
     * carries no Spark schema and inference reads the parquet types
     * (nanosecond timestamps, unannotated binary) as the confs say.
@@ -280,8 +264,8 @@ class SourcesSpec extends AnyFunSuite {
   test("readParquet: a second read of an unchanged path launches no Spark job") {
     val dir = tmp("graft-schema-hit")
     Sources.writeParquet(Tables(spark, sfDir).nation.coalesce(1), dir)
-    val (_, first) = jobsDuring(Sources.readParquet(spark, dir))
-    val (_, second) = jobsDuring(Sources.readParquet(spark, dir))
+    val (_, first) = QueryRunner.jobsDuring(spark)(Sources.readParquet(spark, dir))
+    val (_, second) = QueryRunner.jobsDuring(spark)(Sources.readParquet(spark, dir))
     assert(first >= 1, "the first read infers the schema with a job")
     assert(second == 0, s"the second read launched $second jobs")
   }
@@ -299,7 +283,7 @@ class SourcesSpec extends AnyFunSuite {
     val nanos = nanosEvents(tmp("graft-schema-nanos"))
     for (path <- Seq(s"$sfDir/lineitem.parquet", multi, store, nanos)) {
       Sources.readParquet(spark, path)
-      val (df, jobs) = jobsDuring(Sources.readParquet(spark, path))
+      val (df, jobs) = QueryRunner.jobsDuring(spark)(Sources.readParquet(spark, path))
       assert(jobs == 0, s"$path: cached read launched $jobs jobs")
       assertInferred(df, path)
     }

@@ -5,6 +5,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Loads each <name> parquet result, runs oracle_sql.json[<name>] in DuckDB
 with views over the sfDir tables, sorts columns by name + rows, compares
 cell values exactly (with a tiny float tolerance report as diagnostics).
+An oracle key with no result directory (its query threw in Verify) is
+reported MISSING and fails. Exits 1 on any failure.
 """
 import json, sys, glob, os
 import duckdb
@@ -26,6 +28,9 @@ def main(sfdir, outdir):
     names = sorted([os.path.basename(p) for p in glob.glob(f"{outdir}/*")
                     if os.path.isdir(p)])
     n_pass = n_fail = 0
+    for name in sorted(set(oracles) - set(names)):
+        print(f"{name:22s} MISSING: no result directory")
+        n_fail += 1
     for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
@@ -61,6 +66,7 @@ def main(sfdir, outdir):
             print(f"{name:22s} OK ({len(g)} rows)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    return n_fail
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(1 if main(sys.argv[1], sys.argv[2]) else 0)
